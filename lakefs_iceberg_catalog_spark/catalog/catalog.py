@@ -1327,16 +1327,36 @@ class VersionedCatalog:
             levels, aligned, partition_by=base.partition_spec or None,
             bucket_spec=base.bucket_spec or None
         )
+        self._commit_rebasing(
+            ops,
+            base,
+            lambda b: b.next(
+                b.files + files,
+                file_stats={**b.file_stats, **stats},
+                file_partitions=fparts,
+            ),
+            same_layout=True,
+        )
+
+    @staticmethod
+    def _commit_rebasing(ops, base, build, same_layout: bool) -> None:
+        """Commit ``build(base)``, rebasing a lost race instead of failing
+        it: on CommitConflictError/CommitStateError the base refreshes and
+        ``build`` re-runs on it, for up to 10 rounds. Files the caller
+        already wrote are independent of the concurrent commit, so only
+        this metadata step loops. The rebase is refused (the conflict
+        re-raised) when the concurrent commit replaced the table or
+        changed its schema, or — with ``same_layout``, for callers whose
+        written files follow the table layout — its partition or bucket
+        spec. ``build`` returning None means there is nothing to commit
+        against that base."""
+        err = None
         for _ in range(10):
+            new = build(base)
+            if new is None:
+                return
             try:
-                ops.commit(
-                    base,
-                    base.next(
-                        base.files + files,
-                        file_stats={**base.file_stats, **stats},
-                        file_partitions=fparts,
-                    ),
-                )
+                ops.commit(base, new)
                 return
             except (CommitConflictError, CommitStateError) as e:
                 fresh = ops.current()
@@ -1344,8 +1364,11 @@ class VersionedCatalog:
                     fresh is None
                     or fresh.table_uuid != base.table_uuid
                     or fresh.schema_json != base.schema_json
-                    or fresh.partition_spec != base.partition_spec
-                    or fresh.bucket_spec != base.bucket_spec
+                    or same_layout
+                    and (
+                        fresh.partition_spec != base.partition_spec
+                        or fresh.bucket_spec != base.bucket_spec
+                    )
                 ):
                     raise
                 base = fresh
@@ -1419,32 +1442,15 @@ class VersionedCatalog:
                             stats[rel] = fs
                         j += 1
                 # metadata-only commit per slice, with append's rebase-retry
-                err: Exception | None = None
-                for _ in range(10):
-                    try:
-                        ops.commit(
-                            base,
-                            base.next(
-                                base.files + out,
-                                file_stats={**base.file_stats, **stats},
-                            ),
-                        )
-                        err = None
-                        break
-                    except (CommitConflictError, CommitStateError) as e:
-                        fresh = ops.current()
-                        if (
-                            fresh is None
-                            or fresh.table_uuid != base.table_uuid
-                            or fresh.schema_json != base.schema_json
-                            or fresh.partition_spec != base.partition_spec
-                            or fresh.bucket_spec != base.bucket_spec
-                        ):
-                            raise
-                        base = fresh
-                        err = e
-                if err is not None:
-                    raise err
+                self._commit_rebasing(
+                    ops,
+                    base,
+                    lambda b: b.next(
+                        b.files + out,
+                        file_stats={**b.file_stats, **stats},
+                    ),
+                    same_layout=True,
+                )
                 base = ops.current()
         finally:
             shutil.rmtree(staging, ignore_errors=True)
@@ -1799,22 +1805,15 @@ class VersionedCatalog:
             # the predicate onto the fresh base's files and retry (same
             # schema guard as append's fast-append retry — a concurrent
             # schema change could alter the predicate's meaning)
-            for _ in range(10):
-                dp = self._scope_mor_predicate(base, predicate)
-                try:
-                    ops.commit(base, base.next(base.files, delete_preds=dp))
-                    return
-                except (CommitConflictError, CommitStateError) as e:
-                    fresh = ops.current()
-                    if (
-                        fresh is None
-                        or fresh.table_uuid != base.table_uuid
-                        or fresh.schema_json != base.schema_json
-                    ):
-                        raise
-                    base = fresh
-                    err = e
-            raise err
+            self._commit_rebasing(
+                ops,
+                base,
+                lambda b: b.next(
+                    b.files, delete_preds=self._scope_mor_predicate(b, predicate)
+                ),
+                same_layout=False,
+            )
+            return
         if eff in ("position", "position-deletes"):
             # Iceberg v2 POSITION deletes: materialize the matching rows'
             # (data file, row ordinal) pairs into a small parquet delete
@@ -1863,9 +1862,10 @@ class VersionedCatalog:
             if not new_rel:
                 return  # predicate matched nothing — no commit needed
             covered = sorted(cov_obs.get["covered"])
-            for _ in range(10):
-                pos_map = {f: list(v) for f, v in base.position_deletes.items()}
-                stale = [f for f in covered if f not in base.files]
+
+            def with_positions(b):
+                pos_map = {f: list(v) for f, v in b.position_deletes.items()}
+                stale = [f for f in covered if f not in b.files]
                 if stale:
                     # a concurrent rewrite replaced a covered file; our
                     # ordinals no longer address its rows — abort rather
@@ -1874,24 +1874,11 @@ class VersionedCatalog:
                         f"position delete lost its base files: {stale[:3]}"
                     )
                 for f in covered:
-                    pos_map.setdefault(f, [])
-                    pos_map[f] = pos_map[f] + new_rel
-                try:
-                    ops.commit(
-                        base, base.next(base.files, position_deletes=pos_map)
-                    )
-                    return
-                except (CommitConflictError, CommitStateError) as e:
-                    fresh = ops.current()
-                    if (
-                        fresh is None
-                        or fresh.table_uuid != base.table_uuid
-                        or fresh.schema_json != base.schema_json
-                    ):
-                        raise
-                    base = fresh
-                    err = e
-            raise err
+                    pos_map[f] = pos_map.get(f, []) + new_rel
+                return b.next(b.files, position_deletes=pos_map)
+
+            self._commit_rebasing(ops, base, with_positions, same_layout=False)
+            return
         if eff != "copy-on-write":
             raise UnsupportedOperationError(f"unknown delete mode {eff!r}")
         survivors = self._read_files(levels[0], base).filter(
@@ -2024,35 +2011,18 @@ class VersionedCatalog:
         del_rel, key_range = self._write_eq_delete_file(levels, keys, key_cols)
         if del_rel is None:
             return  # empty key set — nothing to delete, no commit
-        err = None
-        for _ in range(10):
-            eq_map, covered = self._eq_delete_map(
-                base, del_rel, key_cols, key_range
-            )
+        def with_eq_deletes(b):
+            # value-based deletes re-scope cleanly onto a rebased base:
+            # files that survived keep their stamp-eligibility, files
+            # rewritten concurrently get stamped fresh (the values still
+            # name the same rows), appended files get stamped too — which
+            # matches the predicate-delete rebase semantics
+            eq_map, covered = self._eq_delete_map(b, del_rel, key_cols, key_range)
             if not covered:
-                return  # every file provably key-free — no commit needed
-            try:
-                ops.commit(
-                    base, base.next(base.files, equality_deletes=eq_map)
-                )
-                return
-            except (CommitConflictError, CommitStateError) as e:
-                fresh = ops.current()
-                if (
-                    fresh is None
-                    or fresh.table_uuid != base.table_uuid
-                    or fresh.schema_json != base.schema_json
-                ):
-                    raise
-                # value-based deletes re-scope cleanly onto the fresh base:
-                # files that survived keep their stamp-eligibility, files
-                # rewritten concurrently get stamped fresh (the values
-                # still name the same rows), appended files get stamped
-                # too — which matches the predicate-delete rebase
-                # semantics this engine already uses
-                base = fresh
-                err = e
-        raise err
+                return None  # every file provably key-free — no commit
+            return b.next(b.files, equality_deletes=eq_map)
+
+        self._commit_rebasing(ops, base, with_eq_deletes, same_layout=False)
 
     def update_where(
         self,
@@ -2105,32 +2075,18 @@ class VersionedCatalog:
             # updated-row files are already written; a lost race re-scopes
             # the delete predicate onto the fresh base and retries, refusing
             # if the schema or layout changed underneath
-            for _ in range(10):
-                dp = self._scope_mor_predicate(base, predicate)
-                try:
-                    ops.commit(
-                        base,
-                        base.next(
-                            base.files + files,
-                            file_stats={**base.file_stats, **stats},
-                            delete_preds=dp,
-                            file_partitions=fparts,
-                        ),
-                    )
-                    return
-                except (CommitConflictError, CommitStateError) as e:
-                    fresh = ops.current()
-                    if (
-                        fresh is None
-                        or fresh.table_uuid != base.table_uuid
-                        or fresh.schema_json != base.schema_json
-                        or fresh.partition_spec != base.partition_spec
-                        or fresh.bucket_spec != base.bucket_spec
-                    ):
-                        raise
-                    base = fresh
-                    err = e
-            raise err
+            self._commit_rebasing(
+                ops,
+                base,
+                lambda b: b.next(
+                    b.files + files,
+                    file_stats={**b.file_stats, **stats},
+                    delete_preds=self._scope_mor_predicate(b, predicate),
+                    file_partitions=fparts,
+                ),
+                same_layout=True,
+            )
+            return
         if eff != "copy-on-write":
             raise UnsupportedOperationError(f"unknown update mode {eff!r}")
         cols = []

@@ -260,6 +260,210 @@ class DeltaTableWriter:
             f.write("\n".join(json.dumps(a, separators=(",", ":")) for a in actions))
         return self._version
 
+    def _init_table(
+        self,
+        schema_df: DataFrame,
+        partition_cols: list[str] | None,
+        generated: dict[str, str] | None,
+        identity: dict[str, dict] | None,
+        now_ms: int,
+    ) -> list[dict]:
+        """Version 0's protocol + metaData actions, derived from the first
+        add frame's DRIVER-SIDE schema (no Spark job)."""
+        self._partition_cols = list(partition_cols or [])
+        # GENERATED COLUMNS (protocol "Generated Columns",
+        # delta.generationExpression field metadata): the column's
+        # value is a deterministic SQL expression over other columns —
+        # partitioning by one is Delta's hidden-partitioning analog
+        # (e.g. p_date GENERATED ALWAYS AS (CAST(ts AS DATE))). The
+        # writer computes it for partitionValues; readers derive
+        # partition pruning from source-column predicates by
+        # evaluating the same expression (scan hidden_filter).
+        self._generated = dict(generated or {})
+        if self._generated:
+            # composes with column mapping (VERDICT r8 #9): generation
+            # expressions are computed on LOGICAL names before the
+            # physical alias, the generated fields get mapping ids +
+            # physical names like any other field, and renaming a
+            # column a generation expression references is blocked
+            # (rename_column) — the expression text would dangle
+            clash = set(self._generated) & set(schema_df.columns)
+            if clash:
+                raise ValueError(
+                    f"generated columns already in the data: {sorted(clash)}"
+                )
+            for name, expr in self._generated.items():
+                schema_df = schema_df.withColumn(name, F.expr(expr))
+        # IDENTITY COLUMNS (protocol "Identity Columns",
+        # delta.identity.* field metadata; round 15): the writer
+        # allocates monotonically increasing values from a per-column
+        # high-water mark persisted IN the schema metadata, updated
+        # via a fresh metaData action on every allocating commit.
+        # allowExplicitInsert=False is GENERATED ALWAYS (explicit
+        # values refuse); True is BY DEFAULT (explicit values accept
+        # and advance the high-water mark so allocations never
+        # collide with them).
+        self._identity = {
+            c: {
+                "start": int(sp.get("start", 1)),
+                "step": int(sp.get("step", 1)),
+                "allow": bool(sp.get("allowExplicitInsert", False)),
+            }
+            for c, sp in (identity or {}).items()
+        }
+        for c, sp in self._identity.items():
+            if sp["step"] == 0:
+                raise ValueError("identity step must be non-zero")
+            if c in self._generated:
+                raise ValueError(
+                    f"column {c!r} cannot be both generated and identity"
+                )
+            if c not in schema_df.columns:
+                # schema placeholder only; values assign per-add below
+                schema_df = schema_df.withColumn(
+                    c, F.lit(None).cast("long")
+                )
+        schema = json.loads(schema_df.schema.json())
+        for f in schema["fields"]:
+            if f["name"] in self._identity:
+                if f["type"] != "long":
+                    raise ValueError(
+                        f"identity column {f['name']!r} must be BIGINT "
+                        f"(got {f['type']})"
+                    )
+                sp = self._identity[f["name"]]
+                f.setdefault("metadata", {}).update(
+                    {
+                        "delta.identity.start": sp["start"],
+                        "delta.identity.step": sp["step"],
+                        "delta.identity.allowExplicitInsert": sp["allow"],
+                    }
+                )
+        if self._generated:
+            for f in schema["fields"]:
+                if f["name"] in self._generated:
+                    f.setdefault("metadata", {})[
+                        "delta.generationExpression"
+                    ] = self._generated[f["name"]]
+        config: dict[str, str] = {}
+        proto: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
+        if self._column_mapping:
+            # PROTOCOL.md "Column Mapping": every field gets a stable
+            # id + a physical name the DATA FILES use; logical names
+            # live only in the log, so renames never rewrite data.
+            # mode=name resolves file columns by physicalName; mode=id
+            # resolves them by the PARQUET FIELD ID matching
+            # delta.columnMapping.id (files carry both per the
+            # protocol — the mode picks the reader's contract).
+            # Partitioned + mapped composes: partitionValues keys are
+            # the PHYSICAL names per the protocol ("track partition
+            # values ... with the physical name"); partitionColumns in
+            # metaData stays logical (it names schemaString fields).
+            for i, f in enumerate(schema["fields"]):
+                f.setdefault("metadata", {}).update(
+                    {
+                        "delta.columnMapping.id": i + 1,
+                        "delta.columnMapping.physicalName": f"col-{uuid.uuid4()}",
+                    }
+                )
+            config = {
+                "delta.columnMapping.mode": (
+                    "id" if self._column_mapping == "id" else "name"
+                ),
+                "delta.columnMapping.maxColumnId": str(len(schema["fields"])),
+            }
+            proto = {
+                "minReaderVersion": 2,
+                "minWriterVersion": 5,
+            }
+        if self._generated:
+            # protocol: generated columns need writer version >= 4
+            proto["minWriterVersion"] = max(proto["minWriterVersion"], 4)
+        if self._identity:
+            # protocol: identity columns need writer version >= 6
+            proto["minWriterVersion"] = max(proto["minWriterVersion"], 6)
+        self._meta = {
+            "id": str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": json.dumps(schema, separators=(",", ":")),
+            "partitionColumns": self._partition_cols,
+            "configuration": config,
+            "createdTime": now_ms,
+        }
+        return [{"protocol": proto}, {"metaData": self._meta}]
+
+    def _staged_frame(
+        self,
+        df: DataFrame,
+        pcols: list[str],
+        constraints: list[tuple[str, str]],
+        cleanup: list[DataFrame],
+    ) -> DataFrame:
+        """One add frame as the staging write takes it: identity values
+        allocated, generated columns computed, one ``_check<k>`` column
+        per CHECK constraint (true = the row violates it; protocol: an
+        expression that is not true, NULL included, is a violation), and
+        the data columns under their PHYSICAL names. The partition
+        columns keep their logical names: they name the staged
+        directories and never enter the file (the protocol keeps them in
+        the log)."""
+        if self._identity_specs():
+            df = self._apply_identity(df, cleanup)
+        for name, expr in getattr(self, "_generated", {}).items():
+            if name not in df.columns:  # writer computes generated cols
+                df = df.withColumn(name, F.expr(expr))
+        phys = _physical_names_map(self._meta) if self._column_mapping else {}
+        # id mode: footers must carry the parquet field ids an id-mode
+        # reader resolves by — Spark writes them from StructField
+        # metadata when fieldId.write is on
+        ids = _field_ids_map(self._meta) if self._column_mapping == "id" else {}
+        if ids:
+            self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+
+        def data_col(c):
+            if c in ids:
+                return F.col(c).alias(
+                    phys.get(c, c), metadata={"parquet.field.id": ids[c]}
+                )
+            return F.col(c).alias(phys.get(c, c))
+
+        return df.select(
+            *[data_col(c) for c in df.columns if c not in pcols],
+            *pcols,
+            *[
+                (~F.coalesce(F.expr(cexpr), F.lit(False))).alias(f"_check{k}")
+                for k, (_, cexpr) in enumerate(constraints)
+            ],
+        )
+
+    def _adopt(self, src_path: str) -> str:
+        """Move one staged data file into the table dir (same-content
+        move) under a name of the version being registered."""
+        name = f"part-{self._version + 1:05d}-{uuid.uuid4()}.snappy.parquet"
+        shutil.move(src_path, os.path.join(self.table_dir, name))
+        return name
+
+    def _add_action(
+        self,
+        name: str,
+        n_rows: int,
+        pvals: dict[str, str | None],
+        data_change: bool,
+        now_ms: int,
+    ) -> dict:
+        """The add action of one data file already in the table dir."""
+        path = os.path.join(self.table_dir, name)
+        return {
+            "add": {
+                "path": name,
+                "partitionValues": pvals,
+                "size": os.path.getsize(path),
+                "modificationTime": now_ms,
+                "dataChange": data_change,
+                "stats": _file_stats_json(path, n_rows),
+            }
+        }
+
     def commit(
         self,
         add_dfs: list[DataFrame] | None = None,
@@ -271,13 +475,12 @@ class DeltaTableWriter:
         txn: tuple[str, int] | None = None,
         add_partitioned: DataFrame | None = None,
         identity: dict[str, dict] | None = None,
-        _staged_adds: list[tuple[str, int, dict]] | None = None,
-        _schema_df: DataFrame | None = None,
     ) -> int:
         """One commit: write each DataFrame as a parquet data file (`add`)
         and/or drop previously added files (`remove`). The first commit
         also stamps protocol + metaData (with ``partition_cols`` as the
-        spec's partitionColumns when given).
+        spec's partitionColumns when given). The one-version case of
+        ``commit_many``: every add is staged by the same single write job.
 
         ``add_partitioned`` adds a MULTI-TUPLE frame (partition columns
         still attached) in ONE distributed ``partitionBy`` write job —
@@ -300,17 +503,71 @@ class DeltaTableWriter:
         data file itself (the reader re-injects them from the log). Each
         add DataFrame must be single-valued in the partition columns, as a
         real partitioned writer's per-partition output files are."""
-        from .parquet_io import write_single_parquet
-
-        actions: list[dict] = []
-        now_ms = int(time.time() * 1000)
         if txn is not None and self._version >= 0:
             app, ver = txn
             seen = read_delta_log(self.table_dir).get("txns", {}).get(app)
             if seen is not None and int(ver) <= seen:
                 return self._version  # duplicate epoch delivery: no-op
+        return self._commit_versions(
+            [list(add_dfs or [])],
+            partition_cols=partition_cols,
+            generated=generated,
+            identity=identity,
+            remove=remove,
+            data_change=data_change,
+            operation=operation,
+            txn=txn,
+            add_partitioned=add_partitioned,
+        )[0]
+
+    def commit_many(
+        self, adds_per_version: list[DataFrame], operation: str | None = None
+    ) -> list[int]:
+        """N consecutive single-add commits whose data files are staged by
+        ONE distributed write job, then registered version by version —
+        identical log state to N ``commit(add_dfs=[df])`` calls at 1 Spark
+        job instead of N, for every table feature (column mapping, CHECK
+        constraints, generated and identity columns, any partition column
+        type). A failing version raises after the versions before it are
+        committed, exactly as the sequential calls would."""
+        return self._commit_versions(
+            [[d] for d in adds_per_version], operation=operation
+        )
+
+    def _commit_versions(
+        self,
+        versions: list[list[DataFrame]],
+        partition_cols: list[str] | None = None,
+        generated: dict[str, str] | None = None,
+        identity: dict[str, dict] | None = None,
+        remove: list[str] | None = None,
+        data_change: bool = True,
+        operation: str | None = None,
+        txn: tuple[str, int] | None = None,
+        add_partitioned: DataFrame | None = None,
+    ) -> list[int]:
+        """Stage every add frame of ``versions`` (one list of adds per
+        version) in ONE write job (parquet_io.staged_slices), then
+        register the versions in order, each a metadata-only log commit.
+
+        CHECK violations and partition single-valuedness come out of the
+        same job: the first violating slice per constraint is an observed
+        metric, the partition tuple of each slice is read off its staged
+        directories. A version with a violating or multi-valued add raises
+        before any of its files enter the table dir; the versions before
+        it stay committed, and the stage (later slices included) is
+        discarded. Identity allocations advance the high-water mark slice
+        by slice, so each version's metaData carries its own mark.
+        ``remove``, ``txn`` and ``add_partitioned`` belong to ``commit``'s
+        single version."""
+        from .parquet_io import staged_slices
+
+        if not versions:
+            return []
+        now_ms = int(time.time() * 1000)
+        head: list[dict] = []
         if txn is not None:
-            actions.append(
+            head.append(
                 {
                     "txn": {
                         "appId": txn[0],
@@ -320,508 +577,157 @@ class DeltaTableWriter:
                 }
             )
         if self._version < 0:
-            # _schema_df lets commit_many stage the FIRST commit's file too:
-            # protocol+metaData derive from the frame's schema, which is
-            # driver-side — no write job is needed just to learn it
-            schema_df = (
-                _schema_df
-                if _schema_df is not None
-                else (add_dfs or [None])[0]
-            )
-            if schema_df is None:
+            if not versions[0]:
                 raise ValueError("first commit must add data (schema source)")
-            self._partition_cols = list(partition_cols or [])
-            # GENERATED COLUMNS (protocol "Generated Columns",
-            # delta.generationExpression field metadata): the column's
-            # value is a deterministic SQL expression over other columns —
-            # partitioning by one is Delta's hidden-partitioning analog
-            # (e.g. p_date GENERATED ALWAYS AS (CAST(ts AS DATE))). The
-            # writer computes it for partitionValues; readers derive
-            # partition pruning from source-column predicates by
-            # evaluating the same expression (scan hidden_filter).
-            self._generated = dict(generated or {})
-            if self._generated:
-                # composes with column mapping (VERDICT r8 #9): generation
-                # expressions are computed on LOGICAL names before the
-                # physical alias, the generated fields get mapping ids +
-                # physical names like any other field, and renaming a
-                # column a generation expression references is blocked
-                # (rename_column) — the expression text would dangle
-                clash = set(self._generated) & set(schema_df.columns)
-                if clash:
-                    raise ValueError(
-                        f"generated columns already in the data: {sorted(clash)}"
-                    )
-                for name, expr in self._generated.items():
-                    schema_df = schema_df.withColumn(name, F.expr(expr))
-            # IDENTITY COLUMNS (protocol "Identity Columns",
-            # delta.identity.* field metadata; round 15): the writer
-            # allocates monotonically increasing values from a per-column
-            # high-water mark persisted IN the schema metadata, updated
-            # via a fresh metaData action on every allocating commit.
-            # allowExplicitInsert=False is GENERATED ALWAYS (explicit
-            # values refuse); True is BY DEFAULT (explicit values accept
-            # and advance the high-water mark so allocations never
-            # collide with them).
-            self._identity = {
-                c: {
-                    "start": int(sp.get("start", 1)),
-                    "step": int(sp.get("step", 1)),
-                    "allow": bool(sp.get("allowExplicitInsert", False)),
-                }
-                for c, sp in (identity or {}).items()
-            }
-            for c, sp in self._identity.items():
-                if sp["step"] == 0:
-                    raise ValueError("identity step must be non-zero")
-                if c in self._generated:
-                    raise ValueError(
-                        f"column {c!r} cannot be both generated and identity"
-                    )
-                if c not in schema_df.columns:
-                    # schema placeholder only; values assign per-add below
-                    schema_df = schema_df.withColumn(
-                        c, F.lit(None).cast("long")
-                    )
-            schema = json.loads(schema_df.schema.json())
-            for f in schema["fields"]:
-                if f["name"] in self._identity:
-                    if f["type"] != "long":
-                        raise ValueError(
-                            f"identity column {f['name']!r} must be BIGINT "
-                            f"(got {f['type']})"
-                        )
-                    sp = self._identity[f["name"]]
-                    f.setdefault("metadata", {}).update(
-                        {
-                            "delta.identity.start": sp["start"],
-                            "delta.identity.step": sp["step"],
-                            "delta.identity.allowExplicitInsert": sp["allow"],
-                        }
-                    )
-            if self._generated:
-                for f in schema["fields"]:
-                    if f["name"] in self._generated:
-                        f.setdefault("metadata", {})[
-                            "delta.generationExpression"
-                        ] = self._generated[f["name"]]
-            config: dict[str, str] = {}
-            proto: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
-            if self._column_mapping:
-                # PROTOCOL.md "Column Mapping": every field gets a stable
-                # id + a physical name the DATA FILES use; logical names
-                # live only in the log, so renames never rewrite data.
-                # mode=name resolves file columns by physicalName; mode=id
-                # resolves them by the PARQUET FIELD ID matching
-                # delta.columnMapping.id (files carry both per the
-                # protocol — the mode picks the reader's contract).
-                # Partitioned + mapped composes: partitionValues keys are
-                # the PHYSICAL names per the protocol ("track partition
-                # values ... with the physical name"); partitionColumns in
-                # metaData stays logical (it names schemaString fields).
-                for i, f in enumerate(schema["fields"]):
-                    f.setdefault("metadata", {}).update(
-                        {
-                            "delta.columnMapping.id": i + 1,
-                            "delta.columnMapping.physicalName": f"col-{uuid.uuid4()}",
-                        }
-                    )
-                config = {
-                    "delta.columnMapping.mode": (
-                        "id" if self._column_mapping == "id" else "name"
-                    ),
-                    "delta.columnMapping.maxColumnId": str(len(schema["fields"])),
-                }
-                proto = {
-                    "minReaderVersion": 2,
-                    "minWriterVersion": 5,
-                }
-            if self._generated:
-                # protocol: generated columns need writer version >= 4
-                proto["minWriterVersion"] = max(proto["minWriterVersion"], 4)
-            if self._identity:
-                # protocol: identity columns need writer version >= 6
-                proto["minWriterVersion"] = max(proto["minWriterVersion"], 6)
-            self._meta = {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema, separators=(",", ":")),
-                "partitionColumns": self._partition_cols,
-                "configuration": config,
-                "createdTime": now_ms,
-            }
-            actions.append({"protocol": proto})
-            actions.append({"metaData": self._meta})
-        pcols = getattr(self, "_partition_cols", [])
+            head += self._init_table(
+                versions[0][0], partition_cols, generated, identity, now_ms
+            )
+        pcols = list(getattr(self, "_partition_cols", []))
         phys = _physical_names_map(self._meta) if self._column_mapping else {}
-        constraints = self._check_constraints()
-        pre_schema_string = (self._meta or {}).get("schemaString")
-        id_cleanup: list[DataFrame] = []
-
-        for df in add_dfs or []:
-            if self._identity_specs():
-                df = self._apply_identity(df, id_cleanup)
-            for name, expr in getattr(self, "_generated", {}).items():
-                if name not in df.columns:  # writer computes generated cols
-                    df = df.withColumn(name, F.expr(expr))
-            # CHECK-constraint violations and the partitioned-write
-            # single-valuedness probe ride the data-file WRITE job as
-            # observed metrics instead of paying one Spark action each
-            # (§1.2 — per-action planning + AQE stage jobs dominate
-            # small-commit cost; the checked semantics are unchanged:
-            # same errors, same precedence, and a failing add's file is
-            # removed before raising so no orphan enters the table dir)
-            obs = None
-            c_items = sorted(constraints.items())
-            if c_items or pcols:
-                from pyspark.sql import Observation
-
-                metrics = []
-                for i, (_, cexpr) in enumerate(c_items):
-                    metrics.append(
-                        F.sum(
-                            F.when(
-                                ~F.coalesce(F.expr(cexpr), F.lit(False)), 1
-                            ).otherwise(0)
-                        ).alias(f"viol_{i}")
-                    )
-                metrics.append(F.count(F.lit(1)).alias("n"))
-                for i, c in enumerate(pcols):
-                    metrics += [
-                        F.min(F.col(c)).alias(f"mn_{i}"),
-                        F.max(F.col(c)).alias(f"mx_{i}"),
-                        F.count(F.col(c)).alias(f"ct_{i}"),
-                    ]
-                obs = Observation()
-                df = df.observe(obs, *metrics)
-            pvals: dict[str, str | None] = {}
-            if pcols:
-                df = df.drop(*pcols)  # spec: partition cols live in the log
-            if phys:  # data files store columns under their PHYSICAL names
-                df = df.select(
-                    *[F.col(c).alias(phys.get(c, c)) for c in df.columns]
-                )
-                if self._column_mapping == "id":
-                    # id mode: footers must carry the parquet field ids an
-                    # id-mode reader resolves by — Spark writes them from
-                    # StructField metadata when fieldId.write is on
-                    ids = _field_ids_map(self._meta)
-                    for lg, pn in phys.items():
-                        # partition columns were dropped from the file df
-                        if lg in ids and pn in df.columns:
-                            df = df.withMetadata(
-                                pn, {"parquet.field.id": ids[lg]}
-                            )
-                    self.spark.conf.set(
-                        "spark.sql.parquet.fieldId.write.enabled", "true"
-                    )
-            name = f"part-{self._version + 1:05d}-{uuid.uuid4()}.snappy.parquet"
-            path = os.path.join(self.table_dir, name)
-            n_rows = write_single_parquet(df, path)
-            if obs is not None:
-                m = obs.get
-                try:
-                    for i, (cname, cexpr) in enumerate(c_items):
-                        if m[f"viol_{i}"]:
-                            raise ValueError(
-                                f"rows violate CHECK constraint {cname!r} "
-                                f"({cexpr}) — commit refused"
-                            )
-                    if pcols:
-                        from .parquet_io import singleton_from_metrics
-
-                        vals = singleton_from_metrics(m, len(pcols))
-                        # protocol: under column mapping, partitionValues
-                        # keys are the partition columns' PHYSICAL names
-                        pvals = {
-                            phys.get(c, c): (None if v is None else str(v))
-                            for c, v in zip(pcols, vals)
-                        }
-                except ValueError:
-                    os.remove(path)
-                    raise
-            actions.append(
-                {
-                    "add": {
-                        "path": name,
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(path),
-                        "modificationTime": now_ms,
-                        "dataChange": data_change,
-                        "stats": _file_stats_json(path, n_rows),
-                    }
-                }
-            )
-        for src_path, n_rows, pvals in _staged_adds or []:
-            # commit_many staged this add's file in its ONE distributed
-            # write job; adopt it (same-content move) — no per-add Spark
-            # job. Only reachable through commit_many's guarded fast path
-            # (no identity/generated/constraints/column mapping).
-            name = f"part-{self._version + 1:05d}-{uuid.uuid4()}.snappy.parquet"
-            path = os.path.join(self.table_dir, name)
-            shutil.move(src_path, path)
-            actions.append(
-                {
-                    "add": {
-                        "path": name,
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(path),
-                        "modificationTime": now_ms,
-                        "dataChange": data_change,
-                        "stats": _file_stats_json(path, n_rows),
-                    }
-                }
-            )
-        if add_partitioned is not None:
-            from .parquet_io import write_hive_partitioned
-
-            if not pcols:
-                raise ValueError(
-                    "add_partitioned requires a partitioned table"
-                )
-            dfp = add_partitioned
-            if self._identity_specs():
-                dfp = self._apply_identity(dfp, id_cleanup)
-            for name, expr in getattr(self, "_generated", {}).items():
-                if name not in dfp.columns:
-                    dfp = dfp.withColumn(name, F.expr(expr))
-            # constraint violations ride the partitionBy write job as
-            # observed metrics (same fold as the add_dfs loop above);
-            # on violation every written file is removed before raising
-            obs_p = None
-            cp_items = sorted(constraints.items())
-            if cp_items:
-                from pyspark.sql import Observation
-
-                obs_p = Observation()
-                dfp = dfp.observe(
-                    obs_p,
-                    *[
-                        F.sum(
-                            F.when(
-                                ~F.coalesce(F.expr(cexpr), F.lit(False)), 1
-                            ).otherwise(0)
-                        ).alias(f"viol_{i}")
-                        for i, (_, cexpr) in enumerate(cp_items)
-                    ],
-                )
-            if phys:  # data columns under PHYSICAL names; pcols drive
-                # the partitionBy and never enter the files
-                dfp = dfp.select(
-                    *[
-                        F.col(c).alias(phys.get(c, c))
-                        for c in dfp.columns
-                        if c not in pcols
-                    ],
-                    *pcols,
-                )
-                if self._column_mapping == "id":
-                    # id mode: the partitionBy job's footers must carry
-                    # the parquet field ids, same as the add_dfs path
-                    ids = _field_ids_map(self._meta)
-                    for lg, pn in phys.items():
-                        if lg in ids and pn in dfp.columns:
-                            dfp = dfp.withMetadata(
-                                pn, {"parquet.field.id": ids[lg]}
-                            )
-                    self.spark.conf.set(
-                        "spark.sql.parquet.fieldId.write.enabled", "true"
-                    )
-            written = write_hive_partitioned(
-                dfp, pcols, self.table_dir,
-                prefix=f"part-{self._version + 1:05d}",
-            )
-            if obs_p is not None:
-                m = obs_p.get
-                for i, (cname, cexpr) in enumerate(cp_items):
-                    if m[f"viol_{i}"]:
-                        for name, _pv, _n in written:
-                            os.remove(os.path.join(self.table_dir, name))
-                        raise ValueError(
-                            f"rows violate CHECK constraint {cname!r} "
-                            f"({cexpr}) — commit refused"
-                        )
-            for name, pvals, n_rows in written:
-                path = os.path.join(self.table_dir, name)
-                actions.append(
-                    {
-                        "add": {
-                            "path": name,
-                            "partitionValues": {
-                                phys.get(c, c): v for c, v in pvals.items()
-                            },
-                            "size": os.path.getsize(path),
-                            "modificationTime": now_ms,
-                            "dataChange": data_change,
-                            "stats": _file_stats_json(path, n_rows),
-                        }
-                    }
-                )
-        for rel in remove or []:
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": data_change,
-                    }
-                }
-            )
-        for fr in id_cleanup:
-            fr.unpersist()
-        if self._identity_specs() and (
-            (self._meta or {}).get("schemaString") != pre_schema_string
-        ):
-            # the advanced high-water mark must ride THIS commit (stock
-            # emits a metaData update per allocating commit): refresh the
-            # first-commit metaData action in place, or append one
-            for a in actions:
-                if "metaData" in a:
-                    a["metaData"] = self._meta
-                    break
-            else:
-                actions.append({"metaData": self._meta})
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": operation
-                    or (
-                        "WRITE"
-                        if add_dfs or _staged_adds or add_partitioned is not None
-                        else "DELETE"
-                    ),
-                }
-            }
-        )
-        return self._write_commit(actions)
-
-    def commit_many(
-        self, adds_per_version: list[DataFrame], operation: str | None = None
-    ) -> list[int]:
-        """N consecutive single-add commits whose data files are staged by
-        ONE distributed write job, then registered version by version —
-        identical log state to N ``commit(add_dfs=[df])`` calls at 1 Spark
-        job instead of N. A fresh table's first commit stages too (round
-        16): its protocol+metaData derive from the frame's DRIVER-SIDE
-        schema (``_schema_df``), so no separate write job is needed.
-
-        Same staging trick as IcebergTableWriter.append_many: each slice
-        coalesces to one partition, the union carries a slice index, and
-        ``partitionBy`` on the index (plus the table's partition columns,
-        whose log-encoded values are then read off the directory names)
-        makes each task write exactly its slice's file. The fast path is
-        GUARDED: identity/generated columns, CHECK constraints, column
-        mapping, and non-int partition columns all fall back to the
-        per-version ``commit`` path with identical semantics (those
-        features need the per-add driver passes)."""
-        pcols = list(getattr(self, "_partition_cols", []) or [])
-        if self._version >= 0:
-            state = read_delta_log(self.table_dir)
-            pcols = list(state.get("partition_cols") or [])
-        simple = (
-            len(adds_per_version) >= 2
-            and not self._column_mapping
-            and not self._identity_specs()
-            and not getattr(self, "_generated", {})
-            and not (self._meta and self._check_constraints())
-        )
-        if simple and pcols and self._version >= 0:
-            schema = json.loads(state["schema_json"])
-            types = {f["name"]: f["type"] for f in schema["fields"]}
-            simple = all(types.get(c) in ("integer", "long") for c in pcols)
-        elif simple and pcols:
-            # fresh table: partition column types unknown until commit 0
-            # runs; int-only check happens against the first frame
-            t0 = dict(adds_per_version[0].dtypes)
-            simple = all(t0.get(c) in ("int", "bigint") for c in pcols)
-        if not simple:
-            return [
-                self.commit(add_dfs=[d], operation=operation)
-                for d in adds_per_version
-            ]
-        import tempfile
-
-        import pyarrow.parquet as pq
-
-        from .parquet_io import write_single_parquet  # noqa: F401 (fallback)
-
-        start = 0
-        fresh = self._version < 0
-        versions: list[int] = []
-        stage = tempfile.mkdtemp(prefix="commit-many-")
+        constraints = sorted(self._check_constraints().items())
+        cleanup: list[DataFrame] = []
+        frames: list[DataFrame] = []
+        metas = [self._meta]  # metas[v + 1]: metaData after version v's adds
         try:
-            u = None
-            for i, d in enumerate(adds_per_version[start:]):
-                # coalesce only multi-partition slices — an all-coalesced
-                # union collapses to ONE task (see append_many); raw
-                # 1-partition slices keep their own parallel task
-                s = d if d.rdd.getNumPartitions() == 1 else d.coalesce(1)
-                s = s.withColumn("_slice", F.lit(i))
-                u = s if u is None else u.unionByName(s)
-            u.write.partitionBy("_slice", *pcols).mode("overwrite").parquet(
-                stage
-            )
-            staged: list[tuple[str, int, dict]] = []
-            for i, d in enumerate(adds_per_version[start:]):
-                sdir = os.path.join(stage, f"_slice={i}")
-                pvals: dict[str, str | None] = {}
-                ok = os.path.isdir(sdir)
-                if ok:
-                    cur = sdir
-                    for c in pcols:
-                        subs = [
-                            e for e in sorted(os.listdir(cur))
-                            if e.startswith(f"{c}=")
-                        ]
-                        if len(subs) != 1:  # multi-valued slice
-                            ok = False
-                            break
-                        val = subs[0].split("=", 1)[1]
-                        pvals[c] = (
-                            None
-                            if val == "__HIVE_DEFAULT_PARTITION__"
-                            else val
+            for adds in versions:
+                frames += [
+                    self._staged_frame(d, pcols, constraints, cleanup)
+                    for d in adds
+                ]
+                metas.append(self._meta)
+            with staged_slices(
+                frames,
+                pcols,
+                checks=[f"_check{k}" for k in range(len(constraints))],
+            ) as (slices, first_bad):
+                out: list[int] = []
+                i = 0
+                for v, adds in enumerate(versions):
+                    self._meta = metas[v + 1]
+                    span = range(i, i + len(adds))
+                    i += len(adds)
+                    for s in span:
+                        for (cname, cexpr), bad in zip(constraints, first_bad):
+                            if bad == s:
+                                raise ValueError(
+                                    f"rows violate CHECK constraint {cname!r} "
+                                    f"({cexpr}) — commit refused"
+                                )
+                        if isinstance(slices[s], ValueError):
+                            raise slices[s]
+                    actions = head if v == 0 else []
+                    for s in span:
+                        st = slices[s]
+                        actions.append(
+                            self._add_action(
+                                self._adopt(st.path),
+                                st.rows,
+                                {
+                                    phys.get(c, c): None if x is None else str(x)
+                                    for c, x in zip(pcols, st.values)
+                                },
+                                data_change,
+                                now_ms,
+                            )
                         )
-                        cur = os.path.join(cur, subs[0])
-                    if ok:
-                        parts = [
-                            f for f in sorted(os.listdir(cur))
-                            if f.endswith(".parquet")
-                        ]
-                        ok = len(parts) == 1
-                if not ok:
-                    staged.append(None)  # empty or multi-valued: plain path
-                    continue
-                path = os.path.join(cur, parts[0])
-                staged.append(
-                    (path, int(pq.read_metadata(path).num_rows), pvals)
-                )
-            for i, (d, st) in enumerate(zip(adds_per_version[start:], staged)):
-                # fresh-table commit 0 stamps protocol+metaData from the
-                # frame's DRIVER-SIDE schema (_schema_df) — it stages like
-                # every other slice instead of paying its own write job
-                first = fresh and i == 0
-                if st is None:
-                    versions.append(
-                        self.commit(
-                            add_dfs=[d],
-                            partition_cols=(pcols or None) if first else None,
-                            operation=operation,
+                    if add_partitioned is not None:
+                        actions += self._partitioned_adds(
+                            add_partitioned, pcols, constraints, cleanup,
+                            data_change, now_ms,
                         )
+                    for rel in remove or []:
+                        actions.append(
+                            {
+                                "remove": {
+                                    "path": rel,
+                                    "deletionTimestamp": now_ms,
+                                    "dataChange": data_change,
+                                }
+                            }
+                        )
+                    if self._identity_specs() and (
+                        self._meta["schemaString"] != metas[v]["schemaString"]
+                    ):
+                        # the advanced high-water mark must ride THIS
+                        # commit (stock emits a metaData update per
+                        # allocating commit): refresh the first-commit
+                        # metaData action in place, or append one
+                        for a in actions:
+                            if "metaData" in a:
+                                a["metaData"] = self._meta
+                                break
+                        else:
+                            actions.append({"metaData": self._meta})
+                    actions.append(
+                        {
+                            "commitInfo": {
+                                "timestamp": now_ms,
+                                "operation": operation
+                                or (
+                                    "WRITE"
+                                    if adds or add_partitioned is not None
+                                    else "DELETE"
+                                ),
+                            }
+                        }
                     )
-                else:
-                    versions.append(
-                        self.commit(
-                            _staged_adds=[st],
-                            partition_cols=(pcols or None) if first else None,
-                            operation=operation,
-                            _schema_df=d if first else None,
-                        )
-                    )
-            return versions
+                    out.append(self._write_commit(actions))
+                return out
         finally:
-            shutil.rmtree(stage, ignore_errors=True)
+            for fr in cleanup:
+                fr.unpersist()
+
+    def _partitioned_adds(
+        self,
+        dfp: DataFrame,
+        pcols: list[str],
+        constraints: list[tuple[str, str]],
+        cleanup: list[DataFrame],
+        data_change: bool,
+        now_ms: int,
+    ) -> list[dict]:
+        """The add actions of ``commit(add_partitioned=...)``: one
+        multi-tuple frame written by ONE ``partitionBy`` job
+        (parquet_io.write_hive_partitioned), one file per tuple. CHECK
+        violations ride that job as observed metrics; on violation every
+        written file is removed before raising."""
+        from pyspark.sql import Observation
+
+        from .parquet_io import write_hive_partitioned
+
+        if not pcols:
+            raise ValueError("add_partitioned requires a partitioned table")
+        checks = [f"_check{k}" for k in range(len(constraints))]
+        dfp = self._staged_frame(dfp, pcols, constraints, cleanup)
+        obs = None
+        if checks:
+            obs = Observation()
+            dfp = dfp.observe(
+                obs, *[F.max(F.col(c)).alias(c) for c in checks]
+            ).drop(*checks)
+        written = write_hive_partitioned(
+            dfp, pcols, self.table_dir,
+            prefix=f"part-{self._version + 1:05d}",
+        )
+        for (cname, cexpr), c in zip(constraints, checks):
+            if obs.get[c]:
+                for name, _pv, _n in written:
+                    os.remove(os.path.join(self.table_dir, name))
+                raise ValueError(
+                    f"rows violate CHECK constraint {cname!r} "
+                    f"({cexpr}) — commit refused"
+                )
+        phys = _physical_names_map(self._meta) if self._column_mapping else {}
+        return [
+            self._add_action(
+                name,
+                n_rows,
+                {phys.get(c, c): v for c, v in pvals.items()},
+                data_change,
+                now_ms,
+            )
+            for name, pvals, n_rows in written
+        ]
 
     def set_table_property(self, key: str, value: str) -> int:
         """ALTER TABLE ... SET TBLPROPERTIES: one metadata-only commit
@@ -1650,10 +1556,10 @@ class DeltaTableWriter:
         zcleanup: list[DataFrame] = []
 
         # staged fast path: every range file of a cluster call comes from
-        # ONE shuffle+write job (zorder.morton_cluster_files) and joins
-        # the commit as a pre-written add — eligible unless a feature
-        # needs commit()'s per-add driver passes (physical-name renames,
-        # identity hwm bookkeeping, constraint re-checks)
+        # ONE shuffle+write job (zorder.morton_cluster_files) and registers
+        # as a pre-written add — eligible unless a feature needs commit()'s
+        # per-add passes (physical-name renames, identity hwm bookkeeping,
+        # constraint re-checks)
         staged_ok = (
             not self._column_mapping
             and not self._identity_specs()
@@ -1769,12 +1675,32 @@ class DeltaTableWriter:
                         f"ZORDER rewrite changed the row count: {n_before} -> "
                         f"{n_after} (NULL-key routing bug?) — refusing to commit"
                     )
-            return self.commit(
-                add_dfs=adds or None,
-                _staged_adds=staged_adds or None,
-                remove=live,
-                data_change=False,
-                operation="OPTIMIZE",
+            if not staged_adds:
+                return self.commit(
+                    add_dfs=adds or None,
+                    remove=live,
+                    data_change=False,
+                    operation="OPTIMIZE",
+                )
+            # the clustered range files are already written: register
+            # them as ONE metadata-only version
+            now_ms = int(time.time() * 1000)
+            return self._write_commit(
+                [
+                    self._add_action(self._adopt(p), n, pv, False, now_ms)
+                    for p, n, pv in staged_adds
+                ]
+                + [
+                    {
+                        "remove": {
+                            "path": rel,
+                            "deletionTimestamp": now_ms,
+                            "dataChange": False,
+                        }
+                    }
+                    for rel in live
+                ]
+                + [{"commitInfo": {"timestamp": now_ms, "operation": "OPTIMIZE"}}]
             )
         finally:
             for h in zcleanup:

@@ -32,6 +32,7 @@ import json
 import os
 import re
 import shutil
+import tempfile
 import time
 import uuid
 
@@ -476,35 +477,6 @@ def _norm_path_map(data: list[dict]) -> dict[str, str]:
     }
 
 
-def _string_stats_exact(md, src: str) -> bool:
-    """True iff every row group's min/max footer stats for column ``src``
-    are provably EXACT: pyarrow's exactness flags where exposed; where the
-    build predates them, the 64-byte truncation-ceiling heuristic the
-    add_files importer uses (parquet-mr truncates string bounds at 64
-    bytes — a sub-ceiling value cannot have been truncated). Used by the
-    staged-append fast path so string identity partitions can batch
-    (VERDICT r15 #6) without ever stamping a truncated partition value."""
-    for g in range(md.num_row_groups):
-        rg = md.row_group(g)
-        for ci in range(rg.num_columns):
-            c = rg.column(ci)
-            if c.path_in_schema != src:
-                continue
-            st = c.statistics
-            if st is None or not st.has_min_max:
-                return False
-            exact_min = getattr(st, "is_min_value_exact", None)
-            exact_max = getattr(st, "is_max_value_exact", None)
-            if exact_min is False or exact_max is False:
-                return False
-            if exact_min is None and any(
-                len(b.encode() if isinstance(b, str) else b) >= 64
-                for b in (st.min, st.max)
-            ):
-                return False
-    return True
-
-
 def _manifest_entry_schema(partition_fields: list[dict]) -> dict:
     """MANIFEST_ENTRY_SCHEMA with the partition struct (r102) carrying the
     spec's typed identity-partition fields (field-ids 1000+) instead of
@@ -762,15 +734,15 @@ class IcebergTableWriter:
         epoch: tuple[str, int] | None = None,
         wap_id: str | None = None,
         branch: str | None = None,
-        _staged: tuple[str, int, dict] | None = None,
     ) -> int:
-        """Commit one append snapshot of ``df``; returns the snapshot id.
-        On a partitioned table each append must be single-valued in the
-        partition columns (one data file = one partition tuple, the shape
-        per-partition writer tasks produce); the values land TYPED in the
-        manifest entry's partition struct. ``file_format`` overrides the
-        table default per append — Iceberg's format is a per-data-file
-        property, so one table may mix parquet and ORC files.
+        """Commit one append snapshot of ``df``; returns the snapshot id —
+        the one-slice case of ``append_many``. On a partitioned table each
+        append must be single-valued in the partition columns (one data
+        file = one partition tuple, the shape per-partition writer tasks
+        produce); the values land TYPED in the manifest entry's partition
+        struct. ``file_format`` overrides the table default per append —
+        Iceberg's format is a per-data-file property, so one table may mix
+        parquet and ORC files.
 
         ``epoch=(appId, id)`` is streaming exactly-once the way Iceberg's
         own Spark/Flink sinks do it: the epoch id is recorded in the
@@ -795,128 +767,157 @@ class IcebergTableWriter:
         untouched, and ``scan_iceberg_table(ref=branch)`` reads the
         branch head. ``fast_forward`` later advances main to the branch.
         Mutually exclusive with ``wap_id``; requires an existing head."""
-        # one guard around the WHOLE body: any failure — validation,
-        # data write, manifest write, or the metadata commit itself —
-        # restores every writer field to its pre-append state (incl.
-        # the epoch pending-summary markers, which previously leaked
-        # into the next unrelated commit and corrupted the
-        # exactly-once gate)
+        if epoch is not None:
+            app, eid = epoch
+            latest = max(
+                (
+                    int(s["summary"]["streaming-epoch"])
+                    for s in self._snapshots
+                    if (s.get("summary") or {}).get("streaming-app-id") == app
+                ),
+                default=None,
+            )
+            if latest is not None and int(eid) <= latest:
+                # duplicate delivery: no-op, return the CURRENT head (which
+                # may differ from the newest snapshot after a rollback)
+                return self._head_snapshot_id()
+        if branch in ("main", ""):
+            branch = None
+        if wap_id is not None and branch is not None:
+            raise ValueError("pass either wap_id or branch, not both")
+        if (wap_id is not None or branch is not None) and (
+            self._current_snapshot_id is None
+        ):
+            raise ValueError(
+                "wap_id/branch commits require an existing table head"
+            )
+        return self._append_slices(
+            [df], file_format, epoch=epoch, wap_id=wap_id, branch=branch
+        )[0]
+
+    def append_many(
+        self, dfs: list[DataFrame], file_format: str | None = None
+    ) -> list[int]:
+        """N consecutive append snapshots whose data files are staged by
+        ONE distributed write job, then committed in order as N
+        metadata-only appends — the same table state as N ``append``
+        calls (same per-snapshot data files, manifests and metadata
+        versions) at 1 Spark job instead of N, for every partition
+        transform and data file format. A failing slice (several or no
+        partition tuples) raises after the snapshots before it are
+        committed, exactly as the sequential calls would."""
+        return self._append_slices(dfs, file_format)
+
+    def _append_slices(
+        self,
+        dfs: list[DataFrame],
+        file_format: str | None,
+        epoch: tuple[str, int] | None = None,
+        wap_id: str | None = None,
+        branch: str | None = None,
+    ) -> list[int]:
+        """Stage every slice of ``dfs``, then register one append
+        snapshot per slice, in order."""
+        fmt = file_format or self._file_format
+        if fmt not in ("parquet", "orc", "avro"):
+            raise ValueError(f"unsupported data file format {fmt!r}")
+        if not dfs:
+            return []
+        if self._schema_json is None:
+            self._schema_json = _iceberg_schema(dfs[0])
+            self._schemas = [self._schema_json]
+            self._last_column_id = len(self._schema_json["fields"])
+            self._resolve_partition_fields()
+        with self._staged_data(dfs, fmt) as slices:
+            return [
+                self._register_append(st, fmt, epoch, wap_id, branch)
+                for st in slices
+            ]
+
+    @contextlib.contextmanager
+    def _staged_data(self, dfs: list[DataFrame], fmt: str):
+        """Stage the data file of every slice; yields, per slice, its
+        ``parquet_io.StagedSlice`` (partition values TRANSFORMED — e.g.
+        one days(ts) append may span a whole day of timestamps) or the
+        single-valuedness ``ValueError`` its registration raises.
+        Parquet/ORC stage in ONE ``partitionBy`` job whose directories
+        prove single-valuedness; Avro files are written through
+        ``foreachPartition`` (no SQL write, no directory layout), so each
+        Avro slice keeps the explicit bounded probe."""
+        from .parquet_io import (
+            StagedSlice,
+            distinct_singleton_row,
+            staged_slices,
+            write_single_avro,
+        )
+
+        texprs = {
+            f"_part{j}": self._transform_col(pf)
+            for j, pf in enumerate(self._partition_fields)
+        }
+        if fmt != "avro":
+            with staged_slices(
+                [d.withColumns(texprs) for d in dfs], list(texprs), fmt
+            ) as (slices, _):
+                yield slices
+            return
+        stage = tempfile.mkdtemp(prefix="stage-avro-")
+        try:
+            slices: list = []
+            for i, d in enumerate(dfs):
+                try:
+                    values = (
+                        distinct_singleton_row(d.select(*texprs.values()))
+                        if texprs
+                        else ()
+                    )
+                except ValueError as e:
+                    slices.append(e)  # later slices never register
+                    break
+                path = os.path.join(stage, f"{i}.avro")
+                slices.append(
+                    StagedSlice(path, write_single_avro(d, path), values)
+                )
+            yield slices
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    def _register_append(
+        self,
+        st,
+        fmt: str,
+        epoch: tuple[str, int] | None,
+        wap_id: str | None,
+        branch: str | None,
+    ) -> int:
+        """Commit one staged slice as an append snapshot: adopt its data
+        file, write its manifest, and publish it on main, a branch, or as
+        a WAP-staged snapshot — metadata only, no Spark job."""
+        if isinstance(st, ValueError):
+            raise st
+        # one guard around the WHOLE registration: any failure — manifest
+        # write or the metadata commit itself — restores every writer
+        # field to its pre-append state (incl. the epoch pending-summary
+        # markers, which previously leaked into the next unrelated commit
+        # and corrupted the exactly-once gate)
         with self._commit_guard():
             if epoch is not None:
-                app, eid = epoch
-                latest = max(
-                    (
-                        int(s["summary"]["streaming-epoch"])
-                        for s in self._snapshots
-                        if (s.get("summary") or {}).get("streaming-app-id") == app
-                    ),
-                    default=None,
-                )
-                if latest is not None and int(eid) <= latest:
-                    # duplicate delivery: no-op, return the CURRENT head (which
-                    # may differ from the newest snapshot after a rollback)
-                    return self._head_snapshot_id()
                 self._pending_summary = {
-                    "streaming-app-id": app,
-                    "streaming-epoch": str(int(eid)),
+                    "streaming-app-id": epoch[0],
+                    "streaming-epoch": str(int(epoch[1])),
                 }
-            if branch in ("main", ""):
-                branch = None
-            if wap_id is not None and branch is not None:
-                raise ValueError("pass either wap_id or branch, not both")
-            if (wap_id is not None or branch is not None) and (
-                self._current_snapshot_id is None
-            ):
-                raise ValueError(
-                    "wap_id/branch commits require an existing table head"
-                )
-            # NOTE: the branch-manifest swap is deferred until AFTER format
-            # validation, the single-valued-partition check and the data +
-            # manifest writes (ADVICE r12): a failure in any of those used to
-            # strand self._manifests on the branch's set, silently leaking
-            # branch rows into every later main commit. The swap now lives in
-            # the branch arm below, with restore-on-failure around the commit.
-            fmt = file_format or self._file_format
-            if fmt not in ("parquet", "orc", "avro"):
-                raise ValueError(f"unsupported data file format {fmt!r}")
-            if self._schema_json is None:
-                self._schema_json = _iceberg_schema(df)
-                self._schemas = [self._schema_json]
-                self._last_column_id = len(self._schema_json["fields"])
-                self._resolve_partition_fields()
             self._version += 1
             self._sequence += 1
             snapshot_id = int(uuid.uuid4().int % (1 << 62))
-
-            # -- data file (single parquet per append keeps the fixture
-            #    deterministic; a real writer fans out per task). Written
-            #    executor-side via coalesce(1) — no driver materialization ----
-            from .parquet_io import write_single_parquet
-
-            pvals: dict = {}
-            part_obs = None
-            if self._partition_fields and _staged is None:
-                # single-valuedness is checked on the TRANSFORMED values —
-                # e.g. one days(ts) append may span a whole day of timestamps
-                texprs = [
-                    self._transform_col(pf).alias(pf["name"])
-                    for pf in self._partition_fields
-                ]
-                if fmt in ("parquet", "orc"):
-                    # the probe rides the data-file WRITE job as observed
-                    # metrics (§1.2 — one Spark action instead of two);
-                    # the avro writer runs through foreachPartition (no
-                    # SQL execution, metrics would never fire), so it
-                    # keeps the explicit bounded probe
-                    from .parquet_io import singleton_observation
-
-                    df, part_obs = singleton_observation(df, texprs)
-                else:
-                    from .parquet_io import distinct_singleton_row
-
-                    vals = distinct_singleton_row(df.select(*texprs))
-                    pvals = {
-                        pf["name"]: v
-                        for pf, v in zip(self._partition_fields, vals)
-                    }
-
+            pvals = {
+                pf["name"]: v for pf, v in zip(self._partition_fields, st.values)
+            }
+            n_rows = st.rows
             data_path = os.path.join(
                 self.data_dir,
                 f"00000-{self._version}-{self._uuid}-0-00001.{fmt}",
             )
-            if _staged is not None:
-                # append_many staged this slice's file in its ONE
-                # distributed write job; adopt it (same-content move) with
-                # the pre-derived partition values — no per-slice Spark job
-                staged_path, n_rows, pvals = _staged
-                shutil.move(staged_path, data_path)
-            elif fmt == "orc":
-                from .parquet_io import write_single_orc
-
-                n_rows = write_single_orc(df, data_path)
-            elif fmt == "avro":
-                from .parquet_io import write_single_avro
-
-                n_rows = write_single_avro(df, data_path)
-            else:
-                n_rows = write_single_parquet(df, data_path)
-            if part_obs is not None:
-                from .parquet_io import singleton_from_metrics
-
-                try:
-                    vals = singleton_from_metrics(
-                        part_obs.get, len(self._partition_fields)
-                    )
-                except ValueError:
-                    # same pre-write-probe contract: a multi-valued or
-                    # empty append leaves no data file behind (the commit
-                    # guard restores the writer state)
-                    os.remove(data_path)
-                    raise
-                pvals = {
-                    pf["name"]: v
-                    for pf, v in zip(self._partition_fields, vals)
-                }
+            shutil.move(st.path, data_path)
 
             # -- manifest: the new file as ADDED; sequence numbers are LEFT
             #    NULL to exercise the spec's inheritance rule (readers take the
@@ -1054,177 +1055,6 @@ class IcebergTableWriter:
             self._staged_manifests[sid] = [self._manifests[-1]]
             self._manifests = pre_manifests
             return sid
-
-    def append_many(
-        self, dfs: list[DataFrame], file_format: str | None = None
-    ) -> list[int]:
-        """N consecutive append snapshots whose data files are staged by
-        ONE distributed write job, then committed in order as N
-        metadata-only appends — byte-equivalent table state to N
-        ``append`` calls (same per-snapshot data files, manifests and
-        metadata versions), at 1 Spark job instead of N.
-
-        How the one job yields one file per slice: each slice occupies
-        exactly one partition of the union (already-1-partition slices
-        stay raw — their tasks run in parallel; wider slices coalesce to
-        one partition, and an ALL-coalesced union is collapsed by the
-        optimizer into a single task, so the coalesce is applied only
-        where needed); ``partitionBy`` on the slice index then makes each
-        task write exactly its slice's file.
-        Partition single-valuedness is checked from each staged file's
-        FOOTER (min == max, no nulls — zero data IO); transforms other
-        than identity over int/long/string, non-parquet formats, and
-        empty slices fall back to the per-slice ``append`` path with
-        identical semantics."""
-        fmt = file_format or self._file_format
-        if self._schema_json is None and dfs:
-            # resolve schema + partition fields BEFORE deciding on the
-            # footer-pvals fast path (append does the same init later and
-            # skips it when already set)
-            self._schema_json = _iceberg_schema(dfs[0])
-            self._schemas = [self._schema_json]
-            self._last_column_id = len(self._schema_json["fields"])
-            self._resolve_partition_fields()
-        # footer stats are exact for int/long; string stats are usable
-        # when the footer PROVES exactness (pyarrow's exactness flags
-        # where exposed, else the 64-byte truncation-ceiling check the
-        # add_files importer uses) — checked per slice below, falling
-        # back per slice otherwise (VERDICT r15 #6). Round 16: the
-        # MONOTONE temporal transforms (day/month/year) over exact DATE
-        # stats qualify too — the slice is single-tupled iff the
-        # transformed min/max endpoints agree.
-        use_footer_pvals = all(
-            (
-                pf["kind"] == "identity"
-                and pf["src_type"] in ("int", "long", "string")
-            )
-            or (
-                pf["kind"] in ("day", "month", "year", "hour")
-                and pf["src_type"] in ("date", "timestamp")
-            )
-            for pf in self._partition_fields
-        )
-        if fmt != "parquet" or len(dfs) < 2 or not use_footer_pvals:
-            return [self.append(d, file_format=file_format) for d in dfs]
-        import tempfile
-
-        import pyarrow.parquet as pq
-
-        from .parquet_io import parquet_column_bounds
-
-        # staged OUTSIDE the table dir so directory-walking readers
-        # (orphan sweep, all_files) never see in-flight slice files
-        stage = tempfile.mkdtemp(prefix="append-many-")
-        try:
-            u = None
-            for i, d in enumerate(dfs):
-                # coalesce only multi-partition slices: when EVERY union
-                # child is a coalesce(1), Catalyst collapses the whole
-                # union to ONE task (measured — the staged write then
-                # serializes every slice's scan+encode); an already-1-
-                # partition slice kept raw stays its own parallel task,
-                # with scan row order intact either way
-                s = d if d.rdd.getNumPartitions() == 1 else d.coalesce(1)
-                s = s.withColumn("_slice", F.lit(i))
-                u = s if u is None else u.unionByName(s)
-            u.write.partitionBy("_slice").mode("overwrite").parquet(stage)
-            snaps: list[int] = []
-            for i, d in enumerate(dfs):
-                sdir = os.path.join(stage, f"_slice={i}")
-                parts = (
-                    [f for f in sorted(os.listdir(sdir)) if f.endswith(".parquet")]
-                    if os.path.isdir(sdir)
-                    else []
-                )
-                if len(parts) != 1:  # empty slice wrote no file: plain path
-                    snaps.append(self.append(d, file_format=file_format))
-                    continue
-                path = os.path.join(sdir, parts[0])
-                md = pq.read_metadata(path)
-                n_rows = int(md.num_rows)
-                pvals: dict | None = {}
-                if self._partition_fields:
-                    bounds = parquet_column_bounds(path)
-                    # fail CLOSED when any row group lacks null_count for
-                    # a column: a missing stat is unknown nulls, not zero
-                    # (ADVICE r15 #2) — those columns drop to the per-slice
-                    # fallback below instead of being stamped 0-null
-                    nulls: dict = {}
-                    exact: dict = {}
-                    for g in range(md.num_row_groups):
-                        rg = md.row_group(g)
-                        for ci in range(rg.num_columns):
-                            c = rg.column(ci)
-                            st = c.statistics
-                            name = c.path_in_schema
-                            if st is not None and st.has_null_count:
-                                nulls[name] = nulls.get(name, 0) + st.null_count
-                                exact.setdefault(name, True)
-                            else:
-                                exact[name] = False
-                    for pf in self._partition_fields:
-                        src = pf["source_name"]
-                        if not exact.get(src, False):
-                            pvals = None  # stats absent: not provable
-                            break
-                        n_null = nulls.get(src, 0)
-                        if n_null == n_rows:
-                            pvals[pf["name"]] = None
-                            continue
-                        b = bounds.get(src)
-                        if b is None or n_null > 0:
-                            pvals = None  # not provably single-valued
-                            break
-                        lo, hi = b
-                        if pf["kind"] in ("day", "month", "year", "hour"):
-                            # monotone temporal transform over exact
-                            # date/timestamp stats: every value between
-                            # min and max maps between the transformed
-                            # endpoints, so the slice is single-tupled
-                            # iff they agree (apply_iceberg_transform
-                            # normalizes tz-aware stats to UTC — the same
-                            # instant convention the write side uses)
-                            tlo = apply_iceberg_transform(
-                                pf["kind"], lo, pf["src_type"]
-                            )
-                            thi = apply_iceberg_transform(
-                                pf["kind"], hi, pf["src_type"]
-                            )
-                            if tlo != thi:
-                                pvals = None
-                                break
-                            pvals[pf["name"]] = tlo
-                            continue
-                        if lo != hi:
-                            pvals = None  # not provably single-valued
-                            break
-                        if pf["src_type"] == "string":
-                            # min == max is only meaningful when the stats
-                            # are EXACT — truncated string stats can agree
-                            # while the real values differ past byte 64
-                            if not _string_stats_exact(md, src):
-                                pvals = None
-                                break
-                            if isinstance(lo, bytes):
-                                lo = lo.decode()
-                        pvals[pf["name"]] = lo
-                if pvals is None:
-                    snaps.append(self.append(d, file_format=file_format))
-                    continue
-                # pass file_format through: append() re-resolves fmt from
-                # the table default otherwise, and a parquet-staged file
-                # registered as the table's orc/avro default would corrupt
-                # the manifest (ADVICE r15 #1)
-                snaps.append(
-                    self.append(
-                        d,
-                        file_format=file_format,
-                        _staged=(path, n_rows, pvals),
-                    )
-                )
-            return snaps
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
 
     def _head_snapshot_id(self) -> int:
         """The current head snapshot id — what a no-op DML returns (no new
@@ -4193,6 +4023,9 @@ class IcebergTableWriter:
         if name not in self._refs:
             raise ValueError(f"unknown ref {name!r}")
         del self._refs[name]
+        # a re-created branch of the same name forks from main afresh,
+        # never from the dropped branch's manifests
+        self._branch_manifests.pop(name, None)
         self._version += 1
         self._write_metadata(int(time.time() * 1000))
 

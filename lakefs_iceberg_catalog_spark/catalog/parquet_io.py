@@ -1,24 +1,40 @@
-"""Single-file parquet materialization for fixture/metadata writers.
+"""Data-file materialization for the table-format writers.
 
-The Iceberg/Delta interop writers commit one deterministic parquet file per
-append (real writers fan out per task; the fixtures pin one file so layouts
-are reproducible). Writing that file must NOT funnel rows through the
-driver: converting the whole DataFrame to a driver-side pandas frame
-materializes every row in driver memory — at any real table size that is
-the funnel anti-pattern the repo's ratchet test freezes out. Instead the distributed writer runs with a single
-task (`coalesce(1)`) so rows stream executor-side straight to parquet, and
-the part file is renamed into place; the row count comes from the parquet
-FOOTER (metadata-only read), not a data pass.
+``staged_slices`` is the ONE data-file write path of the Delta and Iceberg
+writers (and the streaming spool): every add frame of a call — one for
+``commit``/``append``, N for ``commit_many``/``append_many`` — is written
+by ONE distributed job, ``partitionBy("_slice", <partition values>)``, so
+each slice lands as exactly one file whose partition values are read off
+the directory names. Those directories are also the one partition
+single-valuedness proof: a slice is single-valued iff it wrote exactly one
+directory per partition level — exact for every type and transform, NaN
+included (all NaN rows land in one ``x=NaN`` directory), at no cost beyond
+the write the commit already pays for. Rows stream executor-side straight
+to the files; nothing funnels through the driver, and row counts come from
+the file footers (metadata-only reads).
+
+Known limit: a partition value whose escaped directory name exceeds the
+filesystem's 255-byte name limit fails the staging write; the stage is
+discarded and no table state changes.
+
+Avro data files are written through ``foreachPartition`` (no SQL write, so
+no directory layout): they keep the explicit ``distinct_singleton_row``
+probe.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import shutil
 import tempfile
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
+
+
+_SINGLE_VALUED = "expected exactly one distinct partition-value row, got {}"
 
 
 def distinct_singleton_row(df: DataFrame) -> tuple:
@@ -29,64 +45,25 @@ def distinct_singleton_row(df: DataFrame) -> tuple:
     rows = df.distinct().limit(2).collect()
     if len(rows) != 1:
         raise ValueError(
-            f"expected exactly one distinct partition-value row, got "
-            f"{'none' if not rows else 'several'}"
+            _SINGLE_VALUED.format("none" if not rows else "several")
         )
     return tuple(rows[0])
 
 
-def singleton_observation(df: DataFrame, exprs: list):
-    """Attach an Observation computing the single-distinct-row check of
-    ``distinct_singleton_row`` as metrics that ride the NEXT action on
-    ``df`` (the data-file write) instead of paying their own Spark job:
-    per partition expression, min/max/non-null-count — a column is
-    single-valued iff it is all-null or all-one-non-null-value, and a row
-    of single-valued columns is the single distinct row. Returns
-    ``(df_with_observe, observation)``; decode with
-    ``singleton_from_metrics`` after the action ran."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
+def footer_rows(path: str, fmt: str = "parquet") -> int:
+    """A parquet/ORC file's row count, from its footer (no data pass)."""
+    if fmt == "orc":
+        import pyarrow.orc as po
 
-    obs = Observation()
-    metrics = [F.count(F.lit(1)).alias("n")]
-    for i, e in enumerate(exprs):
-        metrics += [
-            F.min(e).alias(f"mn_{i}"),
-            F.max(e).alias(f"mx_{i}"),
-            F.count(e).alias(f"ct_{i}"),
-        ]
-    return df.observe(obs, *metrics), obs
+        return int(po.ORCFile(path).nrows)
+    import pyarrow.parquet as pq
 
-
-def singleton_from_metrics(m: dict, n_cols: int) -> tuple:
-    """Decode ``singleton_observation`` metrics into the single distinct
-    partition-value row, raising exactly like ``distinct_singleton_row``
-    when the frame was empty or multi-valued."""
-    n = m["n"]
-    if n == 0:
-        raise ValueError(
-            "expected exactly one distinct partition-value row, got none"
-        )
-    vals = []
-    for i in range(n_cols):
-        ct, mn, mx = m[f"ct_{i}"], m[f"mn_{i}"], m[f"mx_{i}"]
-        if ct == 0:
-            vals.append(None)  # all-null column: the one distinct value
-        elif ct == n and mn == mx:
-            vals.append(mn)
-        else:  # mixed nulls/values or min!=max: several distinct rows
-            raise ValueError(
-                "expected exactly one distinct partition-value row, "
-                "got several"
-            )
-    return tuple(vals)
+    return int(pq.read_metadata(path).num_rows)
 
 
 def write_single_parquet(df: DataFrame, dest_path: str) -> int:
     """Write ``df`` as exactly one parquet file at ``dest_path``; returns
     the row count (read from the footer, no data pass)."""
-    import pyarrow.parquet as pq
-
     tmp = tempfile.mkdtemp(
         prefix="single-pq-", dir=os.path.dirname(dest_path) or None
     )
@@ -96,7 +73,7 @@ def write_single_parquet(df: DataFrame, dest_path: str) -> int:
         parts = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
         assert len(parts) == 1, f"coalesce(1) produced {len(parts)} part files"
         shutil.move(parts[0], dest_path)
-        return int(pq.read_metadata(dest_path).num_rows)
+        return footer_rows(dest_path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -105,8 +82,6 @@ def write_single_orc(df: DataFrame, dest_path: str) -> int:
     """ORC twin of write_single_parquet (Iceberg's spec allows parquet,
     ORC, and Avro data files): one executor-side task streams rows to a
     single ORC file; the row count comes from the ORC footer."""
-    import pyarrow.orc as po
-
     tmp = tempfile.mkdtemp(
         prefix="single-orc-", dir=os.path.dirname(dest_path) or None
     )
@@ -116,9 +91,168 @@ def write_single_orc(df: DataFrame, dest_path: str) -> int:
         parts = sorted(glob.glob(os.path.join(out_dir, "part-*.orc")))
         assert len(parts) == 1, f"coalesce(1) produced {len(parts)} part files"
         shutil.move(parts[0], dest_path)
-        return int(po.ORCFile(dest_path).nrows)
+        return footer_rows(dest_path, "orc")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+# Spark renders an empty string as the NULL directory and timestamps in
+# the session time zone; partition values are staged under an encoding
+# whose directory text decodes back to the exact typed value.
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_UNION_PARTITIONING = "spark.sql.unionOutputPartitioning"
+
+
+def _dir_encoded(c, dt):
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StringType):
+        return F.concat(F.lit("s"), c)  # keeps "" apart from NULL
+    if isinstance(dt, T.TimestampType):
+        return F.unix_micros(c)
+    if isinstance(dt, T.DateType):
+        return F.unix_date(c)
+    if isinstance(dt, T.FloatType):
+        return c.cast("double")  # the float's exact value, as text
+    if isinstance(
+        dt,
+        (T.IntegralType, T.DoubleType, T.BooleanType, T.DecimalType,
+         T.TimestampNTZType),
+    ):
+        return c
+    raise ValueError(f"unsupported partition column type {dt.simpleString()}")
+
+
+def _dir_decoded(text: str, dt):
+    """The typed value of one ``name=text`` partition directory — the
+    same Python value a collect of the column returns."""
+    import datetime
+    import decimal
+    from urllib.parse import unquote
+
+    from pyspark.sql import types as T
+
+    if text == _DEFAULT_PARTITION:
+        return None
+    v = unquote(text)
+    if isinstance(dt, T.StringType):
+        return v[1:]
+    if isinstance(dt, (T.TimestampType, T.DateType)):
+        return dt.fromInternal(int(v))
+    if isinstance(dt, T.TimestampNTZType):
+        return datetime.datetime.fromisoformat(v)
+    if isinstance(dt, T.BooleanType):
+        return v == "true"
+    if isinstance(dt, T.IntegralType):
+        return int(v)
+    if isinstance(dt, T.DecimalType):
+        return decimal.Decimal(v)
+    return float(v)  # double/float: Java's round-trip text, NaN included
+
+
+class StagedSlice(NamedTuple):
+    path: str  # the slice's one data file, inside the stage directory
+    rows: int  # footer row count
+    values: tuple  # typed partition values, in ``parts`` order
+
+
+@contextlib.contextmanager
+def staged_slices(
+    frames: list[DataFrame],
+    parts: list[str] = (),
+    fmt: str = "parquet",
+    checks: list[str] = (),
+):
+    """Write every frame of ``frames`` in ONE job; yields ``(slices,
+    first_bad)`` and removes whatever the caller did not move out.
+
+    ``parts`` name the partition columns every frame carries; they name
+    the directories and never enter the files. ``slices[i]`` is the
+    ``StagedSlice`` of frame i, or the ``ValueError`` its registration
+    must raise: a frame writing several partition tuples ("got several")
+    or, on a partitioned write, no rows at all ("got none"). ``checks``
+    name boolean columns (true = the row violates a table invariant),
+    dropped before the write; ``first_bad[k]`` is the first slice with a
+    violating row for check k, or None — an observed metric of the same
+    job.
+
+    Each slice is coalesced to one task. Without the union's output
+    partitioning (``spark.sql.unionOutputPartitioning``) every slice keeps
+    its own parallel task; with it, Spark zips the single-partition slices
+    into ONE task. The setting only moves tasks, never the file set, and
+    is restored after the write."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    if not frames:
+        yield [], []
+        return
+    stage = tempfile.mkdtemp(prefix="stage-slices-")
+    try:
+        spark = frames[0].sparkSession
+        types = [frames[0].schema[p].dataType for p in parts]
+        u = None
+        for i, d in enumerate(frames):
+            s = d.coalesce(1).withColumns(
+                {
+                    "_slice": F.lit(i),
+                    **{
+                        p: _dir_encoded(F.col(p), t)
+                        for p, t in zip(parts, types)
+                    },
+                }
+            )
+            u = s if u is None else u.unionByName(s)
+        obs = None
+        if checks:
+            obs = Observation()
+            u = u.observe(
+                obs,
+                *[
+                    F.min(F.when(F.col(c), F.col("_slice"))).alias(f"c{k}")
+                    for k, c in enumerate(checks)
+                ],
+            )
+        writer = (u.drop(*checks) if checks else u).write.format(fmt)
+        out = os.path.join(stage, "out")
+        prev = spark.conf.get(_UNION_PARTITIONING)
+        spark.conf.set(_UNION_PARTITIONING, "false")
+        try:
+            writer.partitionBy("_slice", *parts).mode("overwrite").save(out)
+        finally:
+            spark.conf.set(_UNION_PARTITIONING, prev)
+        first_bad = [obs.get[f"c{k}"] for k in range(len(checks))] if obs else []
+        slices: list = []
+        for i, d in enumerate(frames):
+            cur = os.path.join(out, f"_slice={i}")
+            if not os.path.isdir(cur):
+                if parts:
+                    slices.append(ValueError(_SINGLE_VALUED.format("none")))
+                    continue
+                # partitionBy writes nothing for a slice without rows
+                path = os.path.join(stage, f"empty-{i}.{fmt}")
+                write = write_single_orc if fmt == "orc" else write_single_parquet
+                rows = write(d.drop(*checks) if checks else d, path)
+                slices.append(StagedSlice(path, rows, ()))
+                continue
+            values = []
+            for t in types:
+                subs = sorted(e for e in os.listdir(cur) if "=" in e)
+                if len(subs) != 1:
+                    break
+                values.append(_dir_decoded(subs[0].split("=", 1)[1], t))
+                cur = os.path.join(cur, subs[0])
+            if len(values) != len(types):
+                slices.append(ValueError(_SINGLE_VALUED.format("several")))
+                continue
+            files = [f for f in os.listdir(cur) if f.endswith(f".{fmt}")]
+            assert len(files) == 1, f"slice {i} produced {len(files)} files"
+            path = os.path.join(cur, files[0])
+            slices.append(StagedSlice(path, footer_rows(path, fmt), tuple(values)))
+        yield slices, first_bad
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def avro_schema_of(schema) -> dict:

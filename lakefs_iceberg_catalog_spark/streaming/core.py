@@ -94,50 +94,23 @@ def run_events_stream(
 
 def spool_frames(frames: list[DataFrame], spool: str, names: list[str]) -> None:
     """Write each frame as exactly one parquet file ``spool/<name>`` with
-    ONE distributed staging job for all of them (the epoch-replay fixtures
-    previously paid one coalesce(1) write JOB per epoch): slices coalesce
-    to one partition each, union with a slice index, ``partitionBy`` on
-    the index → each task writes its slice's single file, in parallel.
+    ONE distributed staging job for all of them (catalog/parquet_io
+    ``staged_slices``, the table writers' staging path; an empty frame
+    still gets its schema-only file, so the spool carries every epoch).
 
     File mtimes are then stamped STRICTLY INCREASING in list order —
     the file stream source orders same-batch files by modification time,
     and the one-job staging would otherwise leave all epochs with the
-    same timestamp (epoch order must never depend on a tie-break).
-    An empty frame (partitionBy writes no file for it) falls back to a
-    single-file write so the spool always carries every epoch."""
-    import os
-    import tempfile
+    same timestamp (epoch order must never depend on a tie-break)."""
     import time as _time
 
-    from ..catalog.parquet_io import write_single_parquet
+    from ..catalog.parquet_io import staged_slices
 
-    stage = tempfile.mkdtemp(prefix="spool-stage-")
-    try:
-        u = None
-        for i, d in enumerate(frames):
-            # coalesce only multi-partition frames — an all-coalesced union
-            # collapses to ONE task (see append_many); raw 1-partition
-            # frames keep their own parallel task
-            s = d if d.rdd.getNumPartitions() == 1 else d.coalesce(1)
-            s = s.withColumn("_slice", F.lit(i))
-            u = s if u is None else u.unionByName(s)
-        u.write.partitionBy("_slice").mode("overwrite").parquet(stage)
+    with staged_slices(frames) as (slices, _):
         base = _time.time()
-        for i, name in enumerate(names):
-            sdir = os.path.join(stage, f"_slice={i}")
-            parts = (
-                [f for f in sorted(os.listdir(sdir)) if f.endswith(".parquet")]
-                if os.path.isdir(sdir)
-                else []
-            )
+        for i, (st, name) in enumerate(zip(slices, names)):
             dest = os.path.join(spool, name)
-            if len(parts) == 1:
-                # shutil.move, not os.replace: survives stage and spool
-                # landing on different filesystems (EXDEV), like the
-                # sibling staged-write paths
-                shutil.move(os.path.join(sdir, parts[0]), dest)
-            else:  # empty epoch
-                write_single_parquet(frames[i], dest)
+            # shutil.move, not os.replace: survives stage and spool
+            # landing on different filesystems (EXDEV)
+            shutil.move(st.path, dest)
             os.utime(dest, (base + i, base + i))
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)

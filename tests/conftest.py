@@ -53,6 +53,20 @@ def duck():
     con.close()
 
 
+def jobs_of(spark, fn):
+    """(fn's result, number of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("idle", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_driver_canonicalizable(schema, name: str = "") -> None:
     """Registration-time output lint: the driver's order-insensitive value
     hash sorts result cells with pandas, which cannot factorize container

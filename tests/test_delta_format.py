@@ -17,7 +17,7 @@ from lakefs_iceberg_catalog_spark.catalog.delta_format import (
     scan_delta_table,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_of
 
 
 def _nation(spark):
@@ -2210,12 +2210,14 @@ def test_identity_columns_edges(spark, tmp_path):
         )
 
 
-def test_commit_many_matches_sequential_commits(spark, tmp_path):
+def test_commit_many_matches_sequential_commits(spark, tmp_path, monkeypatch):
     """commit_many = N single-add commits, 1 staged write job (round 15
     optimization): pins log-level equivalence against a sequentially
     committed twin on the unpartitioned and int-partitioned layouts —
     same version count, same per-version add counts and partitionValues,
-    same rows, same time travel per version."""
+    same rows, same time travel per version — and on every table feature:
+    column mapping (id and name), generated and identity columns,
+    string/date/bool partitions, and a CHECK violation mid-batch."""
     import pyspark.sql.functions as F
 
     from lakefs_iceberg_catalog_spark.catalog.delta_format import (
@@ -2255,6 +2257,122 @@ def test_commit_many_matches_sequential_commits(spark, tmp_path):
         map(tuple, slices[0].unionByName(slices[1]).unionByName(slices[2])
             .unionByName(slices[3]).collect())
     )
+
+    def twins(tag, first_commit_kw=None, writer_kw=None):
+        """(batch writer dir, sequential writer dir, batch call's job
+        count): version 0 commits slices[0] with ``first_commit_kw`` on
+        both, then slices[1:] go through ONE commit_many vs N commits."""
+        dirs = []
+        for mode in ("many", "seq"):
+            d = str(tmp_path / f"{tag}-{mode}")
+            w = DeltaTableWriter(spark, d, **(writer_kw or {}))
+            w.commit(add_dfs=[slices[0]], **(first_commit_kw or {}))
+            if mode == "many":
+                vs, jobs = jobs_of(spark, lambda: w.commit_many(slices[1:]))
+                assert vs == [1, 2, 3, 4]
+            else:
+                for s in slices[1:]:
+                    w.commit(add_dfs=[s])
+            dirs.append(d)
+        for v in range(5):
+            assert sorted(
+                map(tuple, scan_delta_table(spark, dirs[0], version=v).collect())
+            ) == sorted(
+                map(tuple, scan_delta_table(spark, dirs[1], version=v).collect())
+            )
+        return dirs[0], dirs[1], jobs
+
+    def version_actions(d, v):
+        with open(os.path.join(d, "_delta_log", f"{v:020d}.json")) as f:
+            return [json.loads(line) for line in f]
+
+    # column mapping, both modes: ONE write job for the whole batch
+    for mode in ("id", "name"):
+        dm, ds, jobs = twins(f"cm-{mode}", writer_kw={"column_mapping": mode})
+        assert jobs == 1, jobs
+        assert read_delta_log(dm)["metadata"]["configuration"][
+            "delta.columnMapping.mode"
+        ] == mode
+
+    # generated partition column
+    dm, ds, _ = twins(
+        "gen",
+        {"generated": {"rk2": "n_regionkey * 2"}, "partition_cols": ["rk2"]},
+    )
+    assert sorted(
+        a["partitionValues"]["rk2"] for a in read_delta_log(dm)["files"].values()
+    ) == ["0", "2", "4", "6", "8"]
+
+    # identity column: every version's metaData carries its own
+    # high-water mark, identical to the sequential twin's
+    dm, ds, _ = twins("ident", {"identity": {"rid": {}}})
+
+    def hwm(d, v):
+        meta = [a["metaData"] for a in version_actions(d, v) if "metaData" in a]
+        (f,) = [
+            f for f in json.loads(meta[0]["schemaString"])["fields"]
+            if f["name"] == "rid"
+        ]
+        return f["metadata"]["delta.identity.highWaterMark"]
+
+    marks = [hwm(dm, v) for v in range(5)]
+    assert marks == [hwm(ds, v) for v in range(5)]
+    assert marks == sorted(marks) and len(set(marks)) == 5
+
+    # string, date and bool partitions: partitionValues keep the typed
+    # value's str() bytes (Spark's directory names say "true"; they are
+    # decoded back to typed values first)
+    typed = [
+        s.withColumn("region", F.concat(F.lit("R"), F.col("n_regionkey")))
+        .withColumn("day", F.date_add(F.lit("1995-01-01").cast("date"),
+                                      F.col("n_regionkey")))
+        .withColumn("even", F.col("n_regionkey") % 2 == 0)
+        for s in slices
+    ]
+    d_t = str(tmp_path / "typed")
+    wt = DeltaTableWriter(spark, d_t)
+    wt.commit(add_dfs=[typed[0]], partition_cols=["region", "day", "even"])
+    wt.commit_many(typed[1:])
+    pv = sorted(
+        (a["partitionValues"] for a in read_delta_log(d_t)["files"].values()),
+        key=lambda p: p["region"],
+    )
+    assert pv == [
+        {"region": f"R{rk}", "day": f"1995-01-0{rk + 1}", "even": str(rk % 2 == 0)}
+        for rk in range(5)
+    ]
+    assert sorted(map(tuple, scan_delta_table(spark, d_t)
+                      .select(*typed[0].columns).collect())) == sorted(
+        map(tuple, n.withColumn("region", F.concat(F.lit("R"), F.col("n_regionkey")))
+            .withColumn("day", F.date_add(F.lit("1995-01-01").cast("date"),
+                                          F.col("n_regionkey")))
+            .withColumn("even", F.col("n_regionkey") % 2 == 0).collect())
+    )
+
+    # a CHECK constraint violated in slice 2: the versions of slices 0-1
+    # stay committed (as the sequential commits would leave them), the
+    # call raises, and neither the table dir nor the staging area keeps a
+    # file of the refused slices
+    import tempfile
+
+    stage_root = tmp_path / "stage"
+    stage_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(stage_root))
+    d_c = str(tmp_path / "check")
+    wc = DeltaTableWriter(spark, d_c)
+    wc.commit(add_dfs=[slices[0]])
+    wc.add_check_constraint("not_three", "n_regionkey <> 3")  # version 1
+    with pytest.raises(ValueError, match="CHECK constraint 'not_three'"):
+        wc.commit_many(slices[1:])
+    state = read_delta_log(d_c)
+    assert state["version"] == 3
+    assert sorted(
+        r["n_regionkey"] for r in scan_delta_table(spark, d_c)
+        .select("n_regionkey").distinct().collect()
+    ) == [0, 1, 2]
+    data = [p for p in os.listdir(d_c) if p.endswith(".parquet")]
+    assert sorted(data) == sorted(state["files"])  # no orphan file
+    assert not os.listdir(stage_root)  # staged slices 3-4 discarded
 
 
 def test_write_riding_probes_match_pre_write_semantics(spark, tmp_path):
@@ -2320,3 +2438,26 @@ def test_write_riding_probes_match_pre_write_semantics(spark, tmp_path):
     assert files_before == sorted(
         p for p in os.listdir(d5) if p.endswith(".parquet")
     )
+
+    # (f) an all-NaN double partition slice is single-valued (one
+    # score=NaN staged directory) and scans back
+    d6 = str(tmp_path / "nan")
+    w6 = DeltaTableWriter(spark, d6)
+    nan = n.where("n_nationkey < 3").withColumn("score", F.lit(float("nan")))
+    w6.commit(add_dfs=[nan], partition_cols=["score"])
+    (add,) = read_delta_log(d6)["files"].values()
+    assert add["partitionValues"] == {"score": "nan"}
+    back = scan_delta_table(spark, d6)
+    assert back.count() == 3
+    assert back.where("isnan(score)").count() == 3
+
+    # (g) a NaN + 1.0 slice is refused ("several"), no orphan file
+    d7 = str(tmp_path / "nanmix")
+    w7 = DeltaTableWriter(spark, d7)
+    nanmix = n.where("n_nationkey < 4").withColumn(
+        "score",
+        F.when(F.col("n_nationkey") < 2, F.lit(float("nan"))).otherwise(1.0),
+    )
+    with pytest.raises(ValueError, match="got several"):
+        w7.commit(add_dfs=[nanmix], partition_cols=["score"])
+    assert not [p for p in os.listdir(d7) if p.endswith(".parquet")]

@@ -33,7 +33,7 @@ from lakefs_iceberg_catalog_spark.catalog.iceberg_format import (
     scan_iceberg_table,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_of
 
 
 def _nation(spark):
@@ -472,6 +472,20 @@ def test_partitioned_append_must_be_single_valued(spark, tmp_path):
     w = IcebergTableWriter(spark, d, partition_by=["n_regionkey"])
     with pytest.raises(ValueError, match="one distinct partition-value"):
         w.append(_nation(spark))
+    assert not os.listdir(os.path.join(d, "data"))  # no orphan file
+    # NaN edge: Iceberg identity partitions here are int/long/string (the
+    # manifest writer's Avro JSON path cannot carry a NaN double), so a
+    # NaN-valued partition never reaches staging — a NaN + 1.0 slice on a
+    # double column is refused up front, with no file left behind
+    dn = str(tmp_path / "icenan")
+    wn = IcebergTableWriter(spark, dn, partition_by=["score"])
+    nanmix = _nation(spark).where("n_nationkey < 4").withColumn(
+        "score",
+        F.when(F.col("n_nationkey") < 2, F.lit(float("nan"))).otherwise(1.0),
+    )
+    with pytest.raises(ValueError, match="not supported"):
+        wn.append(nanmix)
+    assert not os.listdir(os.path.join(dn, "data"))
 
 
 def test_position_delete_file_is_real_iceberg_shape(spark, tmp_path):
@@ -1712,6 +1726,28 @@ def test_branch_write_divergence_and_guards(spark, tmp_path):
         r["n_nationkey"]
         for r in scan_iceberg_table(spark, d, ref="b").collect()
     ) == list(range(15))
+
+
+def test_dropped_branch_recreated_forks_from_main(spark, tmp_path):
+    """drop_ref forgets the branch's manifest set: a branch re-created
+    under the same name forks from the CURRENT main, so fast_forward
+    publishes main's commits made since the drop plus the new branch
+    commit — none of the dropped branch's rows, none of main's lost."""
+    n = _nation(spark)
+    d = str(tmp_path / "rebranch")
+    w = IcebergTableWriter(spark, d)
+    w.append(n.filter("n_regionkey = 0"))
+    w.append(n.filter("n_regionkey = 1"), branch="b")
+    w.drop_ref("b")
+    w.append(n.filter("n_regionkey = 2"))
+    w.append(n.filter("n_regionkey = 3"), branch="b")
+    w.fast_forward("b")
+    back = scan_iceberg_table(spark, d)
+    assert back.count() == n.filter("n_regionkey in (0, 2, 3)").count()
+    assert sorted(
+        r["n_regionkey"]
+        for r in back.select("n_regionkey").distinct().collect()
+    ) == [0, 2, 3]
 
 
 def test_avro_container_writer_interop(spark, tmp_path):
@@ -3514,18 +3550,79 @@ def test_append_many_matches_sequential_appends(spark, tmp_path):
             map(tuple, slices[3].collect())
         )
 
+    def twins(tag, frames, **writer_kw):
+        """Batch vs sequential appends of ``frames``: same rows, same
+        manifest partition tuples, and ONE write job for the batch."""
+        dirs = []
+        for mode in ("many", "seq"):
+            d = str(tmp_path / f"{tag}-{mode}")
+            w = IcebergTableWriter(spark, d, **writer_kw)
+            if mode == "many":
+                snaps, jobs = jobs_of(spark, lambda: w.append_many(frames))
+                assert len(snaps) == len(frames)
+                assert jobs == 1, jobs
+            else:
+                for f in frames:
+                    w.append(f)
+            dirs.append(d)
+        (fm, _), (fs, _) = (iceberg_snapshot_files(d) for d in dirs)
+        assert len(fm) == len(fs) == len(frames)
+        assert sorted(map(str, (f["partition"] for f in fm))) == sorted(
+            map(str, (f["partition"] for f in fs))
+        )
+        rows = [sorted(map(tuple, scan_iceberg_table(spark, d).collect()))
+                for d in dirs]
+        assert rows[0] == rows[1]
+        assert len(rows[0]) == sum(f.count() for f in frames)
+        return fm
+
+    # bucket + truncate transforms (an int bucket, a string truncate)
+    named = [
+        s.withColumn("region", F.concat(F.lit("R"), F.col("n_regionkey")))
+        for s in slices
+    ]
+    fm = twins(
+        "bt", named,
+        partition_by=["bucket(n_regionkey, 3)", "truncate(region, 2)"],
+    )
+    assert sorted(f["partition"]["region_trunc"] for f in fm) == [
+        f"R{rk}" for rk in range(5)
+    ]
+    # ORC data files, unpartitioned and identity-partitioned
+    twins("orc", slices, file_format="orc")
+    twins("orcp", slices, file_format="orc", partition_by=["n_regionkey"])
+    # timestamp partitions under a non-UTC session time zone (the staged
+    # directory text must not depend on the session zone)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        stamped = [
+            s.withColumn(
+                "ts",
+                F.timestamp_seconds(
+                    F.lit(804_600_000) + F.col("n_regionkey") * 7200
+                    + F.col("n_nationkey")
+                ),
+            )
+            for s in slices
+        ]
+        fm = twins("ts", stamped, partition_by=["hours(ts)"])
+        assert len({f["partition"]["ts_hour"] for f in fm}) == 5
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
 
 def test_append_many_fallbacks(spark, tmp_path):
-    """The fast path refuses shapes it cannot prove: a multi-valued slice
-    on a partitioned table still raises (single-valued invariant), and a
-    non-identity transform falls back to the per-slice path yet produces
-    the same table state."""
+    """Shapes the old fast path could not prove: a multi-valued slice on
+    a partitioned table still raises (single-valued invariant), and a
+    string truncate transform stages like any other and produces the
+    same rows."""
     n = _nation(spark)
     d = str(tmp_path / "bad")
     w = IcebergTableWriter(spark, d, partition_by=["n_regionkey"])
     with pytest.raises(ValueError):
         w.append_many([n.filter(F.col("n_regionkey") == 0), n])
-    # truncate transform: per-slice fallback, same rows
+    # truncate transform: staged directories prove it, same rows
     d2 = str(tmp_path / "trunc")
     w2 = IcebergTableWriter(spark, d2, partition_by=["truncate(n_name, 8)"])
     a = n.filter(F.col("n_nationkey").isin(1, 10, 11))  # all 'NATION_1'
@@ -3560,31 +3657,22 @@ def test_append_many_explicit_parquet_on_orc_default_table(spark, tmp_path):
     assert all(p.endswith(".parquet") for p in back.inputFiles())
 
 
-def test_append_many_string_identity_partitions_fast_path(spark, tmp_path, monkeypatch):
-    """String identity partitions batch through the staged fast path when
-    the footer PROVES the stats exact (VERDICT r15 #6) — previously they
-    always fell back to one probe+write job per slice. Equivalence is
-    pinned against a sequentially appended twin; the spy asserts the
-    staged path was actually taken (every commit adopted a staged file)."""
+def test_append_many_string_identity_partitions_fast_path(spark, tmp_path):
+    """String identity partitions batch through the one staged write
+    (VERDICT r15 #6) — their values are read off the staged directory
+    names, exact at any length. Equivalence is pinned against a
+    sequentially appended twin; the job count asserts the whole batch
+    took ONE write job."""
     n = _nation(spark).withColumn(
         "region_name", F.concat(F.lit("R"), F.col("n_regionkey"))
     )
     slices = [n.filter(F.col("n_regionkey") == rk) for rk in range(5)]
 
-    staged_flags: list[bool] = []
-    orig = IcebergTableWriter.append
-
-    def spy(self, df, file_format=None, **kw):
-        staged_flags.append(kw.get("_staged") is not None)
-        return orig(self, df, file_format=file_format, **kw)
-
-    monkeypatch.setattr(IcebergTableWriter, "append", spy)
     d_many = str(tmp_path / "smany")
     wm = IcebergTableWriter(spark, d_many, partition_by=["region_name"])
-    snaps = wm.append_many(slices)
+    snaps, jobs = jobs_of(spark, lambda: wm.append_many(slices))
     assert len(snaps) == 5
-    assert staged_flags and all(staged_flags), staged_flags
-    monkeypatch.setattr(IcebergTableWriter, "append", orig)
+    assert jobs == 1, jobs  # every slice staged by the one write job
 
     d_seq = str(tmp_path / "sseq")
     ws = IcebergTableWriter(spark, d_seq, partition_by=["region_name"])
@@ -3603,7 +3691,7 @@ def test_append_many_string_identity_partitions_fast_path(spark, tmp_path, monke
     pr = scan_iceberg_table(spark, d_many, partition_filter={"region_name": "R2"})
     assert pr.count() == slices[2].count()
     assert len(pr.inputFiles()) == 1
-    # a multi-valued string slice still RAISES via the per-slice fallback
+    # a multi-valued string slice still RAISES
     import pytest as _pytest
 
     d_bad = str(tmp_path / "sbad")
@@ -3612,14 +3700,13 @@ def test_append_many_string_identity_partitions_fast_path(spark, tmp_path, monke
         wb.append_many([slices[0], n])
 
 
-def test_append_many_temporal_transform_fast_path(spark, tmp_path, monkeypatch):
-    """Round 16: day/month/year transforms over DATE columns batch through
-    the staged fast path — the transform is monotone, so exact footer
-    min/max endpoints agreeing AFTER the transform proves the slice
-    single-tupled even when the raw dates differ (a whole month per
-    slice). Twin-pinned against sequential appends; the spy asserts the
-    staged path was taken; a cross-month slice still raises via the
-    per-slice fallback probe."""
+def test_append_many_temporal_transform_fast_path(spark, tmp_path):
+    """Day/month/year transforms over DATE columns batch through the one
+    staged write — the slice is single-tupled iff its TRANSFORMED values
+    staged into one directory, even when the raw dates differ (a whole
+    month per slice). Twin-pinned against sequential appends; the job
+    count asserts ONE write job for the batch; a cross-month slice still
+    raises."""
     from lakefs_iceberg_catalog_spark.tables import table as _tbl
 
     from .conftest import SF_DIR
@@ -3631,20 +3718,11 @@ def test_append_many_temporal_transform_fast_path(spark, tmp_path, monkeypatch):
     )
     slices = [o.filter(F.month("o_orderdate") == m) for m in (1, 2, 3, 4)]
 
-    staged_flags: list[bool] = []
-    orig = IcebergTableWriter.append
-
-    def spy(self, df, file_format=None, **kw):
-        staged_flags.append(kw.get("_staged") is not None)
-        return orig(self, df, file_format=file_format, **kw)
-
-    monkeypatch.setattr(IcebergTableWriter, "append", spy)
     d_many = str(tmp_path / "tmany")
     wm = IcebergTableWriter(spark, d_many, partition_by=["months(o_orderdate)"])
-    snaps = wm.append_many(slices)
+    snaps, jobs = jobs_of(spark, lambda: wm.append_many(slices))
     assert len(snaps) == 4
-    assert staged_flags and all(staged_flags), staged_flags
-    monkeypatch.setattr(IcebergTableWriter, "append", orig)
+    assert jobs == 1, jobs  # every slice staged by the one write job
 
     d_seq = str(tmp_path / "tseq")
     ws = IcebergTableWriter(spark, d_seq, partition_by=["months(o_orderdate)"])
@@ -3667,7 +3745,7 @@ def test_append_many_temporal_transform_fast_path(spark, tmp_path, monkeypatch):
         hidden_filter={"o_orderdate": _dt.datetime(1995, 3, 15)},
     )
     assert len(pruned.inputFiles()) == 1
-    # a cross-month slice is NOT single-tupled: per-slice fallback raises
+    # a cross-month slice is NOT single-tupled: it raises
     import pytest as _pytest
 
     d_bad = str(tmp_path / "tbad")
