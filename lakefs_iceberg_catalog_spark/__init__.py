@@ -19,6 +19,17 @@ re-expresses that surface Spark-first:
 Registry: importing :mod:`lakefs_iceberg_catalog_spark.registry` and calling
 ``load_all()`` populates ``QUERIES`` / ``ORACLES`` consumed by
 ``__spark_entry__.py``.
+
+Importing the package installs :mod:`.zipstamp` on Python < 3.13, so a
+Python worker that unpickles one of its executor functions stops
+re-reading every zip archive on ``sys.path`` at each task.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+if sys.version_info < (3, 13):
+    from . import zipstamp
+
+    zipstamp.install()

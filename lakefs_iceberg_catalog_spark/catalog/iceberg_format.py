@@ -261,6 +261,62 @@ def _pa_fix_type(ice_t: str):
     }.get(ice_t)
 
 
+def _write_position_deletes(
+    path: str, file_paths: list[str], positions: list[int]
+) -> None:
+    """One position-delete parquet: (file_path, pos) rows, in the order
+    given (the spec orders them by file_path, then pos)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "file_path": pa.array(file_paths, pa.string()),
+                "pos": pa.array(positions, pa.int64()),
+            }
+        ),
+        path,
+    )
+
+
+def _delete_file_writer(norm: dict[str, str], stem: str):
+    """The ``applyInPandas`` function of the executor-side delete-file
+    writes: one ``_file`` group (normalized path, ``_pos`` ordinals) in,
+    one sorted file-scoped delete parquet ``<stem><random>.parquet`` out,
+    described by a (file, path, rows) row. It calls module-level helpers,
+    so unpickling it on a worker imports this package (see ``zipstamp``)."""
+
+    def write_group(key, pdf):
+        import uuid as _uuid
+
+        import pandas as pd
+
+        orig = norm[key[0]]
+        pos = sorted(int(p) for p in pdf["_pos"])
+        path = f"{stem}{_uuid.uuid4().hex[:12]}.parquet"
+        _write_position_deletes(path, [orig] * len(pos), pos)
+        return pd.DataFrame({"file": [orig], "path": [path], "rows": [len(pos)]})
+
+    return write_group
+
+
+def _local_path(uri: str) -> str:
+    """A ``file:`` URI as a plain absolute path (the ``_file`` form)."""
+    return re.sub(r"^file:/+", "/", uri)
+
+
+def _remove_staged(stem: str) -> None:
+    """Delete every file a failed staging call wrote under ``stem``."""
+    import glob
+
+    for path in glob.glob(glob.escape(stem) + "*.parquet"):
+        try:
+            os.remove(path)
+        except OSError:
+            pass
+
+
 def _spark_type_of(ice_t: str) -> str:
     if ice_t.startswith("decimal"):
         return ice_t
@@ -1252,9 +1308,6 @@ class IcebergTableWriter:
         data files. Files written under an OLDER spec (the table's spec
         evolved since) group under their OWN spec and land in a
         per-spec delete manifest (VERDICT r10 #5)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         if self._schema_json is None:
             raise ValueError("delete_positions before any append")
         # (spec_id, tuple) → rows; unpartitioned tables have one group
@@ -1294,16 +1347,8 @@ class IcebergTableWriter:
                     self.data_dir,
                     f"00000-{self._version}-{self._uuid}-deletes-{i:05d}.parquet",
                 )
-                pq.write_table(
-                    pa.table(
-                        {
-                            "file_path": pa.array(
-                                [r[0] for r in rows], pa.string()
-                            ),
-                            "pos": pa.array([int(r[1]) for r in rows], pa.int64()),
-                        }
-                    ),
-                    del_path,
+                _write_position_deletes(
+                    del_path, [r[0] for r in rows], [int(r[1]) for r in rows]
                 )
                 by_spec.setdefault(sid, []).append(
                     (del_path, len(rows), pvals, CONTENT_POSITION_DELETES, None)
@@ -1554,45 +1599,24 @@ class IcebergTableWriter:
         action costs several stage-materialization jobs). A non-empty
         cardinality probe removes the just-staged delete files (the
         pre-probe contract: a violating merge leaves nothing behind) and
-        raises."""
-        import pandas as pd
+        raises. The cardinality error outranks the collect's row ceiling:
+        when the staged rows exceed it, one ``isEmpty`` probe decides
+        which of the two errors is raised, and the staged files go
+        either way."""
+        import functools as _ft
 
-        from ..operators.util import bounded_rows
+        from ..operators.util import MaterializeCeilingError, bounded_rows
 
         # file names embed the PROSPECTIVE version (the caller bumps it
-        # only once the match proves non-empty)
-        data_dir, version, tuuid = self.data_dir, self._version + 1, self._uuid
-
-        def _write_group(key, pdf):
-            import uuid as _uuid
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            orig = norm[key[0]]
-            # spec orders position delete rows by (file_path, pos); a
-            # file-scoped delete file has one file_path, so sort by pos
-            pos = sorted(int(p) for p in pdf["_pos"])
-            del_path = os.path.join(
-                data_dir,
-                f"00000-{version}-{tuuid}-deletes-{_uuid.uuid4().hex[:12]}"
-                ".parquet",
-            )
-            pq.write_table(
-                pa.table(
-                    {
-                        "file_path": pa.array([orig] * len(pos), pa.string()),
-                        "pos": pa.array(pos, pa.int64()),
-                    }
-                ),
-                del_path,
-            )
-            return pd.DataFrame(
-                {"file": [orig], "path": [del_path], "rows": [len(pos)]}
-            )
-
+        # only once the match proves non-empty) and a per-call token, so a
+        # failed call removes exactly its own files
+        stem = os.path.join(
+            self.data_dir,
+            f"00000-{self._version + 1}-{self._uuid}-deletes-"
+            f"{uuid.uuid4().hex[:8]}-",
+        )
         staged = matched.groupBy("_file").applyInPandas(
-            _write_group, "file string, path string, rows long"
+            _delete_file_writer(norm, stem), "file string, path string, rows long"
         )
         branches = [staged]
 
@@ -1607,30 +1631,28 @@ class IcebergTableWriter:
             branches.append(_marker(cardinality_probe, "\x00cardinality"))
         for nm, fr in sorted((flag_probes or {}).items()):
             branches.append(_marker(fr, f"\x00flag:{nm}"))
-        if len(branches) > 1:
-            import functools as _ft
-
+        violation = ValueError(
+            "MERGE cardinality violation: a target row matches "
+            "more than one source row"
+        )
+        try:
             rows = bounded_rows(
                 _ft.reduce(lambda a, b: a.unionByName(b), branches)
             )
-        else:
-            rows = bounded_rows(staged)
+        except MaterializeCeilingError:
+            _remove_staged(stem)
+            if cardinality_probe is not None and not cardinality_probe.isEmpty():
+                raise violation from None
+            raise
+        if any(r["file"] == "\x00cardinality" for r in rows):
+            _remove_staged(stem)  # a violating merge leaves no staged files
+            raise violation
         descs = [r for r in rows if not r["file"].startswith("\x00")]
         flags = {
             r["file"][len("\x00flag:"):]
             for r in rows
             if r["file"].startswith("\x00flag:")
         }
-        if any(r["file"] == "\x00cardinality" for r in rows):
-            for r in descs:  # violating merge leaves no staged files
-                try:
-                    os.remove(r["path"])
-                except OSError:
-                    pass
-            raise ValueError(
-                "MERGE cardinality violation: a target row matches "
-                "more than one source row"
-            )
         return descs, flags
 
     def _append_position_delete_manifests(
@@ -3561,8 +3583,6 @@ class IcebergTableWriter:
         parquet executor-side; the driver folds descriptors and rewrites
         O(delete-manifests) metadata. At 100 TB this is the nightly job
         that keeps per-scan delete-merge cost flat as DML accumulates."""
-        import pandas as pd
-
         from ..operators.util import bounded_rows
 
         if self._schema_json is None:
@@ -3666,38 +3686,14 @@ class IcebergTableWriter:
         # the commit (shared _commit_guard discipline)
         with self._commit_guard():
             self._version += 1
-            data_dir, version, tuuid = self.data_dir, self._version, self._uuid
-            norm = dict(live_norm)
-
-            def _write_group(key, pdf):
-                import uuid as _uuid
-
-                import pyarrow as pa
-                import pyarrow.parquet as pq
-
-                orig = norm[key[0]]
-                posn = sorted(int(p) for p in pdf["_pos"])
-                del_path = os.path.join(
-                    data_dir,
-                    f"00000-{version}-{tuuid}-rewrite-deletes-"
-                    f"{_uuid.uuid4().hex[:12]}.parquet",
-                )
-                pq.write_table(
-                    pa.table(
-                        {
-                            "file_path": pa.array([orig] * len(posn), pa.string()),
-                            "pos": pa.array(posn, pa.int64()),
-                        }
-                    ),
-                    del_path,
-                )
-                return pd.DataFrame(
-                    {"file": [orig], "path": [del_path], "rows": [len(posn)]}
-                )
-
+            stem = os.path.join(
+                self.data_dir,
+                f"00000-{self._version}-{self._uuid}-rewrite-deletes-",
+            )
             descs = bounded_rows(
                 matched.groupBy("_file").applyInPandas(
-                    _write_group, "file string, path string, rows long"
+                    _delete_file_writer(dict(live_norm), stem),
+                    "file string, path string, rows long",
                 )
             )
             self._manifests = keep
@@ -4909,12 +4905,11 @@ def _orc_scan_with_ordinals(spark: SparkSession, paths: list[str]) -> DataFrame:
 
     def _read(batches):
         import pyarrow.orc as _po
-        import re as _re
 
         for pdf in batches:
             for p in pdf["path"]:
                 f = _po.ORCFile(p)
-                rel = _re.sub(r"^file:/+", "/", p)
+                rel = _local_path(p)
                 offset = 0
                 for i in range(f.nstripes):
                     x = f.read_stripe(i, columns=cols or None).to_pandas()
@@ -4955,7 +4950,6 @@ def _avro_scan_with_ordinals(
 
     def _read(batches):
         import datetime as _dt
-        import re as _re
 
         import pandas as _pd
 
@@ -4986,7 +4980,7 @@ def _avro_scan_with_ordinals(
 
         for pdf in batches:
             for p in pdf["path"]:
-                rel = _re.sub(r"^file:/+", "/", p)
+                rel = _local_path(p)
                 _, blocks = iter_container(p)
                 offset = 0
                 for recs in blocks:

@@ -3370,6 +3370,42 @@ def test_merge_mor_positions_cardinality_check(spark, tmp_path):
     assert scan_iceberg_table(spark, d).count() == 12
 
 
+def test_merge_mor_cardinality_outranks_row_ceiling(spark, tmp_path, monkeypatch):
+    """A MoR MERGE that both violates cardinality and stages more delete
+    files than the collect's row ceiling raises the cardinality
+    ValueError, not MaterializeCeilingError; a merge over the ceiling
+    alone still raises the ceiling error. Neither leaves a staged delete
+    file or a commit behind."""
+    import os
+
+    from lakefs_iceberg_catalog_spark.operators import util
+    from lakefs_iceberg_catalog_spark.operators.util import (
+        MaterializeCeilingError,
+        local_df,
+    )
+
+    n = _nation(spark).select("n_nationkey", "n_name", "n_regionkey")
+    d = str(tmp_path / "mergeceiling")
+    w = IcebergTableWriter(spark, d)
+    w.append(n.filter("n_nationkey < 10"))
+    w.append(n.filter("n_nationkey >= 10 AND n_nationkey < 20"))
+    monkeypatch.setattr(util.bounded_rows, "__defaults__", (1,))
+    schema = "n_nationkey int, n_name string, n_regionkey int"
+
+    def staged_deletes():
+        return [f for f in os.listdir(w.data_dir) if "-deletes-" in f]
+
+    both = local_df(spark, [(4, "A", 0), (4, "B", 0), (12, "C", 0)], schema)
+    with pytest.raises(ValueError, match="cardinality"):
+        w.merge_upsert_mor_positions(both, ["n_nationkey"])
+    assert staged_deletes() == []
+    over = local_df(spark, [(4, "A", 0), (12, "C", 0)], schema)
+    with pytest.raises(MaterializeCeilingError):
+        w.merge_upsert_mor_positions(over, ["n_nationkey"])
+    assert staged_deletes() == []
+    assert scan_iceberg_table(spark, d).count() == 20  # nothing committed
+
+
 def test_remove_orphans_aborts_on_unreadable_newest_metadata(
     spark, tmp_path, monkeypatch
 ):
