@@ -24,6 +24,20 @@ from pyspark.sql import SparkSession
 # distinct generated classes of one full-registry pass (3,348), with headroom
 CODEGEN_CACHE_ENTRIES = 4096
 
+# driver heap ceiling; a smaller host gets half its physical memory
+DRIVER_MEM_MAX_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    48g, or half the host's physical memory if that is less. A 48g heap
+    on a 15 GB host lets the JVM grow until the kernel kills it."""
+    try:
+        phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    except (AttributeError, ValueError, OSError):
+        return f"{DRIVER_MEM_MAX_MB}m"
+    return f"{max(1024, min(DRIVER_MEM_MAX_MB, phys_mb // 2))}m"
+
 
 def get_spark(app: str = "lakefs_iceberg_catalog_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -35,7 +49,10 @@ def get_spark(app: str = "lakefs_iceberg_catalog_spark", cpus: int | None = None
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

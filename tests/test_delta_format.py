@@ -2477,3 +2477,154 @@ def test_write_riding_probes_match_pre_write_semantics(spark, tmp_path):
     with pytest.raises(ValueError, match="got several"):
         w7.commit(add_dfs=[nanmix], partition_cols=["score"])
     assert not [p for p in os.listdir(d7) if p.endswith(".parquet")]
+
+
+@pytest.mark.parametrize("ptype, pval", [("boolean", True), ("double", 1.0e10)])
+def test_merge_twice_into_bool_and_double_partitions(spark, tmp_path, ptype, pval):
+    """A second MERGE keyed on a boolean or double partition column
+    updates the row the first MERGE inserted: every add carries its
+    partitionValues in the one text the pruned probe looks source tuples
+    up by ("True", "10000000000.0"), whichever write produced it."""
+    from lakefs_iceberg_catalog_spark.operators.util import local_df
+
+    ddl = f"k int, p {ptype}, v string"
+    d = str(tmp_path / f"twice_{ptype}")
+    w = DeltaTableWriter(spark, d)
+    w.commit(
+        add_dfs=[local_df(spark, [(1, pval, "a"), (2, pval, "b")], ddl)],
+        partition_cols=["p"],
+    )
+    w.merge_upsert(local_df(spark, [(3, pval, "c")], ddl), ["k", "p"])
+    w.merge_upsert(local_df(spark, [(3, pval, "C2")], ddl), ["k", "p"])
+    got = sorted(
+        tuple(r) for r in scan_delta_table(spark, d).select("k", "p", "v").collect()
+    )
+    assert got == [(1, pval, "a"), (2, pval, "b"), (3, pval, "C2")]
+    texts = {
+        a["partitionValues"]["p"] for a in read_delta_log(d)["files"].values()
+    }
+    assert texts == {str(pval)}
+
+
+def test_partitioned_shallow_clone_keeps_dv_deletes_through_merge(
+    spark, tmp_path
+):
+    """A shallow clone's adds are keyed by ABSOLUTE paths. A DV delete on
+    the clone must stay applied when a later MERGE rewrites that file:
+    the MERGE scan finds each file's deletion vector through the log's
+    own keys, so the deleted row is not carried into the rewrite."""
+    from lakefs_iceberg_catalog_spark.operators.util import local_df
+
+    ddl = "k int, p int, v string"
+    src = str(tmp_path / "src")
+    ws = DeltaTableWriter(spark, src)
+    ws.commit(
+        add_dfs=[local_df(spark, [(1, 0, "a"), (2, 0, "b")], ddl)],
+        partition_cols=["p"],
+    )
+    ws.commit_many([local_df(spark, [(3, 1, "c")], ddl)])
+    dst = str(tmp_path / "clone")
+    wc = DeltaTableWriter(spark, dst)
+    wc.shallow_clone(src)
+    assert all(os.path.isabs(rel) for rel in read_delta_log(dst)["files"])
+    wc.delete_where_dv("k = 2")
+    wc.merge_upsert(local_df(spark, [(1, 0, "A")], ddl), ["k"])
+    got = sorted(
+        tuple(r) for r in scan_delta_table(spark, dst).select("k", "p", "v").collect()
+    )
+    assert got == [(1, 0, "A"), (3, 1, "c")]
+    assert scan_delta_table(spark, src).count() == 3  # the source never moved
+
+
+def test_cdc_actions_publish_inside_their_commit(spark, tmp_path, monkeypatch):
+    """commit_with_cdc, MERGE, DELETE and UPDATE write their cdc actions
+    inside the ONE commit file: the file as published already lists them,
+    so no reader can see the commit without its change rows. A MERGE
+    refused by a CHECK constraint leaves no commit and no file behind —
+    its change rows are staged only once the adds pass their checks."""
+    published: list[set[str]] = []
+    write_commit = DeltaTableWriter._write_commit
+
+    def spy(self, actions):
+        v = write_commit(self, actions)
+        log = os.path.join(self.table_dir, "_delta_log", f"{v:020d}.json")
+        with open(log) as f:
+            published.append(
+                {k for line in f.read().splitlines() if line for k in json.loads(line)}
+            )
+        return v
+
+    monkeypatch.setattr(DeltaTableWriter, "_write_commit", spy)
+    from pyspark.sql import functions as F
+
+    n = _nation(spark).select("n_nationkey", "n_name")
+    d = str(tmp_path / "cdc_one_file")
+    w = DeltaTableWriter(spark, d)
+    w.commit(add_dfs=[n.where("n_nationkey < 12")])
+    w.commit_with_cdc(
+        add_dfs=[n.where("n_nationkey >= 12")],
+        cdc_df=n.where("n_nationkey >= 12").withColumn(
+            "_change_type", F.lit("insert")
+        ),
+    )
+    up = spark.createDataFrame([(3, "UP_3")], "n_nationkey int, n_name string")
+    w.merge_upsert(up, ["n_nationkey"])
+    w.delete_where_dv("n_nationkey = 20")
+    w.update_where_dv("n_nationkey = 21", {"n_name": "'U21'"})
+    assert len(published) == 5
+    assert all("cdc" in kinds for kinds in published[1:]), published
+
+    w.add_check_constraint("nonneg", "n_nationkey >= 0")
+    v, before = w._version, sorted(
+        os.path.relpath(os.path.join(r, f), d)
+        for r, _, fs in os.walk(d)
+        for f in fs
+    )
+    bad = up.withColumn("n_nationkey", F.lit(-7))
+    with pytest.raises(ValueError, match="CHECK constraint"):
+        w.merge_upsert(bad, ["n_nationkey"])
+    assert w._version == v
+    assert before == sorted(
+        os.path.relpath(os.path.join(r, f), d)
+        for r, _, fs in os.walk(d)
+        for f in fs
+    )
+
+
+def test_shallow_clone_key_leaves_no_temp_dirs(spark):
+    """sink_delta_shallow_clone removes BOTH tables it builds: the source
+    as well as the clone (each call used to leave a delta-clone-src-*
+    directory behind)."""
+    import glob
+    import tempfile
+
+    import __spark_entry__
+
+    def clone_dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "delta-clone-*")))
+
+    before = clone_dirs()
+    query = __spark_entry__.queries()["sink_delta_shallow_clone"]
+    assert len(query(spark, SF_DIR).toPandas()) == 24
+    assert clone_dirs() <= before
+
+
+def test_identity_table_rewrites_keep_their_values(spark, tmp_path):
+    """Rewrites of a GENERATED ALWAYS identity table carry the values the
+    writer allocated: UPDATE, OPTIMIZE and a MERGE are not refused as
+    explicit inserts, and each row keeps its identity value."""
+    from lakefs_iceberg_catalog_spark.operators.util import local_df
+
+    d = str(tmp_path / "ident_rewrites")
+    w = DeltaTableWriter(spark, d)
+    w.commit(add_dfs=[local_df(spark, [(1,), (2,)], "k int")],
+             identity={"rid": {}})
+    rid = {r["k"]: r["rid"] for r in scan_delta_table(spark, d).collect()}
+    w.update_where_dv("k = 1", {"k": "10"})
+    w.optimize()
+    w.merge_upsert(local_df(spark, [(2, rid[2])], "k int, rid long"), ["k"])
+    got = {r["k"]: r["rid"] for r in scan_delta_table(spark, d).collect()}
+    assert got == {10: rid[1], 2: rid[2]}
+    w.commit(add_dfs=[local_df(spark, [(3,)], "k int")])
+    got = {r["k"]: r["rid"] for r in scan_delta_table(spark, d).collect()}
+    assert got[3] not in (rid[1], rid[2])  # allocation never collides

@@ -75,3 +75,24 @@ def test_bench_extras_cover_full_registry():
     assert set(extras) | set(bench.HEADLINE) == set(registry.QUERIES)
     assert not set(extras) & set(bench.HEADLINE)
     assert len(set(extras)) == len(extras)  # no duplicates
+
+
+def test_default_driver_memory_fits_the_host(monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is 48g, or half the
+    host's physical memory when that is less (a 48g heap on a 15 GB host
+    lets the JVM grow until the kernel kills it)."""
+    import os
+
+    from lakefs_iceberg_catalog_spark import session
+
+    page = 4096
+    sizes = {"SC_PAGE_SIZE": page}
+
+    def sysconf(name):
+        return sizes[name]
+
+    monkeypatch.setattr(os, "sysconf", sysconf)
+    sizes["SC_PHYS_PAGES"] = 15 * 1024**3 // page
+    assert session.default_driver_memory() == f"{15 * 1024 // 2}m"
+    sizes["SC_PHYS_PAGES"] = 256 * 1024**3 // page
+    assert session.default_driver_memory() == f"{48 * 1024}m"
