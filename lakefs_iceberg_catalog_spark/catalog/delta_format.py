@@ -1587,7 +1587,7 @@ class DeltaTableWriter:
                 for r in bounded_rows(probe.select("_file").distinct(), 100_000)
             )
         new_rows = source_df.select(*cols)
-        cdc = None
+        preimage = keys.limit(0)
         if touched:
             touched_raw = self._live_with_lineage(ctx, touched)
             preimage = touched_raw.join(
@@ -1597,24 +1597,25 @@ class DeltaTableWriter:
                 touched_raw.join(gated_broadcast(keys), key_cols, "left_anti")
                 .select(*cols)
             )
-            cdc = preimage.withColumn("_change_type", F.lit("update_preimage"))
         # matched vs inserted from the touched-file rows alone, gated:
         # matched keys are source-proportional in the bulk-CDC shape, so
         # the broadcast hint only applies under the gate's size estimate
-        existing_keys = gated_broadcast(
-            preimage.select(*key_cols).distinct() if touched else keys.limit(0)
-        )
-        changes = source_df.join(
+        existing_keys = gated_broadcast(preimage.select(*key_cols).distinct())
+        cdc = source_df.join(
             existing_keys, key_cols, "left_semi"
         ).withColumn("_change_type", F.lit("update_postimage")).unionByName(
             source_df.join(existing_keys, key_cols, "left_anti").withColumn(
                 "_change_type", F.lit("insert")
             )
         )
+        if touched:
+            cdc = preimage.withColumn(
+                "_change_type", F.lit("update_preimage")
+            ).unionByName(cdc)
         return self.commit_with_cdc(
             add_partitioned=new_rows,
             remove=touched,
-            cdc_df=changes if cdc is None else cdc.unionByName(changes),
+            cdc_df=cdc,
             operation="MERGE",
         )
 
