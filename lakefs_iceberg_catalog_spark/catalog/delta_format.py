@@ -65,6 +65,10 @@ _DV_PROTOCOL_ACTION = {
 # as the sorted probe result's first element.
 _CARDINALITY_MARK = "\x00merge-cardinality-violation"
 
+# Stands in for a NaN partition value in the MERGE candidate lookup:
+# NaN != NaN in Python, but Spark's join keys treat NaN as equal.
+_NAN = object()
+
 
 def _commit_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _LOG_DIR, f"{version:020d}.json")
@@ -72,8 +76,7 @@ def _commit_path(table_dir: str, version: int) -> str:
 
 def _pv_text(v) -> str | None:
     """One typed partition value as the ``partitionValues`` string of the
-    add and cdc actions this writer emits — and the text the pruned MERGE
-    probe looks source tuples up by: ``str`` of the value a collect
+    add and cdc actions this writer emits: ``str`` of the value a collect
     returns (``"True"`` for a boolean, ``"10000000000.0"`` for a double),
     NULL as JSON null."""
     return None if v is None else str(v)
@@ -168,12 +171,12 @@ class DeltaTableWriter:
         columns (allowExplicitInsert=false); otherwise accepted, and the
         high-water mark advances past the explicit extreme in the step's
         direction so later allocations never collide. A ``rewrite`` frame
-        (rows that already hold their values: UPDATE images, OPTIMIZE and
-        REORG survivors, MERGE output) is never refused; the mark still
-        advances past its extreme. The frame is
-        persisted across the count and write jobs so both see ONE
-        partitioning (a recompute between jobs could repartition and
-        double-assign)."""
+        (rows that already hold table-allocated values: UPDATE images,
+        OPTIMIZE and REORG survivors) is never refused; the mark still
+        advances past its extreme. MERGE output is not a rewrite frame:
+        it carries source rows. The frame is persisted across the count
+        and write jobs so both see ONE partitioning (a recompute between
+        jobs could repartition and double-assign)."""
         from pyspark.sql.window import Window as W
 
         for c, sp in self._identity_specs().items():
@@ -398,14 +401,14 @@ class DeltaTableWriter:
         rewrite: bool = False,
     ) -> DataFrame:
         """One add frame as the staging write takes it: identity values
-        allocated (``_apply_identity``; ``rewrite`` marks the spanning
-        frame), generated columns computed, one ``_check<k>`` column
-        per CHECK constraint (true = the row violates it; protocol: an
-        expression that is not true, NULL included, is a violation), and
-        the data columns under their PHYSICAL names. The partition
-        columns keep their logical names: they name the staged
-        directories and never enter the file (the protocol keeps them in
-        the log)."""
+        allocated (``_apply_identity``; ``rewrite`` marks rows that
+        already hold table-allocated values), generated columns computed,
+        one ``_check<k>`` column per CHECK constraint (true = the row
+        violates it; protocol: an expression that is not true, NULL
+        included, is a violation), and the data columns under their
+        PHYSICAL names. The partition columns keep their logical names:
+        they name the staged directories and never enter the file (the
+        protocol keeps them in the log)."""
         if self._identity_specs():
             df = self._apply_identity(df, cleanup, rewrite)
         for name, expr in getattr(self, "_generated", {}).items():
@@ -556,6 +559,7 @@ class DeltaTableWriter:
         add_partitioned: DataFrame | None = None,
         extra_actions: list[dict] | None = None,
         cdc: DataFrame | None = None,
+        rewrite: bool = False,
     ) -> list[int]:
         """Stage every add frame of ``versions`` (one list of adds per
         version) in ONE write job (parquet_io.staged_slices), then
@@ -576,7 +580,10 @@ class DeltaTableWriter:
         ``_change_type``, staged under ``_change_data/`` once the adds
         pass their checks) belong to ``commit``'s single version: all of
         them land in its ONE commit file, so no reader sees the commit
-        without its change rows."""
+        without its change rows. ``rewrite`` says the spanning frame's
+        rows already hold table-allocated identity values (UPDATE,
+        OPTIMIZE, REORG): they are not refused as explicit inserts into a
+        GENERATED ALWAYS column."""
         from .parquet_io import staged_slices
 
         if not versions:
@@ -614,7 +621,7 @@ class DeltaTableWriter:
             spanning = None
             if add_partitioned is not None:
                 spanning = self._staged_frame(
-                    add_partitioned, pcols, constraints, cleanup, rewrite=True
+                    add_partitioned, pcols, constraints, cleanup, rewrite
                 )
                 metas[-1] = self._meta
             with staged_slices(
@@ -1253,12 +1260,14 @@ class DeltaTableWriter:
         survivors = self._live_with_lineage(
             self._scan_ctx(state), dv_rels
         ).drop("_file", "_pos")
-        return self.commit(
+        return self._commit_versions(
+            [[]],
             add_partitioned=survivors,
             remove=dv_rels,
             data_change=False,
             operation="REORG",
-        )
+            rewrite=True,
+        )[0]
 
     def delete_where_dv(self, condition: str) -> int:
         """Merge-on-read DELETE WHERE via DELETION VECTORS — what stock
@@ -1314,6 +1323,16 @@ class DeltaTableWriter:
         unknown = [c for c in assignments if c not in cols]
         if unknown:
             raise ValueError(f"assignments on unknown columns: {unknown}")
+        always = [
+            c
+            for c, sp in self._identity_specs().items()
+            if c in assignments and not sp["allow"]
+        ]
+        if always:
+            raise ValueError(
+                f"identity columns {always} are GENERATED ALWAYS "
+                "(allowExplicitInsert=false): UPDATE refused"
+            )
         matched = self._live_with_lineage(self._scan_ctx(state)).filter(
             condition
         )
@@ -1340,6 +1359,7 @@ class DeltaTableWriter:
             extra_actions=[_DV_PROTOCOL_ACTION, *dv_actions],
             cdc=cdc,
             operation="UPDATE",
+            rewrite=True,
         )[0]
 
     def optimize(
@@ -1384,12 +1404,14 @@ class DeltaTableWriter:
         if not zorder_by:
             # the live rows are the commit's spanning frame: one file per
             # partition tuple (one file on an unpartitioned table)
-            return self.commit(
+            return self._commit_versions(
+                [[]],
                 add_partitioned=current,
                 remove=live,
                 data_change=False,
                 operation="OPTIMIZE",
-            )
+                rewrite=True,
+            )[0]
         pcols = state.get("partition_cols") or []
         # persisted cluster inputs (zorder.py), released after the commit
         # is durable — the engine's stats/quantile/occupancy passes, the
@@ -1896,21 +1918,44 @@ class DeltaTableWriter:
     ) -> list[str]:
         """The live files (log keys) a MATCHED row can live in: with the
         partition columns inside the merge key, only the source's
-        partition tuples — one bounded distinct collect, looked up by
-        ``_pv_text``, the encoding every add carries; otherwise, and on
-        an unpartitioned table, every live file."""
+        partition tuples; otherwise, and on an unpartitioned table, every
+        live file. Tuples compare TYPED, whatever text a writer put in
+        the log ("true" or "True", "1.0E10" or "10000000000.0"): the
+        source tuples (one bounded distinct collect) and the log strings
+        are cast to the column types, the cast the scan's partition map
+        applies; the log strings' cast folds into a local relation, so it
+        runs no Spark job. NaN matches NaN, as in the probe's join."""
         from ..operators.util import bounded_rows
 
         pcols, groups = ctx["pcols"], ctx["groups"]
         tuples = list(groups)
-        if pcols and set(pcols) <= set(key_cols):
+        if pcols and tuples and set(pcols) <= set(key_cols):
+
+            def typed(df: DataFrame) -> DataFrame:
+                return df.select(
+                    *[F.col(c).cast(ctx["ptypes"][c]) for c in pcols]
+                )
+
+            def key(r) -> tuple:
+                return tuple(_NAN if v != v else v for v in r)
+
             src = {
-                tuple(_pv_text(v) for v in r)
+                key(r)
                 for r in bounded_rows(
-                    source_df.select(*pcols).distinct(), 10_000
+                    typed(source_df.select(*pcols).distinct()), 10_000
                 )
             }
-            tuples = [t for t in tuples if t in src]
+            log = bounded_rows(
+                typed(
+                    local_df(
+                        self.spark,
+                        tuples,
+                        ", ".join(f"`{c}` string" for c in pcols),
+                    )
+                ),
+                len(tuples),
+            )
+            tuples = [t for t, r in zip(tuples, log) if key(r) in src]
         return sorted(rel for t in tuples for rel in groups[t])
 
     def _live_with_lineage(

@@ -4694,38 +4694,33 @@ def sink_delta_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = _nation_local(spark, sf_dir, "n_nationkey", "n_name", "n_regionkey")
     src = tempfile.mkdtemp(prefix="delta-clone-src-")
+    ws = DeltaTableWriter(spark, src)
+    # both source commits staged in ONE write job
+    ws.commit_many([n.filter("n_nationkey < 12"), n.filter("n_nationkey >= 12")])
+
     dst = tempfile.mkdtemp(prefix="delta-clone-dst-")
-    try:
-        ws = DeltaTableWriter(spark, src)
-        # both source commits staged in ONE write job
-        ws.commit_many(
-            [n.filter("n_nationkey < 12"), n.filter("n_nationkey >= 12")]
-        )
+    wc = DeltaTableWriter(spark, dst)
+    wc.shallow_clone(src)
+    assert not [f for f in os.listdir(dst) if f.endswith(".parquet")]
 
-        wc = DeltaTableWriter(spark, dst)
-        wc.shallow_clone(src)
-        assert not [f for f in os.listdir(dst) if f.endswith(".parquet")]
-
-        # the clone diverges; the source must not move
-        wc.delete_where_dv("n_nationkey = 3")
-        wc.merge_upsert(
-            n.filter("n_nationkey = 5").withColumn("n_name", F.lit("CLONED")),
-            ["n_nationkey"],
-        )
-        pre_src = set(os.listdir(src))
-        vacuum_delta_table(
-            dst, retention_ms=0, now_ms=int(_time.time() * 1000) + 10**9
-        )
-        assert set(os.listdir(src)) == pre_src  # VACUUM never crossed roots
-        assert scan_delta_table(spark, src).count() == 25
-        back = scan_delta_table(spark, dst).select(
-            "n_nationkey", "n_name", "n_regionkey"
-        )
-        return _materialize(spark, back, dst)
-    finally:
-        # the clone's rows are materialized: both tables can go
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(dst, ignore_errors=True)
+    # the clone diverges; the source must not move
+    wc.delete_where_dv("n_nationkey = 3")
+    wc.merge_upsert(
+        n.filter("n_nationkey = 5").withColumn("n_name", F.lit("CLONED")),
+        ["n_nationkey"],
+    )
+    pre_src = set(os.listdir(src))
+    vacuum_delta_table(
+        dst, retention_ms=0, now_ms=int(_time.time() * 1000) + 10**9
+    )
+    assert set(os.listdir(src)) == pre_src  # VACUUM never crossed roots
+    assert scan_delta_table(spark, src).count() == 25
+    back = scan_delta_table(spark, dst).select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    out = _materialize(spark, back, dst)
+    shutil.rmtree(src, ignore_errors=True)  # the clone read its files
+    return out
 
 
 @register(

@@ -2482,9 +2482,9 @@ def test_write_riding_probes_match_pre_write_semantics(spark, tmp_path):
 @pytest.mark.parametrize("ptype, pval", [("boolean", True), ("double", 1.0e10)])
 def test_merge_twice_into_bool_and_double_partitions(spark, tmp_path, ptype, pval):
     """A second MERGE keyed on a boolean or double partition column
-    updates the row the first MERGE inserted: every add carries its
-    partitionValues in the one text the pruned probe looks source tuples
-    up by ("True", "10000000000.0"), whichever write produced it."""
+    updates the row the first MERGE inserted, and every add carries its
+    partitionValues in one text ("True", "10000000000.0"), whichever
+    write produced it."""
     from lakefs_iceberg_catalog_spark.operators.util import local_df
 
     ddl = f"k int, p {ptype}, v string"
@@ -2609,22 +2609,89 @@ def test_shallow_clone_key_leaves_no_temp_dirs(spark):
     assert clone_dirs() <= before
 
 
+@pytest.mark.parametrize(
+    "ptype, pval, text", [("boolean", True, "true"), ("double", 1.0e10, "1.0E10")]
+)
+def test_merge_probe_compares_partition_values_typed(
+    spark, tmp_path, ptype, pval, text
+):
+    """The pruned MERGE probe compares partition tuples by their typed
+    values, not by their log text: on a table whose adds carry Spark's
+    directory text ("true", "1.0E10", as other writers log it) the
+    matching files are still probed, so the MERGE updates the row
+    instead of adding a second one."""
+    from lakefs_iceberg_catalog_spark.operators.util import local_df
+
+    ddl = f"k int, p {ptype}, v string"
+    d = str(tmp_path / f"text_{ptype}")
+    w = DeltaTableWriter(spark, d)
+    w.commit(
+        add_dfs=[local_df(spark, [(1, pval, "a"), (3, pval, "c")], ddl)],
+        partition_cols=["p"],
+    )
+    log = os.path.join(d, "_delta_log", f"{0:020d}.json")
+    with open(log) as f:
+        body = f.read()
+    ours, theirs = (
+        json.dumps({"p": t}, separators=(",", ":")) for t in (str(pval), text)
+    )
+    assert ours in body
+    with open(log, "w") as f:
+        f.write(body.replace(ours, theirs))
+    w.merge_upsert(local_df(spark, [(3, pval, "C2")], ddl), ["k", "p"])
+    got = sorted(
+        tuple(r) for r in scan_delta_table(spark, d).select("k", "p", "v").collect()
+    )
+    assert got == [(1, pval, "a"), (3, pval, "C2")]
+
+
 def test_identity_table_rewrites_keep_their_values(spark, tmp_path):
     """Rewrites of a GENERATED ALWAYS identity table carry the values the
-    writer allocated: UPDATE, OPTIMIZE and a MERGE are not refused as
-    explicit inserts, and each row keeps its identity value."""
+    writer allocated: UPDATE, REORG and OPTIMIZE are not refused as
+    explicit inserts, and each row keeps its identity value. MERGE
+    carries source rows, so it is refused as the explicit insert it is:
+    an upsert bringing its own ``rid`` for a new key, and a clause INSERT
+    leaving ``rid`` out (its image would carry NULL). An UPDATE assigning
+    ``rid`` and ``commit(add_partitioned=...)`` with ``rid`` are refused
+    too. A refused write leaves no commit and no file."""
+    from lakefs_iceberg_catalog_spark.catalog.merge_clauses import MergeClause
     from lakefs_iceberg_catalog_spark.operators.util import local_df
 
     d = str(tmp_path / "ident_rewrites")
     w = DeltaTableWriter(spark, d)
-    w.commit(add_dfs=[local_df(spark, [(1,), (2,)], "k int")],
+    w.commit(add_dfs=[local_df(spark, [(1,), (2,), (4,)], "k int")],
              identity={"rid": {}})
     rid = {r["k"]: r["rid"] for r in scan_delta_table(spark, d).collect()}
     w.update_where_dv("k = 1", {"k": "10"})
+    w.delete_where_dv("k = 4")
+    w.reorg_purge()
     w.optimize()
-    w.merge_upsert(local_df(spark, [(2, rid[2])], "k int, rid long"), ["k"])
     got = {r["k"]: r["rid"] for r in scan_delta_table(spark, d).collect()}
     assert got == {10: rid[1], 2: rid[2]}
+
+    def files():
+        return sorted(
+            os.path.relpath(os.path.join(r, f), d)
+            for r, _, fs in os.walk(d)
+            for f in fs
+        )
+
+    v, before = w._version, files()
+    ddl = "k int, rid long"
+    with pytest.raises(ValueError, match="ALWAYS"):
+        w.merge_upsert(local_df(spark, [(5, rid[2])], ddl), ["k"])
+    with pytest.raises(ValueError, match="ALWAYS"):
+        w.merge_clauses(
+            local_df(spark, [(6,)], "k int"),
+            ["k"],
+            [MergeClause("not_matched", "insert", assignments={"k": "s.k"})],
+        )
+    with pytest.raises(ValueError, match="ALWAYS"):
+        w.update_where_dv("k = 2", {"rid": "rid + 100"})
+    with pytest.raises(ValueError, match="ALWAYS"):
+        w.commit(add_partitioned=local_df(spark, [(7, 1)], ddl))
+    assert (w._version, files()) == (v, before)
+    assert {r["k"]: r["rid"] for r in scan_delta_table(spark, d).collect()} == got
     w.commit(add_dfs=[local_df(spark, [(3,)], "k int")])
     got = {r["k"]: r["rid"] for r in scan_delta_table(spark, d).collect()}
-    assert got[3] not in (rid[1], rid[2])  # allocation never collides
+    assert got[3] not in (rid[1], rid[2], rid[4])  # allocation never collides
