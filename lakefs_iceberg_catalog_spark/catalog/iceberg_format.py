@@ -533,6 +533,17 @@ def _norm_path_map(data: list[dict]) -> dict[str, str]:
     }
 
 
+def _spec_fields_json(fields: list[dict]) -> str:
+    """A partition spec's field list as metadata JSON (the manifest's
+    ``partition-spec`` key)."""
+    return json.dumps(
+        [
+            {k: pf[k] for k in ("name", "transform", "source-id", "field-id")}
+            for pf in fields
+        ]
+    )
+
+
 def _manifest_entry_schema(partition_fields: list[dict]) -> dict:
     """MANIFEST_ENTRY_SCHEMA with the partition struct (r102) carrying the
     spec's typed identity-partition fields (field-ids 1000+) instead of
@@ -564,8 +575,9 @@ class IcebergTableWriter:
     carries a real identity partition spec: partition values are recorded
     TYPED in each manifest entry's partition struct (field-ids 1000+) and
     in metadata's partition-specs — the metadata a reader prunes files by.
-    (Unlike Delta, Iceberg keeps partition columns in the data files too,
-    so appends stay one writer call per partition value, the shape a real
+    (Unlike Delta, Iceberg keeps partition columns in the data files too.
+    Each append's data file holds one partition tuple, and a row-level
+    rewrite writes one file per tuple in one staging job: the shape a real
     partitioned writer's per-partition output tasks produce.)"""
 
     def __init__(
@@ -722,12 +734,7 @@ class IcebergTableWriter:
 
     @property
     def _spec_json(self) -> str:
-        return json.dumps(
-            [
-                {k: pf[k] for k in ("name", "transform", "source-id", "field-id")}
-                for pf in self._partition_fields
-            ]
-        )
+        return _spec_fields_json(self._partition_fields)
 
     def _partition_summaries(
         self, tuples: list[dict], fields: list[dict] | None = None
@@ -891,15 +898,26 @@ class IcebergTableWriter:
             ]
 
     @contextlib.contextmanager
-    def _staged_data(self, dfs: list[DataFrame], fmt: str):
-        """Stage the data file of every slice; yields, per slice, its
+    def _staged_data(
+        self,
+        dfs: list[DataFrame],
+        fmt: str,
+        spanning: DataFrame | None = None,
+    ):
+        """Stage the data file of every slice of ``dfs`` and, when given,
+        one file per partition tuple of ``spanning`` (the rows of a
+        row-level rewrite or compaction). Yields, per slice, its
         ``parquet_io.StagedSlice`` (partition values TRANSFORMED — e.g.
         one days(ts) append may span a whole day of timestamps) or the
-        single-valuedness ``ValueError`` its registration raises.
-        Parquet/ORC stage in ONE ``partitionBy`` job whose directories
-        prove single-valuedness; Avro files are written through
+        single-valuedness ``ValueError`` its registration raises, then
+        the spanning frame's slices (none when it has no rows).
+        Parquet/ORC stage everything in ONE ``partitionBy`` job whose
+        directories prove single-valuedness and split the spanning frame
+        per tuple, NULL tuples included. Avro files are written through
         ``foreachPartition`` (no SQL write, no directory layout), so each
-        Avro slice keeps the explicit bounded probe."""
+        Avro slice keeps the explicit bounded probe and the spanning
+        frame is written once per enumerated tuple."""
+        from ..operators.util import bounded_rows
         from .parquet_io import (
             StagedSlice,
             distinct_singleton_row,
@@ -913,7 +931,10 @@ class IcebergTableWriter:
         }
         if fmt != "avro":
             with staged_slices(
-                [d.withColumns(texprs) for d in dfs], list(texprs), fmt
+                [d.withColumns(texprs) for d in dfs],
+                list(texprs),
+                fmt,
+                spanning=None if spanning is None else spanning.withColumns(texprs),
             ) as (slices, _):
                 yield slices
             return
@@ -934,9 +955,36 @@ class IcebergTableWriter:
                 slices.append(
                     StagedSlice(path, write_single_avro(d, path), values)
                 )
+            if spanning is not None:
+                tuples = (
+                    bounded_rows(
+                        spanning.select(*texprs.values()).distinct(),
+                        self.REWRITE_PARTITION_CEILING,
+                    )
+                    if texprs
+                    else [()]
+                )
+                for j, t in enumerate(
+                    sorted(tuples, key=lambda r: tuple(str(v) for v in r))
+                ):
+                    part = spanning
+                    for e, v in zip(texprs.values(), t):
+                        part = part.filter(e.eqNullSafe(F.lit(v)))
+                    path = os.path.join(stage, f"span-{j}.avro")
+                    rows = write_single_avro(part, path)
+                    if rows:
+                        slices.append(StagedSlice(path, rows, tuple(t)))
             yield slices
         finally:
             shutil.rmtree(stage, ignore_errors=True)
+
+    def _adopt(self, st, fmt: str, name: str) -> tuple:
+        """Move staged slice ``st`` into the data directory as ``name``;
+        returns its ``_added_manifest`` file tuple."""
+        data_path = os.path.join(self.data_dir, f"{name}.{fmt}")
+        shutil.move(st.path, data_path)
+        pvals = {pf["name"]: v for pf, v in zip(self._partition_fields, st.values)}
+        return (data_path, fmt, st.rows, pvals, None)
 
     def _register_append(
         self,
@@ -948,168 +996,57 @@ class IcebergTableWriter:
     ) -> int:
         """Commit one staged slice as an append snapshot: adopt its data
         file, write its manifest, and publish it on main, a branch, or as
-        a WAP-staged snapshot — metadata only, no Spark job."""
+        a WAP-staged snapshot — metadata only, no Spark job. Any failure
+        — manifest write or the metadata commit itself — restores every
+        writer field to its pre-append state (``_new_snapshot``),
+        including the epoch pending-summary markers and a branch's
+        manifest set."""
         if isinstance(st, ValueError):
             raise st
-        # one guard around the WHOLE registration: any failure — manifest
-        # write or the metadata commit itself — restores every writer
-        # field to its pre-append state (incl. the epoch pending-summary
-        # markers, which previously leaked into the next unrelated commit
-        # and corrupted the exactly-once gate)
-        with self._commit_guard():
+        with self._new_snapshot() as snapshot_id:
             if epoch is not None:
                 self._pending_summary = {
                     "streaming-app-id": epoch[0],
                     "streaming-epoch": str(int(epoch[1])),
                 }
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
-            pvals = {
-                pf["name"]: v for pf, v in zip(self._partition_fields, st.values)
-            }
-            n_rows = st.rows
-            data_path = os.path.join(
-                self.data_dir,
-                f"00000-{self._version}-{self._uuid}-0-00001.{fmt}",
+            new_manifest = self._added_manifest(
+                snapshot_id,
+                [self._adopt(st, fmt, f"00000-{self._version}-{self._uuid}-0-00001")],
             )
-            shutil.move(st.path, data_path)
-
-            # -- manifest: the new file as ADDED; sequence numbers are LEFT
-            #    NULL to exercise the spec's inheritance rule (readers take the
-            #    manifest-list sequence number for ADDED entries) --------------
-            manifest_path = os.path.join(self.meta_dir, f"{uuid.uuid4()}-m0.avro")
-            self._avro.write(
-                manifest_path,
-                _manifest_entry_schema(self._partition_fields),
-                [
-                    {
-                        "status": STATUS_ADDED,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": None,
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": CONTENT_DATA,
-                            "file_path": data_path,
-                            "file_format": fmt.upper(),
-                            "partition": pvals,
-                            "record_count": n_rows,
-                            "file_size_in_bytes": os.path.getsize(data_path),
-                            "equality_ids": None,
-                            **dict(
-                                zip(
-                                    ("lower_bounds", "upper_bounds"),
-                                    self._file_bounds(data_path, fmt),
-                                )
-                            ),
-                        },
-                    }
-                ],
-                meta={
-                    "schema": json.dumps(self._schema_json),
-                    "partition-spec": self._spec_json,
-                    "partition-spec-id": str(self._spec_id),
-                    "format-version": "2",
-                    "content": "data",
-                },
-                codec="deflate",
-            )
-            new_manifest = {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": self._spec_id,
-                "content": 0,
-                "sequence_number": self._sequence,
-                "min_sequence_number": self._sequence,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 1,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": self._partition_summaries([pvals]),
-            }
             if wap_id is None and branch is None:
                 self._manifests.append(new_manifest)
                 return self._commit_snapshot(snapshot_id, "append")
+            main_manifests = self._manifests
+            # a staged snapshot never becomes current
+            self._staged_ids.add(snapshot_id)
             if branch is not None:
                 # BRANCH commit: build on the BRANCH's manifest set (forking
                 # from main on the first branch commit); parent is the branch
-                # head (main head on the fork commit); only refs[branch]
-                # moves. The swap is undone on ANY failure so a raising
-                # commit can never leak branch manifests into main.
+                # head (main head on the fork commit); only refs[branch] moves
                 prev_ref = self._refs.get(branch)
-                parent = prev_ref["snapshot-id"] if prev_ref else None
-                main_manifests = self._manifests
                 self._manifests = self._branch_manifests.get(
                     branch, [dict(m) for m in main_manifests]
-                )
-                self._manifests.append(new_manifest)
+                ) + [new_manifest]
                 self._refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
-                self._staged_ids.add(snapshot_id)  # never became current
-                # _commit_snapshot mutates MORE than the swap above: it appends
-                # to _snapshots before _write_metadata can fail — snapshot the
-                # lot so a raising commit leaves NO phantom staged snapshot
-                # behind (ADVICE r13 #2). _version/_sequence restore to their
-                # PRE-APPEND values (this append bumped each exactly once, and
-                # the failed commit never wrote v{_version}.metadata.json).
-                pre_snap_len = len(self._snapshots)
-                pre_head = self._current_snapshot_id
-                pre_pending = dict(self._pending_summary)
-                try:
-                    sid = self._commit_snapshot(
-                        snapshot_id, "append", stage=True, parent=parent
-                    )
-                except BaseException:
-                    self._manifests = main_manifests
-                    if prev_ref is None:
-                        self._refs.pop(branch, None)
-                    else:
-                        self._refs[branch] = prev_ref
-                    self._staged_ids.discard(snapshot_id)
-                    del self._snapshots[pre_snap_len:]
-                    self._version -= 1
-                    self._sequence -= 1
-                    self._current_snapshot_id = pre_head
-                    # _commit_snapshot clears _pending_summary (streaming
-                    # epoch markers etc.) before _write_metadata can fail;
-                    # losing it on rollback would silently break the
-                    # exactly-once gate on the retry
-                    self._pending_summary = pre_pending
-                    raise
+                sid = self._commit_snapshot(
+                    snapshot_id,
+                    "append",
+                    stage=True,
+                    parent=prev_ref["snapshot-id"] if prev_ref else None,
+                )
                 self._branch_manifests[branch] = self._manifests
-                self._manifests = main_manifests
-                return sid
-            self._manifests.append(new_manifest)
-            # STAGE: the snapshot (and its frozen manifest list) is written,
-            # but the head does not move and the live manifest set reverts —
-            # later main commits must not carry the staged manifest
-            pre_manifests = self._manifests[:-1]
-            pre_pending_wap = dict(self._pending_summary)
-            pre_snap_len_wap = len(self._snapshots)
-            self._pending_summary = {
-                **self._pending_summary,
-                "wap.id": str(wap_id),
-            }
-            self._staged_ids.add(snapshot_id)
-            # same rollback discipline as the branch arm: a failing commit
-            # must not leak the staged manifest into main's live set or leave
-            # a phantom staged snapshot behind — the un-audited rows would
-            # publish on the NEXT plain append, the isolation violation WAP
-            # exists to prevent
-            try:
+            else:
+                # WAP: the snapshot (and its frozen manifest list) is
+                # written, but the head does not move and main's live
+                # manifest set never carries the staged manifest
+                self._manifests = main_manifests + [new_manifest]
+                self._pending_summary = {
+                    **self._pending_summary,
+                    "wap.id": str(wap_id),
+                }
                 sid = self._commit_snapshot(snapshot_id, "append", stage=True)
-            except BaseException:
-                self._manifests = pre_manifests
-                self._staged_ids.discard(snapshot_id)
-                del self._snapshots[pre_snap_len_wap:]
-                self._version -= 1
-                self._sequence -= 1
-                self._pending_summary = pre_pending_wap
-                raise
-            self._staged_manifests[sid] = [self._manifests[-1]]
-            self._manifests = pre_manifests
+                self._staged_manifests[sid] = [new_manifest]
+            self._manifests = main_manifests
             return sid
 
     def _head_snapshot_id(self) -> int:
@@ -1170,6 +1107,17 @@ class IcebergTableWriter:
             del self._log_extra[n_extra:]
             raise
 
+    @contextlib.contextmanager
+    def _new_snapshot(self):
+        """Open one snapshot commit: bump version and sequence under
+        ``_commit_guard`` and yield the new snapshot id. Any failure
+        before the body's ``_commit_snapshot`` returns restores every
+        writer field."""
+        with self._commit_guard():
+            self._version += 1
+            self._sequence += 1
+            yield int(uuid.uuid4().int % (1 << 62))
+
     def _ensure_unpartitioned_spec(self) -> int:
         """Spec id of an EMPTY partition spec registered in the table's
         partition-specs — the reference a GLOBAL delete manifest on a
@@ -1189,6 +1137,93 @@ class IcebergTableWriter:
             self._unpartitioned_spec_id = sid
         return self._unpartitioned_spec_id
 
+    def _added_manifest(
+        self,
+        snapshot_id: int,
+        files: list[tuple[str, str, int, dict, list | None]],
+        content: int = 0,
+        spec_id: int | None = None,
+    ) -> dict:
+        """Write ONE manifest whose entries are this snapshot's ADDED
+        files and return its manifest-list row — the one writer of data
+        (``content=0``) and delete (``content=1``) manifests. ``files``
+        holds (path, format, rows, partition values, equality ids) per
+        file; in a delete manifest a file with equality ids is an
+        equality-delete file, any other a position-delete file. Entry
+        sequence numbers stay NULL: readers inherit the manifest-list
+        row's (the spec's inheritance rule for ADDED entries). Column
+        bounds come from data-file footers only. Each entry carries its
+        TYPED partition struct and the row carries partition summaries,
+        so ``partition_filter`` prunes delete manifests exactly like data
+        manifests. ``spec_id`` overrides the current spec: position
+        deletes targeting files under an OLDER spec write under that
+        spec's struct, and global equality deletes on a partitioned table
+        write under the unpartitioned spec reference."""
+        if spec_id is None:
+            spec_id = self._spec_id
+        fields = self._fields_for_spec(spec_id)
+        path = os.path.join(self.meta_dir, f"{uuid.uuid4()}-m0.avro")
+        self._avro.write(
+            path,
+            _manifest_entry_schema(fields),
+            [
+                {
+                    "status": STATUS_ADDED,
+                    "snapshot_id": snapshot_id,
+                    "sequence_number": None,
+                    "file_sequence_number": None,
+                    "data_file": {
+                        "content": CONTENT_DATA
+                        if content == 0
+                        else CONTENT_EQUALITY_DELETES
+                        if eq_ids
+                        else CONTENT_POSITION_DELETES,
+                        "file_path": fp,
+                        "file_format": fmt.upper(),
+                        "partition": pvals,
+                        "record_count": rows,
+                        "file_size_in_bytes": os.path.getsize(fp),
+                        "equality_ids": eq_ids,
+                        **dict(
+                            zip(
+                                ("lower_bounds", "upper_bounds"),
+                                self._file_bounds(fp, fmt)
+                                if content == 0
+                                else (None, None),
+                            )
+                        ),
+                    },
+                }
+                for fp, fmt, rows, pvals, eq_ids in files
+            ],
+            meta={
+                "schema": json.dumps(self._schema_json),
+                "partition-spec": _spec_fields_json(fields),
+                "partition-spec-id": str(spec_id),
+                "format-version": "2",
+                "content": "deletes" if content else "data",
+            },
+            codec="deflate",
+        )
+        return {
+            "manifest_path": path,
+            "manifest_length": os.path.getsize(path),
+            "partition_spec_id": spec_id,
+            "content": content,
+            "sequence_number": self._sequence,
+            "min_sequence_number": self._sequence,
+            "added_snapshot_id": snapshot_id,
+            "added_files_count": len(files),
+            "existing_files_count": 0,
+            "deleted_files_count": 0,
+            "added_rows_count": sum(f[2] for f in files),
+            "existing_rows_count": 0,
+            "deleted_rows_count": 0,
+            "partitions": self._partition_summaries(
+                [f[3] for f in files], fields
+            ),
+        }
+
     def _commit_delete_manifest(
         self,
         snapshot_id: int,
@@ -1204,87 +1239,22 @@ class IcebergTableWriter:
         files: list[tuple[str, int, dict, int, list | None]],
         spec_id: int | None = None,
     ) -> None:
-        """ONE content=1 delete manifest holding every delete file of
-        this snapshot — each entry carries its TYPED partition struct
-        (same spec fields as data manifests; the spec's content=1/2
-        manifests reuse the r102 partition struct), and the manifest-list
-        row carries partition summaries so ``partition_filter`` prunes
-        DELETE manifests exactly like data manifests. ``spec_id``
-        overrides the current spec: position deletes targeting files
-        under an OLDER spec write under that spec's struct, and global
-        equality deletes on a partitioned table write under the
-        unpartitioned spec reference.
-
+        """Append ONE content=1 manifest holding every delete file of
+        this snapshot under ``spec_id`` (see ``_added_manifest``).
         ``files``: (path, record_count, partition_values, content,
-        equality_ids) per delete file."""
-        if spec_id is None:
-            spec_id = self._spec_id
-        spec_fields = self._fields_for_spec(spec_id)
-        spec_json = json.dumps(
-            [
-                {k: pf[k] for k in ("name", "transform", "source-id", "field-id")}
-                for pf in spec_fields
-            ]
-        )
-        manifest_path = os.path.join(self.meta_dir, f"{uuid.uuid4()}-m0.avro")
-        self._avro.write(
-            manifest_path,
-            _manifest_entry_schema(spec_fields),
-            [
-                {
-                    "status": STATUS_ADDED,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,  # inherited from manifest list
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": content,
-                        "file_path": path,
-                        # spec write.delete.format: delete files may be
-                        # any supported format — derive from the name
-                        "file_format": (
-                            os.path.splitext(path)[1].lstrip(".").upper()
-                            or "PARQUET"
-                        ),
-                        "partition": pvals,
-                        "record_count": n_rows,
-                        "file_size_in_bytes": os.path.getsize(path),
-                        "equality_ids": eq_ids,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                    },
-                }
-                for path, n_rows, pvals, content, eq_ids in files
-            ],
-            meta={
-                "schema": json.dumps(self._schema_json),
-                "partition-spec": spec_json,
-                "partition-spec-id": str(spec_id),
-                "format-version": "2",
-                "content": "deletes",
-            },
-            codec="deflate",
-        )
+        equality_ids) per delete file; the format is read off the name
+        (spec write.delete.format: delete files may be any supported
+        format)."""
         self._manifests.append(
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": spec_id,
-                "content": 1,
-                "sequence_number": self._sequence,
-                "min_sequence_number": self._sequence,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(files),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(f[1] for f in files),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": self._partition_summaries(
-                    [f[2] for f in files], fields=spec_fields
-                )
-                if spec_fields
-                else None,
-            }
+            self._added_manifest(
+                snapshot_id,
+                [
+                    (p, os.path.splitext(p)[1].lstrip(".") or "parquet", n, pv, eq)
+                    for p, n, pv, _, eq in files
+                ],
+                content=1,
+                spec_id=spec_id,
+            )
         )
 
     def delete_positions(self, deletes: list[tuple[str, int]]) -> int:
@@ -1329,12 +1299,7 @@ class IcebergTableWriter:
                 ).append((path, posn))
         else:
             by_group[(self._spec_id, ())] = list(deletes)
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
+        with self._new_snapshot() as snapshot_id:
             by_spec: dict[int, list[tuple[str, int, dict, int, list | None]]] = {}
             for i, ((sid, t), rows) in enumerate(
                 sorted(by_group.items(), key=lambda kv: str(kv[0])), 1
@@ -1379,12 +1344,7 @@ class IcebergTableWriter:
         (VERDICT r10 #4 — previously a loud refusal)."""
         if self._schema_json is None:
             raise ValueError("delete_keys before any append")
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
+        with self._new_snapshot() as snapshot_id:
             spec_id, files = self._eq_delete_files(key_cols, keys)
             return self._commit_delete_manifest(snapshot_id, files, spec_id=spec_id)
 
@@ -1566,12 +1526,7 @@ class IcebergTableWriter:
         descs, _ = self._stage_position_delete_files(matched, norm)
         if not descs:
             return self._head_snapshot_id()
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
+        with self._new_snapshot() as snapshot_id:
             self._append_position_delete_manifests(descs, data, snapshot_id)
             return self._commit_snapshot(snapshot_id, "delete")
 
@@ -1724,14 +1679,9 @@ class IcebergTableWriter:
         if bad:
             raise ValueError(f"equality-delete key columns not in schema: {bad}")
         eq_ids = [by_name[c]["id"] for c in key_cols]
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
+        with self._new_snapshot() as snapshot_id:
             del_files: list[tuple[str, int, dict, int, list | None]] = []
-            data_entries: list[tuple[str, int, dict]] = []  # (path, rows, pvals)
+            data_entries: list[tuple] = []  # _added_manifest file tuples
             del_spec_id = self._spec_id
             if self._partition_fields:
                 psrc = [pf["source_name"] for pf in self._partition_fields]
@@ -1808,7 +1758,9 @@ class IcebergTableWriter:
                         pf["name"]: r[c]
                         for c, pf in zip(pt_cols, self._partition_fields)
                     }
-                    data_entries.append((r["data_path"], int(r["rows"]), pvals))
+                    data_entries.append(
+                        (r["data_path"], "parquet", int(r["rows"]), pvals, None)
+                    )
                     if key_covers:
                         del_files.append(
                             (
@@ -1848,69 +1800,9 @@ class IcebergTableWriter:
                     f"00000-{self._version}-{self._uuid}-0-00001.parquet",
                 )
                 n_rows = write_single_parquet(source_df.select(*want), data_path)
-                data_entries.append((data_path, n_rows, {}))
+                data_entries.append((data_path, "parquet", n_rows, {}, None))
             self._append_delete_manifest(snapshot_id, del_files, spec_id=del_spec_id)
-            manifest_path = os.path.join(self.meta_dir, f"{uuid.uuid4()}-m1.avro")
-            self._avro.write(
-                manifest_path,
-                _manifest_entry_schema(self._partition_fields),
-                [
-                    {
-                        "status": STATUS_ADDED,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": None,
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": CONTENT_DATA,
-                            "file_path": dp,
-                            "file_format": "PARQUET",
-                            "partition": pvals,
-                            "record_count": n,
-                            "file_size_in_bytes": os.path.getsize(dp),
-                            "equality_ids": None,
-                            **dict(
-                                zip(
-                                    ("lower_bounds", "upper_bounds"),
-                                    self._file_bounds(dp, "parquet"),
-                                )
-                            ),
-                        },
-                    }
-                    for dp, n, pvals in data_entries
-                ],
-                meta={
-                    "schema": json.dumps(self._schema_json),
-                    "partition-spec": self._spec_json,
-                    "partition-spec-id": str(self._spec_id),
-                    "format-version": "2",
-                    "content": "data",
-                },
-                codec="deflate",
-            )
-            self._manifests.append(
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": self._spec_id,
-                    "content": 0,
-                    "sequence_number": self._sequence,
-                    "min_sequence_number": self._sequence,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(data_entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(n for _, n, _ in data_entries),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                    "partitions": (
-                        self._partition_summaries(
-                            [pv for _, _, pv in data_entries]
-                        )
-                        if self._partition_fields
-                        else None
-                    ),
-                }
-            )
+            self._manifests.append(self._added_manifest(snapshot_id, data_entries))
             return self._commit_snapshot(snapshot_id, "overwrite")
 
     def _commit_snapshot(
@@ -2041,12 +1933,7 @@ class IcebergTableWriter:
                 f"snapshot {snap['snapshot-id']} has no staged manifests "
                 "registered with this writer"
             )
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            new_id = int(uuid.uuid4().int % (1 << 62))
+        with self._new_snapshot() as new_id:
             for mf in staged_mfs:
                 # re-sequence under the publish commit: ADDED entries carry
                 # null sequence numbers and inherit the manifest-list row's
@@ -2140,11 +2027,12 @@ class IcebergTableWriter:
             self._write_metadata(now_ms)
             return target
 
-    # Ceiling for the driver-side distinct-partition-tuple probe in
-    # rewrite_data: partition tuples are metadata-scale (Iceberg's own
-    # rewrite planner enumerates them to build per-partition file groups);
-    # a table with more live partitions than this needs a scoped rewrite,
-    # not a bigger driver list.
+    # Ceiling for the driver-side distinct-partition-tuple probes of the
+    # sorted/ZORDER rewrite_data and of Avro row-level rewrites: partition
+    # tuples are metadata-scale (Iceberg's own rewrite planner enumerates
+    # them to build per-partition file groups); a table with more live
+    # partitions than this needs a scoped rewrite, not a bigger driver
+    # list.
     REWRITE_PARTITION_CEILING = 10_000
 
     def _current_with_lineage(self) -> DataFrame:
@@ -2183,9 +2071,9 @@ class IcebergTableWriter:
         rewritten marking those entries DELETED (untouched entries carry
         forward as EXISTING with their resolved sequence numbers — the
         statuses stock readers reconcile), and the touched files'
-        surviving rows land in one new ADDED file under an `overwrite`
-        snapshot. Untouched files and manifests are never read or
-        rewritten.
+        surviving rows land in new ADDED files (one per partition tuple)
+        under an `overwrite` snapshot. Untouched files and manifests are
+        never read or rewritten.
 
         Scale: touched-file-proportional — the probe pushes the predicate
         into the scan, manifest rewrites are metadata-sized, and only
@@ -2305,18 +2193,14 @@ class IcebergTableWriter:
     ) -> int:
         """Shared COW commit: rewrite manifests containing ``touched``
         files (DELETED/EXISTING statuses, resolved sequence numbers),
-        write ``new_rows`` as one ADDED file, commit an `overwrite`
-        snapshot. Replacement files are written in the TABLE'S default
-        write format (stock honors write.format.default on row-level
-        rewrites, via _append_added_data_manifest) — a CoW delete on an
-        ORC/AVRO table stays ORC/AVRO instead of silently drifting the
-        layout to parquet."""
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
+        write ``new_rows`` as ADDED files (one per partition tuple, none
+        when no row survives), commit an `overwrite` snapshot.
+        Replacement files are written in the TABLE'S default write format
+        (stock honors write.format.default on row-level rewrites, via
+        _append_added_data_manifest) — a CoW delete on an ORC/AVRO table
+        stays ORC/AVRO instead of silently drifting the layout to
+        parquet."""
+        with self._new_snapshot() as snapshot_id:
             new_manifests: list[dict] = []
             # membership by NORMALIZED PATH SET — testing `e in hit` against a
             # list of entry dicts deep-compares dicts: O(entries × hits × entry
@@ -2396,114 +2280,21 @@ class IcebergTableWriter:
         self, new_rows: DataFrame, snapshot_id: int
     ) -> None:
         """Write ``new_rows`` as ADDED data file(s) in the TABLE'S write
-        format under the CURRENT spec — one file per partition tuple (a
-        real partitioned writer's output is per-tuple files) — and append
-        the content=0 manifest. Shared by the CoW rewrite commit and the
-        MoR UPDATE commit; the caller owns version/sequence bumps and the
+        format under the CURRENT spec — ONE staging job writing one file
+        per partition tuple, NULL tuples included (a real partitioned
+        writer's output is per-tuple files) — and append their content=0
+        manifest. Rows-free input adds no file and no manifest. Shared
+        by the CoW rewrite commit, the MoR UPDATE/MERGE commits and
+        compaction; the caller owns version/sequence bumps and the
         snapshot commit."""
-        from .parquet_io import (
-            write_single_avro,
-            write_single_orc,
-            write_single_parquet,
-        )
-
         fmt = self._file_format
-        writer = {
-            "parquet": write_single_parquet,
-            "orc": write_single_orc,
-            "avro": write_single_avro,
-        }[fmt]
-        parts: list[tuple[DataFrame, dict]] = []
-        if self._partition_fields:
-            from ..operators.util import bounded_rows
-
-            tuples = bounded_rows(
-                new_rows.select(
-                    *[self._transform_col(pf).alias(pf["name"])
-                      for pf in self._partition_fields]
-                ).distinct(),
-                10_000,
-            )
-            for r in sorted(tuples, key=lambda r: tuple(str(v) for v in r)):
-                part = new_rows
-                for pf, v in zip(self._partition_fields, r):
-                    part = part.filter(
-                        self._transform_col(pf).eqNullSafe(F.lit(v))
-                    )
-                parts.append(
-                    (part, {pf["name"]: v
-                            for pf, v in zip(self._partition_fields, r)})
-                )
-        else:
-            parts.append((new_rows, {}))
-        added_entries = []
-        total_rows = 0
-        for i, (part, pvals) in enumerate(parts):
-            data_path = os.path.join(
-                self.data_dir,
-                f"00000-{self._version}-{self._uuid}-0-{i + 1:05d}.{fmt}",
-            )
-            n_rows = writer(part, data_path)
-            total_rows += n_rows
-            added_entries.append(
-                {
-                    "status": STATUS_ADDED,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": CONTENT_DATA,
-                        "file_path": data_path,
-                        "file_format": fmt.upper(),
-                        "partition": pvals,
-                        "record_count": n_rows,
-                        "file_size_in_bytes": os.path.getsize(data_path),
-                        "equality_ids": None,
-                        **dict(
-                            zip(
-                                ("lower_bounds", "upper_bounds"),
-                                self._file_bounds(data_path, fmt),
-                            )
-                        ),
-                    },
-                }
-            )
-        manifest_path = os.path.join(self.meta_dir, f"{uuid.uuid4()}-m0.avro")
-        self._avro.write(
-            manifest_path,
-            _manifest_entry_schema(self._partition_fields),
-            added_entries,
-            meta={
-                "schema": json.dumps(self._schema_json),
-                "partition-spec": self._spec_json,
-                "partition-spec-id": str(self._spec_id),
-                "format-version": "2",
-                "content": "data",
-            },
-            codec="deflate",
-        )
-        self._manifests.append(
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": self._spec_id,
-                "content": 0,
-                "sequence_number": self._sequence,
-                "min_sequence_number": self._sequence,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(added_entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": total_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": self._partition_summaries(
-                    [e["data_file"]["partition"] for e in added_entries]
-                )
-                if self._partition_fields
-                else None,
-            }
-        )
+        with self._staged_data([], fmt, spanning=new_rows) as slices:
+            files = [
+                self._adopt(st, fmt, f"00000-{self._version}-{self._uuid}-0-{i:05d}")
+                for i, st in enumerate(slices, 1)
+            ]
+        if files:
+            self._manifests.append(self._added_manifest(snapshot_id, files))
 
     def update_where_mor(
         self, condition: str, assignments: dict[str, str]
@@ -2526,9 +2317,9 @@ class IcebergTableWriter:
 
         Scale: one pushdown probe + matched-row-proportional writes, all
         executor-side — delete parquets group per target file in one
-        shuffle, updated images group per partition tuple; the driver
-        sees only per-file descriptors. Same task-retry orphan contract
-        as delete_where_mor."""
+        shuffle, updated images stage as one file per partition tuple in
+        one job; the driver sees only per-file descriptors. Same
+        task-retry orphan contract as delete_where_mor."""
         if self._schema_json is None:
             raise ValueError("nothing to update: table has no snapshots")
         unknown = [
@@ -2566,11 +2357,8 @@ class IcebergTableWriter:
             if not descs:
                 return self._head_snapshot_id()
             # a failed data write or metadata commit must not leave half
-            # a snapshot in writer state (shared _commit_guard discipline)
-            with self._commit_guard():
-                self._version += 1
-                self._sequence += 1
-                snapshot_id = int(uuid.uuid4().int % (1 << 62))
+            # a snapshot in writer state
+            with self._new_snapshot() as snapshot_id:
                 self._append_position_delete_manifests(
                     descs, data, snapshot_id
                 )
@@ -2647,11 +2435,7 @@ class IcebergTableWriter:
                     gated_broadcast(dup_keys), key_cols, "left_semi"
                 ),
             )
-            # shared _commit_guard discipline (see update_where_mor)
-            with self._commit_guard():
-                self._version += 1
-                self._sequence += 1
-                snapshot_id = int(uuid.uuid4().int % (1 << 62))
+            with self._new_snapshot() as snapshot_id:
                 if descs:
                     self._append_position_delete_manifests(
                         descs, data, snapshot_id
@@ -2819,10 +2603,7 @@ class IcebergTableWriter:
                 has_new = "has_new" in flags
                 if not descs and not has_new:
                     return self._head_snapshot_id()  # no clause fired
-                with self._commit_guard():
-                    self._version += 1
-                    self._sequence += 1
-                    snapshot_id = int(uuid.uuid4().int % (1 << 62))
+                with self._new_snapshot() as snapshot_id:
                     if descs:
                         self._append_position_delete_manifests(
                             descs, data, snapshot_id
@@ -2866,20 +2647,13 @@ class IcebergTableWriter:
 
         from .parquet_io import parquet_column_bounds
 
-        if self._schema_json is None and self._partition_by:
-            raise ValueError("no schema yet: append once before add_files")
         if self._schema_json is None:
             raise ValueError("no schema yet: append once before add_files")
         if not paths:
             raise ValueError("no files to add")
         want = {f["name"] for f in self._schema_json["fields"]}
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
-            entries = []
+        with self._new_snapshot() as snapshot_id:
+            files = []
             for path in paths:
                 got = set(pq.read_schema(path).names)
                 if got != want:
@@ -2993,67 +2767,8 @@ class IcebergTableWriter:
                                 "to exactly one partition"
                             )
                         pvals[pf["name"]] = tlo
-                entries.append(
-                    {
-                        "status": STATUS_ADDED,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": None,
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": CONTENT_DATA,
-                            "file_path": path,
-                            "file_format": "PARQUET",
-                            "partition": pvals,
-                            "record_count": n_rows,
-                            "file_size_in_bytes": os.path.getsize(path),
-                            "equality_ids": None,
-                            **dict(
-                                zip(
-                                    ("lower_bounds", "upper_bounds"),
-                                    self._file_bounds(path, "parquet"),
-                                )
-                            ),
-                        },
-                    }
-                )
-            manifest_path = os.path.join(self.meta_dir, f"{uuid.uuid4()}-m0.avro")
-            self._avro.write(
-                manifest_path,
-                _manifest_entry_schema(self._partition_fields),
-                entries,
-                meta={
-                    "schema": json.dumps(self._schema_json),
-                    "partition-spec": self._spec_json,
-                    "partition-spec-id": str(self._spec_id),
-                    "format-version": "2",
-                    "content": "data",
-                },
-                codec="deflate",
-            )
-            self._manifests.append(
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": self._spec_id,
-                    "content": 0,
-                    "sequence_number": self._sequence,
-                    "min_sequence_number": self._sequence,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(
-                        e["data_file"]["record_count"] for e in entries
-                    ),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                    "partitions": self._partition_summaries(
-                        [e["data_file"]["partition"] for e in entries]
-                    )
-                    if self._partition_fields
-                    else None,
-                }
-            )
+                files.append((path, "parquet", n_rows, pvals, None))
+            self._manifests.append(self._added_manifest(snapshot_id, files))
             return self._commit_snapshot(snapshot_id, "append")
 
     def snapshot_source_parquet(self, source_dir: str) -> int:
@@ -3211,13 +2926,14 @@ class IcebergTableWriter:
         debt → one scan-efficient file per partition), then expire
         (orphaned bytes → reclaimed).
 
-        Scale: the partition-tuple enumeration is a bounded metadata-scale
-        distinct (stock Iceberg's rewrite planner enumerates partitions
-        the same way to form file groups); each partition's rewrite is a
-        partition-pruned distributed scan+write, so total data cost is one
-        pass over live rows regardless of partition count. A production
-        writer runs the per-partition writes as parallel tasks of one job;
-        the per-file manifest metadata committed here is identical.
+        Scale: without a sort order or ``zorder_by`` the live rows are the
+        spanning frame of ONE staging job (``_append_added_data_manifest``):
+        one pass over live rows writes one file per partition tuple, NULL
+        tuples included, as parallel tasks whatever the partition count.
+        A sorted or z-ordered rewrite clusters each partition on its own:
+        a bounded metadata-scale distinct enumerates the tuples (stock
+        Iceberg's rewrite planner forms its file groups the same way), and
+        each tuple's rows are one partition-pruned scan+write.
 
         ``zorder_by`` (round 15 — stock's ``rewrite_data_files(strategy
         => 'sort', sort_order => zorder(...))``, the Iceberg dual of
@@ -3242,16 +2958,15 @@ class IcebergTableWriter:
                     f"cannot zorder partition columns: {sorted(clash)} "
                     "(constant within every file already)"
                 )
-        from .parquet_io import write_single_parquet
-
         current = scan_iceberg_table(self.spark, self.table_dir)
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
-
+        with self._new_snapshot() as snapshot_id:
+            # the replace snapshot's manifest list carries only the new
+            # manifest (none when no row is live)
+            self._manifests = []
+            if not zorder_by and not self._sort_order:
+                # the live rows are the spanning frame of ONE staging job
+                self._append_added_data_manifest(current, snapshot_id)
+                return self._commit_snapshot(snapshot_id, "replace")
             groups: list[dict] = [{}]
             if self._partition_fields:
                 from ..operators.util import bounded_rows
@@ -3272,43 +2987,25 @@ class IcebergTableWriter:
             # CoW rewrites (stock rewrite_data_files writes
             # write.format.default)
             fmt = self._file_format
-            from .parquet_io import write_single_avro, write_single_orc
+            from .parquet_io import (
+                write_single_avro,
+                write_single_orc,
+                write_single_parquet,
+            )
 
             writer = {
                 "parquet": write_single_parquet,
                 "orc": write_single_orc,
                 "avro": write_single_avro,
             }[fmt]
-
-            def _entry(data_path: str, n_rows: int, pvals: dict) -> dict:
-                return {
-                    "status": STATUS_ADDED,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": CONTENT_DATA,
-                        "file_path": data_path,
-                        "file_format": fmt.upper(),
-                        "partition": pvals,
-                        "record_count": n_rows,
-                        "file_size_in_bytes": os.path.getsize(data_path),
-                        "equality_ids": None,
-                        **dict(
-                            zip(
-                                ("lower_bounds", "upper_bounds"),
-                                self._file_bounds(data_path, fmt),
-                            )
-                        ),
-                    },
-                }
-
-            entries = []
+            files = []
             for i, pvals in enumerate(groups):
                 part_df = current
                 for pf in self._partition_fields:
                     part_df = part_df.filter(
-                        self._transform_col(pf) == F.lit(pvals[pf["name"]])
+                        self._transform_col(pf).eqNullSafe(
+                            F.lit(pvals[pf["name"]])
+                        )
                     )
                 if zorder_by:
                     # Morton-clustered rewrite (shared engine — see
@@ -3321,13 +3018,11 @@ class IcebergTableWriter:
                     zcleanup: list = []
                     try:
                         if fmt == "parquet":
-                            import tempfile as _tempfile
-
                             import pyarrow.parquet as _pq
 
                             from .zorder import morton_cluster_files
 
-                            zstage = _tempfile.mkdtemp(prefix="ice-zorder-")
+                            zstage = tempfile.mkdtemp(prefix="ice-zorder-")
                             try:
                                 paths, _n = morton_cluster_files(
                                     part_df, zorder_by, target_files or 1,
@@ -3343,8 +3038,8 @@ class IcebergTableWriter:
                                         _pq.read_metadata(sp).num_rows
                                     )
                                     shutil.move(sp, data_path)
-                                    entries.append(
-                                        _entry(data_path, n_rows, pvals)
+                                    files.append(
+                                        (data_path, fmt, n_rows, pvals, None)
                                     )
                             finally:
                                 shutil.rmtree(zstage, ignore_errors=True)
@@ -3362,12 +3057,14 @@ class IcebergTableWriter:
                                     f"z{i + 1}-{j + 1:05d}.{fmt}",
                                 )
                                 n_rows = writer(fr, data_path)
-                                entries.append(_entry(data_path, n_rows, pvals))
+                                files.append(
+                                    (data_path, fmt, n_rows, pvals, None)
+                                )
                     finally:
                         for h in zcleanup:
                             h.unpersist()
                     continue
-                if self._sort_order and (target_files or 1) > 1:
+                if (target_files or 1) > 1:
                     # RANGE-CLUSTERED rewrite: the persisted sort order splits
                     # each partition into target_files range files (Spark's
                     # sampled range partitioner), so every file covers a
@@ -3376,12 +3073,9 @@ class IcebergTableWriter:
                     # sort-order + data-skipping composition stock Iceberg's
                     # rewrite (sort strategy) exists for. Executor-side
                     # sort-and-write; no driver materialization.
-                    import shutil as _shutil
-                    import tempfile as _tempfile
-
                     import pyarrow.parquet as _pq
 
-                    stage = _tempfile.mkdtemp(prefix="ice-rewrite-")
+                    stage = tempfile.mkdtemp(prefix="ice-rewrite-")
                     try:
                         (
                             part_df.repartitionByRange(target_files, *self._sort_order)
@@ -3412,54 +3106,22 @@ class IcebergTableWriter:
                                 n_rows = writer(
                                     self.spark.read.parquet(staged), data_path
                                 )
-                            entries.append(_entry(data_path, n_rows, pvals))
+                            files.append((data_path, fmt, n_rows, pvals, None))
                     finally:
-                        _shutil.rmtree(stage, ignore_errors=True)
+                        shutil.rmtree(stage, ignore_errors=True)
                     continue
+                # single-file rewrite still honors the persisted order
                 data_path = os.path.join(
                     self.data_dir,
                     f"00000-{self._version}-{self._uuid}-0-{i + 1:05d}.{fmt}",
                 )
-                if self._sort_order:
-                    # single-file rewrite still honors the persisted order
-                    part_df = part_df.coalesce(1).sortWithinPartitions(
-                        *self._sort_order
-                    )
-                n_rows = writer(part_df, data_path)
-                entries.append(_entry(data_path, n_rows, pvals))
-            manifest_path = os.path.join(self.meta_dir, f"{uuid.uuid4()}-m0.avro")
-            self._avro.write(
-                manifest_path,
-                _manifest_entry_schema(self._partition_fields),
-                entries,
-                meta={
-                    "schema": json.dumps(self._schema_json),
-                    "partition-spec": self._spec_json,
-                    "partition-spec-id": str(self._spec_id),
-                    "format-version": "2",
-                    "content": "data",
-                },
-                codec="deflate",
-            )
-            total_rows = sum(e["data_file"]["record_count"] for e in entries)
-            self._manifests = [
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": self._spec_id,
-                    "content": 0,
-                    "sequence_number": self._sequence,
-                    "min_sequence_number": self._sequence,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": total_rows,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                    "partitions": self._partition_summaries(groups),
-                }
-            ]
+                n_rows = writer(
+                    part_df.coalesce(1).sortWithinPartitions(*self._sort_order),
+                    data_path,
+                )
+                files.append((data_path, fmt, n_rows, pvals, None))
+            if files:
+                self._manifests.append(self._added_manifest(snapshot_id, files))
             return self._commit_snapshot(snapshot_id, "replace")
 
     def rewrite_manifests(self) -> int:
@@ -3480,12 +3142,7 @@ class IcebergTableWriter:
         data_mfs = [mf for mf in self._manifests if mf.get("content", 0) == 0]
         if len(data_mfs) <= 1:
             raise ValueError("nothing to consolidate: <= 1 data manifest")
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
+        with self._new_snapshot() as snapshot_id:
             by_spec: dict[int, list[dict]] = {}
             stats: dict[int, list[int]] = {}
             for mf in data_mfs:
@@ -3520,17 +3177,7 @@ class IcebergTableWriter:
                     entries,
                     meta={
                         "schema": json.dumps(self._schema_json),
-                        "partition-spec": json.dumps(
-                            [
-                                {
-                                    k: pf[k]
-                                    for k in (
-                                        "name", "transform", "source-id", "field-id"
-                                    )
-                                }
-                                for pf in spec_fields
-                            ]
-                        ),
+                        "partition-spec": _spec_fields_json(spec_fields),
                         "partition-spec-id": str(sid),
                         "format-version": "2",
                         "content": "data",
@@ -3555,9 +3202,7 @@ class IcebergTableWriter:
                         "partitions": self._partition_summaries(
                             [e["data_file"].get("partition") or {} for e in entries],
                             fields=spec_fields,
-                        )
-                        if spec_fields
-                        else None,
+                        ),
                     }
                 )
             self._manifests = [
@@ -3665,10 +3310,6 @@ class IcebergTableWriter:
             re.sub(r"^file:/+", "/", f["file_path"]): f["file_path"]
             for f in data
         }
-        pmap = {
-            f["file_path"]: (f.get("partition") or {}, f.get("_spec_id", 0))
-            for f in data
-        }
         pairs = (
             _read_position_delete_pairs(self.spark, pos)
             .select(
@@ -3682,10 +3323,7 @@ class IcebergTableWriter:
         )
         # dangling rows (target no longer live) drop here
         matched = pairs.join(F.broadcast(live_df), "_file", "left_semi")
-        # restore-on-failure for everything mutated on the way to
-        # the commit (shared _commit_guard discipline)
-        with self._commit_guard():
-            self._version += 1
+        with self._new_snapshot() as snapshot_id:
             stem = os.path.join(
                 self.data_dir,
                 f"00000-{self._version}-{self._uuid}-rewrite-deletes-",
@@ -3697,18 +3335,7 @@ class IcebergTableWriter:
                 )
             )
             self._manifests = keep
-            self._sequence += 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
-            by_spec: dict[int, list[tuple[str, int, dict, int, list | None]]] = {}
-            for r in sorted(descs, key=lambda r: r["path"]):
-                pv, sid = pmap[r["file"]]
-                flds = self._fields_for_spec(sid)
-                pvals = {pf["name"]: pv.get(pf["name"]) for pf in flds}
-                by_spec.setdefault(sid, []).append(
-                    (r["path"], int(r["rows"]), pvals, CONTENT_POSITION_DELETES, None)
-                )
-            for sid, files in sorted(by_spec.items()):
-                self._append_delete_manifest(snapshot_id, files, spec_id=sid)
+            self._append_position_delete_manifests(descs, data, snapshot_id)
             return self._commit_snapshot(snapshot_id, "replace")
 
     def expire_snapshots(

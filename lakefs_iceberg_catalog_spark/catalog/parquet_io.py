@@ -4,8 +4,10 @@
 writers (and the streaming spool), and the only writer of Delta change
 files: every add frame of a call — one for ``commit``/``append``, N for
 ``commit_many``/``append_many`` — plus at most one frame spanning
-partition tuples (Delta MERGE output, UPDATE images, change rows) is
-written by ONE distributed job, ``partitionBy("_slice", <partition
+partition tuples (Delta MERGE output, UPDATE images, change rows and
+OPTIMIZE/REORG rewrites; Iceberg row-level rewrites — CoW DELETE/UPDATE/
+MERGE survivors, MoR UPDATE/MERGE images — and compaction) is written by
+ONE distributed job, ``partitionBy("_slice", <partition
 values>)``. Each single-valued slice lands as exactly one file whose
 partition values are read off the directory names, and the spanning
 frame lands as one file per tuple directory. Those directories are also
@@ -181,8 +183,9 @@ def staged_slices(
     or, on a partitioned write, no rows at all ("got none"). Each of
     these frames is coalesced to one task.
 
-    ``spanning`` is a frame whose rows may span partition tuples (MERGE
-    output, UPDATE images, change rows). It is hash-partitioned on
+    ``spanning`` is a frame whose rows may span partition tuples (Delta
+    MERGE output, UPDATE images, change rows and OPTIMIZE/REORG rewrites;
+    Iceberg row-level rewrites and compaction). It is hash-partitioned on
     ``parts`` over ``defaultParallelism`` tasks, so each tuple lands in
     one task and one file; without ``parts`` it is coalesced to one task.
     Its slices follow the frames' in ``slices``, one per written file

@@ -3788,3 +3788,165 @@ def test_append_many_temporal_transform_fast_path(spark, tmp_path):
     wb = IcebergTableWriter(spark, d_bad, partition_by=["months(o_orderdate)"])
     with _pytest.raises(ValueError, match="one distinct partition-value"):
         wb.append_many([slices[0], o])
+
+
+def _five_tuple_table(spark, d, null_tuple=False, **kw):
+    """A nation table partitioned by n_regionkey: one append per region
+    (5 partition tuples); with ``null_tuple`` region 4's rows carry a
+    NULL n_regionkey instead, so the fifth tuple is the NULL one."""
+    n = _nation(spark)
+    slices = [n.filter(F.col("n_regionkey") == rk) for rk in range(5)]
+    if null_tuple:
+        slices[4] = slices[4].withColumn(
+            "n_regionkey", F.lit(None).cast(n.schema["n_regionkey"].dataType)
+        )
+    w = IcebergTableWriter(spark, d, partition_by=["n_regionkey"], **kw)
+    w.append_many(slices)
+    return w
+
+
+@pytest.mark.parametrize(
+    "fmt,sort", [("parquet", False), ("avro", False), ("parquet", True)]
+)
+def test_rewrite_data_keeps_null_partition_rows(spark, tmp_path, fmt, sort):
+    """Compaction of a table whose fifth partition tuple is NULL keeps
+    every row: the NULL tuple's rows land in their own file with a NULL
+    partition value (the per-tuple ``==`` filter once matched nothing
+    there and dropped 5 of 25 rows)."""
+    d = str(tmp_path / "nullpart")
+    w = _five_tuple_table(spark, d, null_tuple=True, file_format=fmt)
+    if sort:
+        w.set_sort_order(["n_nationkey"])
+    before = sorted(map(tuple, scan_iceberg_table(spark, d).collect()))
+    assert len(before) == 25
+    w.rewrite_data()
+    after = sorted(map(tuple, scan_iceberg_table(spark, d).collect()))
+    assert after == before
+    data, _ = iceberg_snapshot_files(d)
+    assert sorted(
+        (str(f["partition"]["n_regionkey"]), f["record_count"]) for f in data
+    ) == [("0", 5), ("1", 5), ("2", 5), ("3", 5), ("None", 5)]
+    nulls = scan_iceberg_table(spark, d).filter("n_regionkey is null")
+    assert sorted(r["n_nationkey"] for r in nulls.collect()) == sorted(
+        r["n_nationkey"] for r in _nation(spark).filter("n_regionkey = 4").collect()
+    )
+
+
+def test_row_level_rewrites_stage_once(spark, tmp_path, monkeypatch):
+    """On a 5-tuple table every row-level rewrite writes its new data
+    files through ONE staging call (one file per touched tuple), never
+    through the single-file writers."""
+    from lakefs_iceberg_catalog_spark.catalog import parquet_io
+
+    calls = {"staged": 0, "single": 0}
+    real = parquet_io.staged_slices
+
+    def spy(*a, **k):
+        calls["staged"] += 1
+        return real(*a, **k)
+
+    def single(*a, **k):
+        calls["single"] += 1
+        raise AssertionError("single-file write on a row-level rewrite")
+
+    d = str(tmp_path / "stage1")
+    w = _five_tuple_table(spark, d)
+    # the k-th smallest nation key of every region: each predicate below
+    # touches all five tuples
+    by_region: dict = {}
+    for r in _nation(spark).collect():
+        by_region.setdefault(r["n_regionkey"], []).append(r["n_nationkey"])
+    kth = [sorted(sorted(ks)[k] for ks in by_region.values()) for k in range(3)]
+    monkeypatch.setattr(parquet_io, "staged_slices", spy)
+    monkeypatch.setattr(parquet_io, "write_single_parquet", single)
+    monkeypatch.setattr(parquet_io, "write_single_orc", single)
+    for op in (
+        lambda: w.delete_where_cow(f"n_nationkey in {tuple(kth[0])}"),
+        lambda: w.update_where_cow(
+            f"n_nationkey in {tuple(kth[1])}", {"n_name": "'C'"}
+        ),
+        lambda: w.update_where_mor(
+            f"n_nationkey in {tuple(kth[2])}", {"n_name": "'M'"}
+        ),
+    ):
+        calls.update(staged=0, single=0)
+        op()
+        assert calls == {"staged": 1, "single": 0}, calls
+    rows = {
+        r["n_nationkey"]: r["n_name"]
+        for r in scan_iceberg_table(spark, d).collect()
+    }
+    assert len(rows) == 20 and not set(kth[0]) & set(rows)
+    assert sorted(k for k, v in rows.items() if v == "C") == kth[1]
+    assert sorted(k for k, v in rows.items() if v == "M") == kth[2]
+    # one new file per touched tuple, typed partitions intact
+    data, _ = iceberg_snapshot_files(d)
+    added = [f for f in data if f["record_count"] == 1]
+    assert sorted(f["partition"]["n_regionkey"] for f in added) == list(range(5))
+    pruned = scan_iceberg_table(spark, d, partition_filter={"n_regionkey": 2})
+    assert pruned.count() == 4
+
+
+def test_cow_delete_of_whole_file_adds_no_empty_file(spark, tmp_path):
+    """A CoW DELETE that removes every row of the file it touches adds
+    no data file and no manifest: there are no surviving rows to land
+    (a 0-row data file used to be committed)."""
+    n = _nation(spark).select("n_nationkey", "n_name")
+    d = str(tmp_path / "wholefile")
+    w = IcebergTableWriter(spark, d)
+    w.append(n.filter("n_nationkey < 10"))
+    w.append(n.filter("n_nationkey >= 10"))
+    w.delete_where_cow("n_nationkey < 10")
+    data, _ = iceberg_snapshot_files(d)
+    assert [f["record_count"] for f in data] == [15]
+    meta = read_table_metadata(d)
+    summary = meta["snapshots"][-1]["summary"]
+    assert summary["operation"] == "overwrite"
+    assert summary["added-data-files"] == "0"
+    cur = meta["current-snapshot-id"]
+    assert not [m for m in w._manifests if m["added_snapshot_id"] == cur]
+    assert scan_iceberg_table(spark, d).count() == 15
+
+
+def test_wap_commit_failure_leaves_writer_clean(spark, tmp_path):
+    """A WAP-staged append whose metadata write fails restores every
+    writer field: no phantom staged snapshot, no staged manifest in
+    main's live set, the wap id stays unpublished, and the next append
+    and a retried stage behave as if the failure never happened."""
+    n = _nation(spark).select("n_nationkey", "n_name")
+    d = str(tmp_path / "wapfail")
+    w = IcebergTableWriter(spark, d)
+    w.append(n.filter("n_nationkey < 10"))
+
+    def state():
+        return (
+            len(w._snapshots), w._version, w._sequence,
+            list(w._manifests), set(w._staged_ids),
+            dict(w._staged_manifests), dict(w._pending_summary),
+            w._current_snapshot_id,
+        )
+
+    pre = state()
+    real = w._write_metadata
+
+    def boom(now_ms):
+        raise OSError("simulated metadata write failure")
+
+    w._write_metadata = boom
+    with pytest.raises(OSError, match="simulated"):
+        w.append(n.filter("n_nationkey between 10 and 14"), wap_id="w1")
+    w._write_metadata = real
+    assert state() == pre
+    with pytest.raises(ValueError, match="no staged snapshot"):
+        w.cherry_pick_snapshot(wap_id="w1")
+    # the next plain append carries no staged rows
+    w.append(n.filter("n_nationkey >= 15"))
+    assert scan_iceberg_table(spark, d).count() == 20
+    meta = read_table_metadata(d)
+    assert len(meta["snapshots"]) == 2
+    assert not any("wap.id" in s["summary"] for s in meta["snapshots"])
+    # a retried stage works and publishes exactly its rows
+    w.append(n.filter("n_nationkey between 10 and 14"), wap_id="w1")
+    assert scan_iceberg_table(spark, d).count() == 20
+    w.cherry_pick_snapshot(wap_id="w1")
+    assert scan_iceberg_table(spark, d).count() == 25
