@@ -128,35 +128,21 @@ def _parquet_num_rows(path: str) -> int:
 
 
 def _footer_stats(path: str) -> dict:
-    """Per-column [min, max] from the parquet footer (JSON-safe types only:
-    int/float/str). Missing/odd columns are simply absent — scans then never
-    skip on them."""
-    try:
-        import pyarrow.parquet as pq
+    """Per-column [min, max] from the parquet footer: the JSON-safe
+    (int/float/str) view of ``parquet_io.parquet_column_bounds``. A column
+    lacking min/max in any row group, a non-JSON bound type and an
+    unreadable footer are simply absent — scans then never skip on them."""
+    from .parquet_io import parquet_column_bounds
 
-        md = pq.ParquetFile(path).metadata
+    try:
+        bounds = parquet_column_bounds(path)
     except Exception:
         return {}
-    agg: dict[str, list] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            st = col.statistics
-            try:
-                if st is None or not st.has_min_max:
-                    continue
-                mn, mx = st.min, st.max
-            except Exception:
-                continue  # e.g. pyarrow can't extract decimal stats
-            if not isinstance(mn, (int, float, str)) or not isinstance(mx, (int, float, str)):
-                continue
-            name = col.path_in_schema
-            if name in agg:
-                agg[name] = [min(agg[name][0], mn), max(agg[name][1], mx)]
-            else:
-                agg[name] = [mn, mx]
-    return agg
+    return {
+        c: [lo, hi]
+        for c, (lo, hi) in bounds.items()
+        if isinstance(lo, (int, float, str)) and isinstance(hi, (int, float, str))
+    }
 
 
 _SIMPLE_PRED_RE = re.compile(
@@ -423,23 +409,6 @@ def _pvals_exclude(pvals: dict, interval) -> bool:
     if hi is not None and fb > hi:
         return True
     return False
-
-
-def _decode_partition_value(raw: str, dtype: T.DataType | None):
-    """Decode a hive-encoded partition dir value (``col=value``) to the
-    column's Python value: %XX-unescaped, typed by the declared schema
-    (JSON-safe — int for integral types, float for fractional, str
-    otherwise); the hive NULL sentinel maps to None."""
-    from urllib.parse import unquote
-
-    if raw == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    s = unquote(raw)
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return int(s)
-    if isinstance(dtype, (T.FloatType, T.DoubleType)):
-        return float(s)
-    return s
 
 
 _INT_WIDTH = {T.ByteType: 0, T.ShortType: 1, T.IntegerType: 2, T.LongType: 3}
@@ -895,151 +864,112 @@ class VersionedCatalog:
     def _write_data(
         self,
         levels: list[str],
-        df: DataFrame,
+        dfs: DataFrame | list[DataFrame],
         cluster_by: list[str] | None = None,
         cluster_files: int = 8,
         partition_by: list[str] | None = None,
         bucket_spec: dict | None = None,
         zorder_by: list[str] | None = None,
-    ) -> tuple[list[str], dict, dict]:
-        """Write df as parquet part files under the table's data/ dir on THIS
-        branch; return (repo-relative paths, per-file column min/max stats).
-        The write is a distributed Spark job; only the file rename/move and
-        footer-stat harvest are driver-side metadata work — the same division
-        of labor as Iceberg's manifest writer.
+    ):
+        """Write every frame of ``dfs`` as parquet files under the table's
+        data/ dir on THIS branch, in ONE ``parquet_io.staged_slices`` job;
+        return ``(repo-relative paths, per-file column min/max stats,
+        per-file partition values)`` per frame — one triple when ``dfs`` is
+        a single frame. Only the file moves and footer reads are driver-side
+        metadata work, the same division of labor as Iceberg's manifest
+        writer. Without partition columns every non-empty task writes one
+        file; with several frames a ``_v`` staging column keeps them apart.
 
-        ``cluster_by`` RANGE-partitions rows on the given columns into an
-        EXPLICIT ``cluster_files`` partitions (explicit so AQE can't
-        coalesce the small fixture write into one file and erase the
-        file-level stat locality; at real scale this count comes from the
-        target file size) and sorts within each. Range distribution —
-        Iceberg's ``write.distribution-mode=range`` — gives every file a
-        CONTIGUOUS, non-overlapping key range, so footer min/max stats
-        prune both equality AND range predicates; hash distribution would
-        scatter the key range across every file and leave min/max spanning
-        the whole domain (measured: zero files skippable).
+        - ``partition_by`` (identity spec) and ``bucket_spec`` (Iceberg's
+          bucket[N] / days / truncate[W], keyed by a derived ``_bucket``
+          column that never reaches the pages) stage on their partition
+          columns, all frames through ONE exchange (``per_tuple``): each
+          file holds one tuple of one frame under hive ``data/col=value/``
+          dirs. The values live in the manifest, not the pages, typed and
+          zone-free — timestamps as epoch microseconds, "" apart from NULL,
+          dates, decimals and booleans as their text — and scans re-inject
+          them as per-file constants.
+        - ``cluster_by`` RANGE-partitions rows into an EXPLICIT
+          ``cluster_files`` tasks (explicit so AQE can't coalesce the small
+          write into one file and erase the file-level stat locality) and
+          sorts within each. Range distribution — Iceberg's
+          ``write.distribution-mode=range`` — gives every file a contiguous,
+          non-overlapping key range, so footer min/max stats prune equality
+          AND range predicates; hash distribution would scatter the key
+          range across every file.
+        - ``zorder_by`` range-distributes on the Morton key
+          (``zorder._zkey_expr`` over one min/max row; Iceberg's
+          rewrite_data_files zorder / Delta OPTIMIZE ZORDER BY): every file
+          covers a compact hyper-rectangle, so selective predicates on ANY
+          of the dimensions skip files.
+        - Otherwise a frame is written as it comes (a compaction's
+          ``coalesce(N)`` included)."""
+        from .parquet_io import per_tuple, staged_slices
+        from .zorder import _zkey_expr
 
-        ``partition_by`` (identity partition spec, mutually exclusive with
-        cluster_by) writes hive-layout dirs (``data/col=value/...``) via
-        Spark's distributed partitioned write, so every data file belongs to
-        exactly ONE partition; returns their {col: value} tuples as the
-        third element. The partition column's values live in metadata, not
-        pages — scans re-inject them as per-file constants."""
-        if cluster_by:
-            df = df.repartitionByRange(
+        frames = dfs if isinstance(dfs, list) else [dfs]
+        schema = frames[0].schema
+        parts, derived = list(partition_by or []), {}
+        # the staged values are the manifest's: timestamps as zone-free
+        # micros, other non-numeric types as their (JSON-safe) text
+        for p in parts:
+            dt = schema[p].dataType
+            if isinstance(dt, T.TimestampType):
+                derived[p] = F.unix_micros(F.col(p))
+            elif not isinstance(
+                dt, (T.IntegralType, T.FloatType, T.DoubleType, T.StringType)
+            ):
+                derived[p] = F.col(p).cast("string")
+        if bucket_spec:
+            parts, derived = ["_bucket"], {"_bucket": _layout_col(bucket_spec)}
+        many = len(frames) > 1
+        keys = (["_v"] if many else []) + parts
+        if many:
+            frames = [d.withColumn("_v", F.lit(i)) for i, d in enumerate(frames)]
+        u = functools.reduce(DataFrame.unionByName, frames)
+        if derived:
+            u = u.withColumns(derived)
+        if parts:
+            u = per_tuple(u, keys)
+        elif cluster_by:
+            u = u.repartitionByRange(
                 cluster_files, *[F.col(c) for c in cluster_by]
             ).sortWithinPartitions(*cluster_by)
         elif zorder_by:
-            # Z-ORDER clustering (Iceberg's rewrite_data_files zorder / the
-            # Delta OPTIMIZE ZORDER BY analog): quantize each dimension to
-            # 8-bit bins over its global min/max, bit-interleave the bins
-            # into one Morton key, then range-distribute + sort on that key.
-            # Every file then covers a compact HYPER-RECTANGLE of the key
-            # space, so footer min/max stats on EACH zorder column stay
-            # narrow and selective predicates on ANY of the dimensions skip
-            # files — linear cluster_by can only do that for its leading
-            # column. The min/max pre-pass is one parallel aggregate
-            # (Iceberg's zorder rewrite samples the same bounds); the
-            # interleave is pure integer codegen, and the Morton key is
-            # dropped before the write so it never reaches the pages.
-            bounds = df.agg(
+            bounds = u.agg(
                 *[F.min(c).alias(f"mn_{c}") for c in zorder_by],
                 *[F.max(c).alias(f"mx_{c}") for c in zorder_by],
             ).collect()[0]
-            nbits = 8
-            bins = []
-            for c in zorder_by:
-                mn = float(bounds[f"mn_{c}"])
-                span = float(bounds[f"mx_{c}"]) - mn
-                scaled = (
-                    (F.col(c).cast("double") - F.lit(mn))
-                    * F.lit((2 ** nbits - 1) / span if span > 0 else 0.0)
-                )
-                bins.append(F.floor(scaled).cast("long"))
-            zkey = F.lit(0).cast("long")
-            for bit in range(nbits):
-                for ci, b in enumerate(bins):
-                    pos = bit * len(bins) + ci
-                    zkey = zkey + F.shiftleft(
-                        F.shiftright(b, bit).bitwiseAND(F.lit(1)), pos
-                    )
-            df = (
-                df.withColumn("_zkey", zkey)
+            u = (
+                u.withColumn("_zkey", _zkey_expr(bounds, zorder_by))
                 .repartitionByRange(cluster_files, F.col("_zkey"))
                 .sortWithinPartitions("_zkey")
                 .drop("_zkey")
             )
         repo = levels[0]
-        table_dir = os.path.join(self.root, *levels)
-        data_dir = os.path.join(table_dir, "data")
+        data_dir = os.path.join(self.root, *levels, "data")
         os.makedirs(data_dir, exist_ok=True)
-        staging = os.path.join(table_dir, f".staging-{_uuid.uuid4().hex}")
-        # EXPLICIT partition count on the keyed repartitions below: with an
-        # implicit count AQE coalesces the (byte-wise small) shuffle to ONE
-        # task and the whole partitioned write serializes behind a single
-        # parquet encoder (measured 3.5 s single-task on the truncate-slab
-        # write at sf0.1). defaultParallelism scales with the cluster, so
-        # this is not a local-only constant; the file SET is unchanged
-        # either way — the writer splits by partition value, and each value
-        # hashes to exactly one task.
-        n_write_tasks = df.sparkSession.sparkContext.defaultParallelism
-        if partition_by:
-            # one shuffle co-locates each partition's rows (few output files
-            # per partition; at real scale the count per partition follows
-            # the target file size instead)
-            df = df.repartition(n_write_tasks, *[F.col(c) for c in partition_by])
-            df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
-        elif bucket_spec:
-            # hidden-partition transform (Iceberg's bucket[N] / days /
-            # truncate[W]): rows route into dirs keyed by a DERIVED value;
-            # the synthetic _bucket column exists only in the dir name (hive
-            # write drops it) — the source column itself stays in the pages,
-            # so queries filter on the column and pruning happens on the
-            # transform (predicate projection in _layout_interval)
-            bcol = _layout_col(bucket_spec)
-            df = df.withColumn("_bucket", bcol).repartition(
-                n_write_tasks, F.col("_bucket")
-            )
-            df.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
-        else:
-            df.write.mode("overwrite").parquet(staging)
-        schema_types = {f.name: f.dataType for f in df.schema.fields}
-        out, stats, fparts = [], {}, {}
-        stamp = _uuid.uuid4().hex[:12]
-        i = 0
-        for dirpath, _, filenames in sorted(os.walk(staging)):
-            rel_dir = os.path.relpath(dirpath, staging)
-            pvals = {}
-            if rel_dir != ".":
-                for comp in rel_dir.split(os.sep):
-                    if "=" not in comp:
-                        continue
-                    col, raw = comp.split("=", 1)
-                    pvals[col] = _decode_partition_value(
-                        raw, schema_types.get(col)
-                    )
-            for name in sorted(filenames):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                if _parquet_num_rows(src) == 0:
-                    continue  # empty part files carry no stats and no data
-                tgt_dir = (
-                    os.path.join(data_dir, rel_dir) if rel_dir != "." else data_dir
+        out = [([], {}, {}) for _ in frames]
+        stamps = [_uuid.uuid4().hex[:12] for _ in frames]
+        with staged_slices([], keys, spanning=u) as (slices, _):
+            for st in slices:
+                i = st.values[0] if many else 0
+                files, stats, fparts = out[i]
+                # the staged file's last len(parts) dirs are its hive dirs
+                dst_dir = os.path.join(
+                    data_dir, *st.path.split(os.sep)[-1 - len(parts):-1]
                 )
-                os.makedirs(tgt_dir, exist_ok=True)
-                dst = os.path.join(tgt_dir, f"{stamp}-{i:05d}.parquet")
-                os.replace(src, dst)
+                os.makedirs(dst_dir, exist_ok=True)
+                dst = os.path.join(dst_dir, f"{stamps[i]}-{len(files):05d}.parquet")
+                shutil.move(st.path, dst)
                 rel = self._rel(repo, dst)
-                out.append(rel)
+                files.append(rel)
                 fs = _footer_stats(dst)
                 if fs:
                     stats[rel] = fs
-                if pvals:
-                    fparts[rel] = pvals
-                i += 1
-        shutil.rmtree(staging)
-        return out, stats, fparts
+                if parts:
+                    fparts[rel] = dict(zip(parts, st.values[-len(parts):]))
+        return out if isinstance(dfs, list) else out[0]
 
     def _read_files(
         self, repo: str, manifest: TableManifest, with_positions: bool = False
@@ -1149,7 +1079,11 @@ class VersionedCatalog:
                 if written is None:
                     return F.lit(None).cast(cur_type).alias(name)
                 if written in pvals:
-                    return F.lit(pvals[written]).cast(cur_type).alias(name)
+                    v = pvals[written]
+                    if isinstance(cur_type, T.TimestampType) and isinstance(v, int):
+                        # epoch micros; legacy text goes through the cast
+                        return F.timestamp_micros(F.lit(v)).alias(name)
+                    return F.lit(v).cast(cur_type).alias(name)
                 members = struct_fields[str(c["id"])]
                 if members and isinstance(cur_type, T.StructType):
                     wmap = fsmap.get(str(c["id"]), {})
@@ -1307,36 +1241,9 @@ class VersionedCatalog:
 
     def append(self, identifier: str | list[str], df: DataFrame) -> None:
         """Append snapshot: new data files + manifest listing old∪new
-        (reference: df.writeTo(...).append(), TestLakeFSCatalogSpark.java:76).
-
-        Concurrency: a lost commit race is REBASED, not failed — the new
-        data files are independent of any concurrent commit, so the append
-        refreshes the base and re-commits its files on top (Iceberg's
-        fast-append retry). The expensive distributed write runs exactly
-        once; only the metadata commit loops. Rebase is refused (raising
-        the original conflict) if the concurrent commit changed the schema
-        or partition spec — the already-written files may no longer
-        conform — or after a bounded number of rounds."""
-        ops, levels = self._ops(identifier)
-        base = ops.current()
-        if base is None:
-            raise NoSuchTableError(".".join(levels))
-        schema = T.StructType.fromJson(json.loads(base.schema_json))
-        aligned = df if df.schema == schema else _align_to_schema(df, schema)
-        files, stats, fparts = self._write_data(
-            levels, aligned, partition_by=base.partition_spec or None,
-            bucket_spec=base.bucket_spec or None
-        )
-        self._commit_rebasing(
-            ops,
-            base,
-            lambda b: b.next(
-                b.files + files,
-                file_stats={**b.file_stats, **stats},
-                file_partitions=fparts,
-            ),
-            same_layout=True,
-        )
+        (reference: df.writeTo(...).append(), TestLakeFSCatalogSpark.java:76)
+        — the one-frame ``append_many``."""
+        self.append_many(identifier, [df])
 
     @staticmethod
     def _commit_rebasing(ops, base, build, same_layout: bool) -> None:
@@ -1379,81 +1286,45 @@ class VersionedCatalog:
         self, identifier: str | list[str], dfs: list[DataFrame]
     ) -> None:
         """N consecutive append snapshots whose data files are staged by
-        ONE distributed write job, then committed in order as N
-        metadata-only commits — same table state as N ``append`` calls
-        (same files-per-version, per-file stats and row order; file names
-        are uuid-stamped either way), at 1 Spark job instead of N.
+        ONE distributed write job (``_write_data``), then committed in
+        order as N metadata-only commits — the table state of N one-frame
+        appends (same files per version, per-file stats and partition
+        values; file names are uuid-stamped either way). A frame without
+        rows commits a version without files.
 
-        How one job reproduces the sequential twin's file layout: each
-        frame keeps its OWN partitioning (union is narrow — no coalesce),
-        frames union with a slice index, and ``partitionBy(_slice)``
-        makes every task write exactly one file for its own slice — so
-        slice i yields one file per non-empty input partition of frame i,
-        the same count the per-frame write yields after ``_write_data``'s
-        zero-row skip. Partitioned/bucketed tables and single-frame calls
-        take the per-frame ``append`` path (their writer shuffles each
-        frame into its own layout, which a shared staging job cannot
-        reproduce)."""
+        Concurrency: a lost commit race is REBASED, not failed — the new
+        data files are independent of any concurrent commit, so the commit
+        refreshes its base and re-commits the files on top (Iceberg's
+        fast-append retry). The distributed write runs exactly once; only
+        the metadata commit loops. Rebase is refused (raising the original
+        conflict) if the concurrent commit changed the schema or partition
+        spec — the written files may no longer conform — or after a bounded
+        number of rounds."""
         ops, levels = self._ops(identifier)
         base = ops.current()
         if base is None:
             raise NoSuchTableError(".".join(levels))
-        if len(dfs) < 2 or base.partition_spec or base.bucket_spec:
-            for d in dfs:
-                self.append(identifier, d)
+        if not dfs:
             return
         schema = T.StructType.fromJson(json.loads(base.schema_json))
-        aligned = [
-            d if d.schema == schema else _align_to_schema(d, schema)
-            for d in dfs
-        ]
-        repo = levels[0]
-        table_dir = os.path.join(self.root, *levels)
-        data_dir = os.path.join(table_dir, "data")
-        os.makedirs(data_dir, exist_ok=True)
-        staging = os.path.join(table_dir, f".staging-{_uuid.uuid4().hex}")
-        u = None
-        for i, d in enumerate(aligned):
-            s = d.withColumn("_slice", F.lit(i))
-            u = s if u is None else u.unionByName(s)
-        try:
-            u.write.mode("overwrite").partitionBy("_slice").parquet(staging)
-            for i in range(len(aligned)):
-                sdir = os.path.join(staging, f"_slice={i}")
-                out: list[str] = []
-                stats: dict = {}
-                stamp = _uuid.uuid4().hex[:12]
-                j = 0
-                if os.path.isdir(sdir):
-                    for name in sorted(os.listdir(sdir)):
-                        if not name.endswith(".parquet"):
-                            continue
-                        src = os.path.join(sdir, name)
-                        if _parquet_num_rows(src) == 0:
-                            continue
-                        dst = os.path.join(
-                            data_dir, f"{stamp}-{j:05d}.parquet"
-                        )
-                        os.replace(src, dst)
-                        rel = self._rel(repo, dst)
-                        out.append(rel)
-                        fs = _footer_stats(dst)
-                        if fs:
-                            stats[rel] = fs
-                        j += 1
-                # metadata-only commit per slice, with append's rebase-retry
-                self._commit_rebasing(
-                    ops,
-                    base,
-                    lambda b: b.next(
-                        b.files + out,
-                        file_stats={**b.file_stats, **stats},
-                    ),
-                    same_layout=True,
-                )
-                base = ops.current()
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        written = self._write_data(
+            levels,
+            [d if d.schema == schema else _align_to_schema(d, schema) for d in dfs],
+            partition_by=base.partition_spec or None,
+            bucket_spec=base.bucket_spec or None,
+        )
+        for files, stats, fparts in written:
+            self._commit_rebasing(
+                ops,
+                base,
+                lambda b: b.next(
+                    b.files + files,
+                    file_stats={**b.file_stats, **stats},
+                    file_partitions=fparts,
+                ),
+                same_layout=True,
+            )
+            base = ops.current()
 
     def add_files(self, identifier: str | list[str], source_dir: str) -> int:
         """Bulk file import (Iceberg's ``add_files`` procedure): register
@@ -1906,26 +1777,14 @@ class VersionedCatalog:
         scoping, DISABLED when any key is NULL — min/max ranges never
         witness NULLs, so a file excluded by range could still hold the
         NULL-keyed rows the delete must remove."""
-        table_dir = os.path.join(self.root, *levels)
-        ddir = os.path.join(table_dir, "data", "deletes")
+        from .parquet_io import write_single_parquet
+
+        ddir = os.path.join(self.root, *levels, "data", "deletes")
         os.makedirs(ddir, exist_ok=True)
-        staging = os.path.join(table_dir, f".staging-eq-{_uuid.uuid4().hex}")
-        keys.dropDuplicates().coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(
-            (
-                os.path.join(dp, n)
-                for dp, _, ns in sorted(os.walk(staging))
-                for n in sorted(ns)
-                if n.endswith(".parquet") and _parquet_num_rows(os.path.join(dp, n)) > 0
-            ),
-            None,
-        )
-        if part is None:
-            shutil.rmtree(staging, ignore_errors=True)
-            return None, None
         dst = os.path.join(ddir, f"eqdel-{_uuid.uuid4().hex[:12]}.parquet")
-        os.replace(part, dst)
-        shutil.rmtree(staging, ignore_errors=True)
+        if not write_single_parquet(keys.dropDuplicates(), dst):
+            os.remove(dst)
+            return None, None
         key_range = None
         if len(key_cols) == 1:
             try:
@@ -2624,34 +2483,16 @@ class VersionedCatalog:
             bucket_spec=d.get("bucket_spec", {}) or {}, schema_json=d["schema_json"]
         )
         interval = _layout_interval(shim, col, op, value)
-        dtype = None
-        if col in (d.get("partition_spec") or []):
-            st = T.StructType.fromJson(json.loads(d["schema_json"]))
-            dtype = {f.name: f.dataType for f in st.fields}.get(col)
+        identity = col in (d.get("partition_spec") or [])
 
         def keep_shard(pvals: dict) -> bool:
+            # the stored partition value is typed: the shard's [v, v]
+            # range takes the per-file stats test (NULL and incomparable
+            # probes keep the shard; the residual filter stays exact)
             if _pvals_exclude(pvals, interval):
                 return False
-            if dtype is not None and col in pvals:
-                pv = _decode_partition_value(pvals[col], dtype)
-                if pv is None:
-                    return True  # NULL partition: residual filter decides
-                try:
-                    if op == "=":
-                        return pv == value
-                    if op == "<":
-                        return pv < value
-                    if op == "<=":
-                        return pv <= value
-                    if op == ">":
-                        return pv > value
-                    if op == ">=":
-                        return pv >= value
-                    if op == "between":
-                        lo, hi = value
-                        return lo <= pv <= hi
-                except TypeError:
-                    return True  # incomparable probe: keep, stay exact
+            if identity and pvals.get(col) is not None:
+                return _file_survives({col: [pvals[col]] * 2}, col, op, value)
             return True
 
         m = ops.load_version(v, keep_shard=keep_shard)
@@ -3414,6 +3255,8 @@ class VersionedCatalog:
         compact first to normalize.
 
         Returns {files_rewritten, rows_purged, versions_rewritten}."""
+        from .parquet_io import write_single_parquet
+
         ops, levels = self._ops(identifier)
         cur = ops.current()
         if cur is None:
@@ -3511,16 +3354,10 @@ class VersionedCatalog:
             if n_kept == 0:
                 rewritten[f] = None
                 continue
-            staging = os.path.join(repo_dir, f".purge-{_uuid.uuid4().hex}")
-            kept.coalesce(1).write.mode("overwrite").parquet(staging)
-            part = next(
-                p for p in sorted(os.listdir(staging)) if p.endswith(".parquet")
-            )
             dst = os.path.join(
                 os.path.dirname(abs_path), f"purged-{_uuid.uuid4().hex[:12]}.parquet"
             )
-            os.replace(os.path.join(staging, part), dst)
-            shutil.rmtree(staging, ignore_errors=True)
+            write_single_parquet(kept, dst)
             rel = self._rel(repo, dst)
             rewritten[f] = rel
             fs = _footer_stats(dst)

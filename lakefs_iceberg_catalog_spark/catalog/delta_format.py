@@ -584,7 +584,7 @@ class DeltaTableWriter:
         rows already hold table-allocated identity values (UPDATE,
         OPTIMIZE, REORG): they are not refused as explicit inserts into a
         GENERATED ALWAYS column."""
-        from .parquet_io import staged_slices
+        from .parquet_io import per_tuple, staged_slices
 
         if not versions:
             return []
@@ -620,8 +620,11 @@ class DeltaTableWriter:
                 metas.append(self._meta)
             spanning = None
             if add_partitioned is not None:
-                spanning = self._staged_frame(
-                    add_partitioned, pcols, constraints, cleanup, rewrite
+                spanning = per_tuple(
+                    self._staged_frame(
+                        add_partitioned, pcols, constraints, cleanup, rewrite
+                    ),
+                    pcols,
                 )
                 metas[-1] = self._meta
             with staged_slices(
@@ -2056,7 +2059,7 @@ class DeltaTableWriter:
         ``_change_data/`` and return their protocol ``cdc`` actions.
         Data columns take their physical names under mapping;
         ``_change_type`` stays literal and no field ids are stamped."""
-        from .parquet_io import staged_slices
+        from .parquet_io import per_tuple, staged_slices
 
         pcols = list(getattr(self, "_partition_cols", []))
         phys = _physical_names_map(self._meta) if self._column_mapping else {}
@@ -2070,7 +2073,7 @@ class DeltaTableWriter:
         )
         os.makedirs(os.path.join(self.table_dir, "_change_data"), exist_ok=True)
         cdc_actions: list[dict] = []
-        with staged_slices([], pcols, spanning=part) as (slices, _):
+        with staged_slices([], pcols, spanning=per_tuple(part, pcols)) as (slices, _):
             for st in slices:
                 rel = f"_change_data/cdc-{uuid.uuid4()}.snappy.parquet"
                 path = os.path.join(self.table_dir, rel)

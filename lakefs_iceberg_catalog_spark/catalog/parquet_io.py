@@ -1,24 +1,26 @@
 """Data-file materialization for the table-format writers.
 
-``staged_slices`` is the ONE data-file write path of the Delta and Iceberg
-writers (and the streaming spool), and the only writer of Delta change
-files: every add frame of a call — one for ``commit``/``append``, N for
-``commit_many``/``append_many`` — plus at most one frame spanning
-partition tuples (Delta MERGE output, UPDATE images, change rows and
-OPTIMIZE/REORG rewrites; Iceberg row-level rewrites — CoW DELETE/UPDATE/
-MERGE survivors, MoR UPDATE/MERGE images — and compaction) is written by
-ONE distributed job, ``partitionBy("_slice", <partition
-values>)``. Each single-valued slice lands as exactly one file whose
-partition values are read off the directory names, and the spanning
-frame lands as one file per tuple directory. Those directories are also
-the one partition single-valuedness proof: a slice is single-valued iff
-it wrote exactly one directory per partition level — exact for every type
-and transform, NaN included (all NaN rows land in one ``x=NaN``
-directory), at no cost beyond the write the commit already pays for. An
-unpartitioned table is the zero-partition-column case of the same write.
-Rows stream executor-side straight to the files; nothing funnels through
-the driver, and row counts come from the file footers (metadata-only
-reads).
+``staged_slices`` is the ONE data-file write path of the Delta, Iceberg
+and VersionedCatalog writers (and the streaming spool), and the only
+writer of Delta change files: every add frame of a call — one for
+``commit``/``append``, N for ``commit_many``/``append_many`` — plus at
+most one frame spanning partition tuples (Delta MERGE output, UPDATE
+images, change rows and OPTIMIZE/REORG rewrites; Iceberg row-level
+rewrites — CoW DELETE/UPDATE/MERGE survivors, MoR UPDATE/MERGE images —
+and compaction; every VersionedCatalog write, its frames told apart by a
+frame-index partition column) is written by ONE distributed job,
+``partitionBy("_slice", <partition values>)``. Each single-valued slice
+lands as exactly one file whose partition values are read off the
+directory names, and the spanning frame lands as one file per tuple
+directory and task; ``per_tuple`` gives it the one-task-per-tuple
+distribution. Those directories are also the one partition
+single-valuedness proof: a slice is single-valued iff it wrote exactly one
+directory per partition level — exact for every type and transform, NaN
+included (all NaN rows land in one ``x=NaN`` directory), at no cost beyond
+the write the commit already pays for. An unpartitioned table is the
+zero-partition-column case of the same write. Rows stream executor-side
+straight to the files; nothing funnels through the driver, and row counts
+come from the file footers (metadata-only reads).
 
 Known limit: a partition value whose escaped directory name exceeds the
 filesystem's 255-byte name limit fails the staging write; the stage is
@@ -158,6 +160,19 @@ def _dir_decoded(text: str, dt):
     return float(v)  # double/float: Java's round-trip text, NaN included
 
 
+def per_tuple(df: DataFrame, parts: list[str]) -> DataFrame:
+    """``df`` distributed so every partition tuple sits in ONE task —
+    hash-partitioned on ``parts`` over ``defaultParallelism`` tasks, or
+    one task when there are no parts — the distribution under which a
+    spanning frame of ``staged_slices`` lands one file per tuple. The
+    count is explicit: with an implicit one AQE coalesces a byte-wise
+    small shuffle into one task, and the whole write serializes behind a
+    single encoder. The file set is the same either way."""
+    if not parts:
+        return df.coalesce(1)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *parts)
+
+
 class StagedSlice(NamedTuple):
     path: str  # the slice's one data file, inside the stage directory
     rows: int  # footer row count
@@ -185,12 +200,13 @@ def staged_slices(
 
     ``spanning`` is a frame whose rows may span partition tuples (Delta
     MERGE output, UPDATE images, change rows and OPTIMIZE/REORG rewrites;
-    Iceberg row-level rewrites and compaction). It is hash-partitioned on
-    ``parts`` over ``defaultParallelism`` tasks, so each tuple lands in
-    one task and one file; without ``parts`` it is coalesced to one task.
-    Its slices follow the frames' in ``slices``, one per written file
-    (one per tuple directory), none when it has no rows. For ``checks``
-    its slice index is ``len(frames)``.
+    Iceberg row-level rewrites and compaction; every VersionedCatalog
+    write). It is written as it comes: each of its tasks writes one file
+    per tuple it holds, so the caller picks the distribution — ``per_tuple``
+    for one file per tuple, a range or coalesced layout for one file per
+    non-empty task. Its slices follow the frames' in ``slices``, one per
+    written file, none when it has no rows. For ``checks`` its slice index
+    is ``len(frames)``.
 
     ``checks`` name boolean columns (true = the row violates a table
     invariant), dropped before the write; ``first_bad[k]`` is the first
@@ -215,12 +231,7 @@ def staged_slices(
         types = [inputs[0].schema[p].dataType for p in parts]
         u = None
         for i, d in enumerate(inputs):
-            if i < len(frames) or not parts:
-                d = d.coalesce(1)
-            else:
-                n_tasks = spark.sparkContext.defaultParallelism
-                d = d.repartition(n_tasks, *parts)
-            s = d.withColumns(
+            s = (d.coalesce(1) if i < len(frames) else d).withColumns(
                 {
                     "_slice": F.lit(i),
                     **{

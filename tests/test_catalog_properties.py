@@ -1,11 +1,13 @@
-"""Property tests (hypothesis) for the catalog's pure-Python planning and
-metadata invariants — no Spark session needed, so the whole module runs in
-milliseconds:
+"""Property tests (hypothesis) for the catalog's planning and metadata
+invariants — pure Python except the partition-directory round trip, which
+runs a few small Spark writes:
 
 - `_file_survives` is CONSERVATIVE: a file whose [min, max] range covers any
   row matching the predicate is never skipped. (Skipping a matching file
   would be a wrong-results bug; keeping a non-matching file only costs IO.)
-- `_decode_partition_value` round-trips hive-encoded partition dir values.
+- Partition values round-trip through staged directory names: the
+  `_dir_encoded` text Spark writes (hive-escaped) decodes through
+  `_dir_decoded` to the exact value, for ints and strings.
 - `TableManifest` JSON serialization round-trips exactly.
 - `_is_safe_widening` admits only promotions that cannot lose information:
   irreflexive, antisymmetric, transitive along the integer chain.
@@ -13,13 +15,12 @@ milliseconds:
 
 from __future__ import annotations
 
-from hypothesis import given
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import types as T
 
 from lakefs_iceberg_catalog_spark.catalog.catalog import (
-    _decode_partition_value,
     _file_survives,
     _is_safe_widening,
     _parse_simple_predicate,
@@ -73,17 +74,38 @@ def test_parse_simple_predicate_roundtrip(op, bound, col):
     assert parsed == (col, op, bound)
 
 
-@given(st.integers(-(2**40), 2**40))
-def test_partition_value_decode_int(v):
-    assert _decode_partition_value(str(v), T.LongType()) == v
+def _dir_roundtrip(spark, values: list, dt: T.DataType) -> list:
+    """Stage ``values`` as a partition column (``_dir_encoded`` text in
+    Spark's hive-escaped directory names) and decode each directory back
+    through ``_dir_decoded``."""
+    from lakefs_iceberg_catalog_spark.catalog.parquet_io import staged_slices
+
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(values)],
+        T.StructType([T.StructField("i", T.IntegerType()), T.StructField("v", dt)]),
+    )
+    with staged_slices([], ["v"], spanning=df.coalesce(1)) as (slices, _):
+        return sorted(s.values[0] for s in slices)
 
 
-@given(st.text(alphabet=st.characters(codec="utf-8", exclude_characters="/\x00%"), max_size=30))
-def test_partition_value_decode_string_roundtrip(s):
-    from urllib.parse import quote
+@settings(max_examples=10, deadline=None)
+@given(st.lists(st.integers(-(2**40), 2**40), min_size=1, max_size=8, unique=True))
+def test_partition_dir_roundtrip_int(spark, vals):
+    assert _dir_roundtrip(spark, vals, T.LongType()) == sorted(vals)
 
-    # hive encodes special chars with %XX; decode must invert it
-    assert _decode_partition_value(quote(s), T.StringType()) == s
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.text(alphabet=st.characters(codec="utf-8", exclude_characters="\x00"), max_size=30),
+        min_size=1,
+        max_size=8,
+        unique=True,
+    )
+)
+def test_partition_dir_roundtrip_string(spark, vals):
+    # "" stays apart from NULL; hive's %XX escapes invert exactly
+    assert _dir_roundtrip(spark, vals, T.StringType()) == sorted(vals)
 
 
 @given(

@@ -493,3 +493,29 @@ def test_hll_native_estimate_quality_and_mergeability(spark):
         for b in set(half_a) | set(half_b)
     }
     assert merged == registers(li)  # register-wise max merge == one pass
+
+
+def test_ranked_unique_matches_dedup_then_row_number(spark):
+    """`_ranked_unique` (dedup inside the rank window, one shuffle) equals
+    the two-shuffle form it replaced: dropDuplicates, then row_number over
+    (cos DESC, neighbor_id) per query — with duplicate candidate pairs and
+    cosine ties across neighbors."""
+    import random
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from lakefs_iceberg_catalog_spark.operators.similarity import _ranked_unique
+
+    rng = random.Random(7)
+    rows = []
+    for q in range(4):
+        for n in rng.sample(range(30), 12):
+            cos = rng.choice([0.25, 0.5, 0.75, 0.9])  # ties across neighbors
+            rows += [(q, n, cos)] * rng.randint(1, 3)  # duplicate pairs
+    rng.shuffle(rows)
+    sims = spark.createDataFrame(rows, "query_id int, neighbor_id int, cos double")
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
+    oracle = sims.dropDuplicates().withColumn("rnk", F.row_number().over(w))
+    got = _ranked_unique(sims)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, oracle.collect()))
