@@ -31,6 +31,7 @@ from __future__ import annotations
 import datetime as _dt
 import functools
 import json
+import numbers
 import os
 import re
 import shutil
@@ -177,12 +178,25 @@ def _parse_simple_predicate(predicate: str) -> tuple[str, str, object] | None:
     return None
 
 
+def _spark_order(v):
+    """A number's sort key under Spark's order, where NaN is larger than
+    every other value and equal to itself; other values as they are (a
+    number never compares with them, so such a file is kept)."""
+    if isinstance(v, numbers.Number):
+        return (1, 0) if v != v else (0, v)
+    return v
+
+
 def _file_survives(stats: dict | None, col: str, op: str, value) -> bool:
     """Conservative file-skip test: keep the file unless its [min,max] range
-    for `col` provably excludes every row matching `col op value`."""
+    for `col` provably excludes every row matching `col op value` — in
+    Spark's order, so NaN bounds and probes compare as Spark's do."""
     if not stats or col not in stats:
         return True
-    mn, mx = stats[col]
+    mn, mx = map(_spark_order, stats[col])
+    value = (
+        tuple(map(_spark_order, value)) if op == "between" else _spark_order(value)
+    )
     try:
         if op == "=":
             return mn <= value <= mx
@@ -889,23 +903,23 @@ class VersionedCatalog:
           zone-free — timestamps as epoch microseconds, "" apart from NULL,
           dates, decimals and booleans as their text — and scans re-inject
           them as per-file constants.
-        - ``cluster_by`` RANGE-partitions rows into an EXPLICIT
-          ``cluster_files`` tasks (explicit so AQE can't coalesce the small
-          write into one file and erase the file-level stat locality) and
-          sorts within each. Range distribution — Iceberg's
-          ``write.distribution-mode=range`` — gives every file a contiguous,
-          non-overlapping key range, so footer min/max stats prune equality
-          AND range predicates; hash distribution would scatter the key
-          range across every file.
-        - ``zorder_by`` range-distributes on the Morton key
-          (``zorder._zkey_expr`` over one min/max row; Iceberg's
-          rewrite_data_files zorder / Delta OPTIMIZE ZORDER BY): every file
-          covers a compact hyper-rectangle, so selective predicates on ANY
-          of the dimensions skip files.
+        - ``cluster_by`` and ``zorder_by`` go through ``zorder.clustered``
+          with ``cluster_files`` files per frame: rows RANGE-partitioned
+          into an EXPLICIT task count (explicit so AQE can't coalesce the
+          small write into one file and erase the file-level stat
+          locality) and sorted within each. Range distribution — Iceberg's
+          ``write.distribution-mode=range`` — gives every file a
+          contiguous, non-overlapping key range, so footer min/max stats
+          prune equality AND range predicates; hash distribution would
+          scatter the key range across every file. ``zorder_by`` ranges
+          on the Morton key (Iceberg's rewrite_data_files zorder / Delta
+          OPTIMIZE ZORDER BY): every file covers a compact
+          hyper-rectangle, so selective predicates on ANY of the
+          dimensions skip files.
         - Otherwise a frame is written as it comes (a compaction's
           ``coalesce(N)`` included)."""
         from .parquet_io import per_tuple, staged_slices
-        from .zorder import _zkey_expr
+        from .zorder import clustered
 
         frames = dfs if isinstance(dfs, list) else [dfs]
         schema = frames[0].schema
@@ -931,21 +945,10 @@ class VersionedCatalog:
             u = u.withColumns(derived)
         if parts:
             u = per_tuple(u, keys)
-        elif cluster_by:
-            u = u.repartitionByRange(
-                cluster_files, *[F.col(c) for c in cluster_by]
-            ).sortWithinPartitions(*cluster_by)
-        elif zorder_by:
-            bounds = u.agg(
-                *[F.min(c).alias(f"mn_{c}") for c in zorder_by],
-                *[F.max(c).alias(f"mx_{c}") for c in zorder_by],
-            ).collect()[0]
-            u = (
-                u.withColumn("_zkey", _zkey_expr(bounds, zorder_by))
-                .repartitionByRange(cluster_files, F.col("_zkey"))
-                .sortWithinPartitions("_zkey")
-                .drop("_zkey")
-            )
+        elif cluster_by or zorder_by:
+            u = clustered(
+                u, keys, cluster_by or zorder_by, cluster_files, bool(zorder_by)
+            )[0]
         repo = levels[0]
         data_dir = os.path.join(self.root, *levels, "data")
         os.makedirs(data_dir, exist_ok=True)

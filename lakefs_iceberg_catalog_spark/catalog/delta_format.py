@@ -560,6 +560,7 @@ class DeltaTableWriter:
         extra_actions: list[dict] | None = None,
         cdc: DataFrame | None = None,
         rewrite: bool = False,
+        clustered_rows: int | None = None,
     ) -> list[int]:
         """Stage every add frame of ``versions`` (one list of adds per
         version) in ONE write job (parquet_io.staged_slices), then
@@ -583,7 +584,14 @@ class DeltaTableWriter:
         without its change rows. ``rewrite`` says the spanning frame's
         rows already hold table-allocated identity values (UPDATE,
         OPTIMIZE, REORG): they are not refused as explicit inserts into a
-        GENERATED ALWAYS column."""
+        GENERATED ALWAYS column.
+
+        The spanning frame is distributed one task per partition tuple
+        (``per_tuple``) unless ``clustered_rows`` is given: then it comes
+        distributed by ``zorder.clustered`` (OPTIMIZE ZORDER) and is
+        staged as it is, and its staged files must hold exactly
+        ``clustered_rows`` rows, or the commit is refused before any file
+        enters the table dir."""
         from .parquet_io import per_tuple, staged_slices
 
         if not versions:
@@ -620,12 +628,11 @@ class DeltaTableWriter:
                 metas.append(self._meta)
             spanning = None
             if add_partitioned is not None:
-                spanning = per_tuple(
-                    self._staged_frame(
-                        add_partitioned, pcols, constraints, cleanup, rewrite
-                    ),
-                    pcols,
+                spanning = self._staged_frame(
+                    add_partitioned, pcols, constraints, cleanup, rewrite
                 )
+                if clustered_rows is None:
+                    spanning = per_tuple(spanning, pcols)
                 metas[-1] = self._meta
             with staged_slices(
                 frames,
@@ -633,6 +640,13 @@ class DeltaTableWriter:
                 checks=[f"_check{k}" for k in range(len(constraints))],
                 spanning=spanning,
             ) as (slices, first_bad):
+                if clustered_rows is not None:
+                    staged = sum(st.rows for st in slices[len(frames):])
+                    if staged != clustered_rows:
+                        raise AssertionError(
+                            "clustered rewrite changed the row count: "
+                            f"{clustered_rows} -> {staged} — refusing to commit"
+                        )
                 out: list[int] = []
                 i = 0
                 for v, adds in enumerate(versions):
@@ -1382,182 +1396,52 @@ class DeltaTableWriter:
         then too). Time travel to pre-OPTIMIZE versions keeps working
         while the tombstoned files exist.
 
-        ``zorder_by`` (OPTIMIZE ... ZORDER BY): quantize each dimension
-        to 8-bit bins over its global min/max, bit-interleave into one
-        Morton key, split into ``target_files`` equal-count key ranges
-        (approxQuantile boundaries, one pass) and sort within each —
-        every file then covers a compact hyper-rectangle so the add.stats
-        min/max stay NARROW ON EVERY zorder column and selective
-        predicates on any dimension skip files via stats_filter (linear
-        clustering only achieves that for its leading column). The same
-        design as the versioned catalog's z-order sink (catalog.py
-        write_df_clustered); the key never reaches the data pages.
+        ``zorder_by`` (OPTIMIZE ... ZORDER BY): the rewrite is clustered
+        by ``zorder.clustered`` — each partition's rows range-distributed
+        on a Morton key over that partition's own min/max of every
+        dimension, into about ``target_files`` files per partition tuple
+        (at most ``target_files * k + k - 1`` over ``k`` tuples), each
+        holding one tuple and one narrow key range. The add.stats min/max
+        then stay NARROW ON EVERY zorder column, so selective predicates
+        on any dimension skip files via stats_filter (linear clustering
+        only achieves that for its leading column). The key never
+        reaches the data pages. A NULL dimension value routes its row to
+        key -1 rather than dropping it.
 
         Scale: one distributed scan+write sized by live rows — the live
         rows are the commit's spanning frame, routed to one file per
-        tuple by the staging job. ZORDER clusters per partition: its
-        tuple enumeration is a bounded metadata-scale distinct (stock
-        Delta's OPTIMIZE plans per-partition bins the same way) and the
-        z min/max pre-pass is one parallel aggregate."""
-        from ..operators.util import bounded_rows
+        tuple (ZORDER: per tuple and key range) by the ONE staging job;
+        ZORDER adds one bounded grouped aggregate (per-tuple row counts
+        and bounds) and the range exchange's sampling. A ZORDER commit
+        whose staged files do not hold exactly the aggregate's row count
+        is refused before its log commit: a dataChange=false commit that
+        drops rows is data loss CDF and streaming readers are required to
+        skip."""
+        from .zorder import clustered
 
         state = read_delta_log(self.table_dir)
-        live = sorted(state["files"])
         current = scan_delta_table(self.spark, self.table_dir)
-        if not zorder_by:
-            # the live rows are the commit's spanning frame: one file per
-            # partition tuple (one file on an unpartitioned table)
-            return self._commit_versions(
-                [[]],
-                add_partitioned=current,
-                remove=live,
-                data_change=False,
-                operation="OPTIMIZE",
-                rewrite=True,
-            )[0]
-        pcols = state.get("partition_cols") or []
-        # persisted cluster inputs (zorder.py), released after the commit
-        # is durable — the engine's stats/quantile/occupancy passes, the
-        # row-conservation count, and the commit's range-file writes all
-        # read one cached copy instead of re-scanning the table per job
-        zcleanup: list[DataFrame] = []
-
-        # staged fast path: every range file of a cluster call comes from
-        # ONE shuffle+write job (zorder.morton_cluster_files) and registers
-        # as a pre-written add — eligible unless a feature needs commit()'s
-        # per-add passes (physical-name renames, identity hwm bookkeeping,
-        # constraint re-checks)
-        staged_ok = (
-            not self._column_mapping
-            and not self._identity_specs()
-            and not (self._meta and self._check_constraints())
-        )
-        zstage = None
-        staged_adds: list[tuple[str, int, dict]] = []
-
-        def _zorder_adds(df: DataFrame) -> tuple[list[DataFrame], int]:
-            """Morton-cluster one frame into <= target_files range frames
-            via the SHARED z-order engine (zorder.py — one implementation
-            for Delta OPTIMIZE ZORDER and Iceberg rewrite_data zorder);
-            returns (adds, row count). Called once for an unpartitioned
-            table, once per partition tuple for a partitioned one (stock
-            OPTIMIZE ZORDER clusters within each partition)."""
-            from .zorder import morton_cluster_frames
-
-            return morton_cluster_frames(
-                df, zorder_by, target_files, cleanup=zcleanup
-            )
-
-        def _zorder_staged(df: DataFrame, pvals: dict) -> int:
-            """One-job clustered write for one frame; appends the staged
-            (path, rows, partitionValues) adds and returns the row count.
-            The partition columns are dropped BEFORE the write (the
-            protocol keeps them in the log, not the data file)."""
-            import pyarrow.parquet as pq
-
-            from .zorder import morton_cluster_files
-
-            paths, n = morton_cluster_files(
-                df.drop(*pcols) if pcols else df,
-                zorder_by, target_files, zstage, cleanup=zcleanup,
-            )
-            for p in paths:
-                staged_adds.append(
-                    (p, int(pq.read_metadata(p).num_rows), dict(pvals))
+        n_rows = None
+        if zorder_by:
+            pcols = state.get("partition_cols") or []
+            clash = set(zorder_by) & set(pcols)
+            if clash:
+                raise ValueError(
+                    f"cannot ZORDER BY partition columns: {sorted(clash)} "
+                    "(constant within every file already)"
                 )
-            return n
-
-        clash = set(zorder_by) & set(pcols)
-        if clash:
-            raise ValueError(
-                f"cannot ZORDER BY partition columns: {sorted(clash)} "
-                "(constant within every file already)"
+            current, n_rows = clustered(
+                current, pcols, zorder_by, target_files, zorder=True
             )
-        if staged_ok:
-            import tempfile
-
-            zstage = tempfile.mkdtemp(prefix="delta-zorder-")
-        adds = []
-        n_before = 0
-        if pcols:
-            # per-partition clustering (stock Delta's OPTIMIZE unit is
-            # the partition): each tuple's rows re-cluster into their
-            # own <= target_files range files — tuples never mix
-            tuples = bounded_rows(
-                current.select(*pcols).distinct(), 10_000
-            )
-            for r in sorted(
-                tuples, key=lambda r: tuple(str(v) for v in r)
-            ):
-                part = current
-                for c, v in zip(pcols, r):
-                    part = part.filter(F.col(c).eqNullSafe(F.lit(v)))
-                if staged_ok:
-                    n_before += _zorder_staged(
-                        part, self._partition_values(tuple(r))
-                    )
-                else:
-                    part_adds, part_n = _zorder_adds(part)
-                    adds += part_adds
-                    n_before += part_n
-        elif staged_ok:
-            n_before = _zorder_staged(current, {})
-        else:
-            adds, n_before = _zorder_adds(current)
-        try:
-            # Row-conservation check BEFORE publishing: a dataChange=false
-            # commit that drops rows is data loss CDF and streaming
-            # readers are required to skip — refusing must happen while
-            # the old head is still the head, not after the corrupted
-            # commit is durable. Staged adds check against the parquet
-            # FOOTER row counts (what will actually publish); the
-            # frame path counts the rewrite's own row set.
-            if staged_adds:
-                n_after = sum(n for _, n, _ in staged_adds)
-            else:
-                n_after = 0
-                if adds:
-                    u = adds[0]
-                    for a in adds[1:]:
-                        u = u.unionByName(a)
-                    n_after = u.count()
-            if n_after != n_before:
-                raise AssertionError(
-                    f"ZORDER rewrite changed the row count: {n_before} -> "
-                    f"{n_after} (NULL-key routing bug?) — refusing to commit"
-                )
-            if not staged_adds:
-                return self.commit(
-                    add_dfs=adds or None,
-                    remove=live,
-                    data_change=False,
-                    operation="OPTIMIZE",
-                )
-            # the clustered range files are already written: register
-            # them as ONE metadata-only version
-            now_ms = int(time.time() * 1000)
-            return self._write_commit(
-                [
-                    self._add_action(self._adopt(p), n, pv, False, now_ms)
-                    for p, n, pv in staged_adds
-                ]
-                + [
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": False,
-                        }
-                    }
-                    for rel in live
-                ]
-                + [{"commitInfo": {"timestamp": now_ms, "operation": "OPTIMIZE"}}]
-            )
-        finally:
-            for h in zcleanup:
-                h.unpersist()
-            if zstage is not None:
-                shutil.rmtree(zstage, ignore_errors=True)
+        return self._commit_versions(
+            [[]],
+            add_partitioned=current,
+            remove=sorted(state["files"]),
+            data_change=False,
+            operation="OPTIMIZE",
+            rewrite=True,
+            clustered_rows=n_rows,
+        )[0]
 
     def merge_upsert(self, source_df: DataFrame, key_cols: list[str]) -> int:
         """MERGE (WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *)

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .avro_io import JvmAvroWriter, read_container
+from .parquet_io import per_tuple
+from .zorder import clustered
 from ..operators.util import gated_broadcast, local_df
 
 _METADATA_RE = re.compile(r"^v(\d+)(?:\.gz)?\.metadata\.json(?:\.gz)?$")
@@ -903,25 +905,27 @@ class IcebergTableWriter:
         dfs: list[DataFrame],
         fmt: str,
         spanning: DataFrame | None = None,
+        distribute=per_tuple,
     ):
         """Stage the data file of every slice of ``dfs`` and, when given,
-        one file per partition tuple of ``spanning`` (the rows of a
-        row-level rewrite or compaction). Yields, per slice, its
+        the rows of ``spanning`` (a row-level rewrite's or a compaction's)
+        distributed by ``distribute(frame, tuple columns)``: ``per_tuple``
+        lands one file per partition tuple, ``zorder.clustered`` one file
+        per tuple and key range. Yields, per slice, its
         ``parquet_io.StagedSlice`` (partition values TRANSFORMED — e.g.
         one days(ts) append may span a whole day of timestamps) or the
         single-valuedness ``ValueError`` its registration raises, then
         the spanning frame's slices (none when it has no rows).
         Parquet/ORC stage everything in ONE ``partitionBy`` job whose
         directories prove single-valuedness and split the spanning frame
-        per tuple, NULL tuples included. Avro files are written through
-        ``foreachPartition`` (no SQL write, no directory layout), so each
-        Avro slice keeps the explicit bounded probe and the spanning
-        frame is written once per enumerated tuple."""
-        from ..operators.util import bounded_rows
+        per tuple, NULL tuples included. Avro has no SQL writer, so no
+        directory layout: each Avro slice keeps the explicit bounded
+        probe and a ``foreachPartition`` write, and the spanning frame is
+        one ``parquet_io.staged_avro`` job."""
         from .parquet_io import (
             StagedSlice,
             distinct_singleton_row,
-            per_tuple,
+            staged_avro,
             staged_slices,
             write_single_avro,
         )
@@ -930,16 +934,12 @@ class IcebergTableWriter:
             f"_part{j}": self._transform_col(pf)
             for j, pf in enumerate(self._partition_fields)
         }
+        parts = list(texprs)
+        if spanning is not None:
+            spanning = distribute(spanning.withColumns(texprs), parts)
         if fmt != "avro":
             with staged_slices(
-                [d.withColumns(texprs) for d in dfs],
-                list(texprs),
-                fmt,
-                spanning=(
-                    None
-                    if spanning is None
-                    else per_tuple(spanning.withColumns(texprs), list(texprs))
-                ),
+                [d.withColumns(texprs) for d in dfs], parts, fmt, spanning=spanning
             ) as (slices, _):
                 yield slices
             return
@@ -961,24 +961,7 @@ class IcebergTableWriter:
                     StagedSlice(path, write_single_avro(d, path), values)
                 )
             if spanning is not None:
-                tuples = (
-                    bounded_rows(
-                        spanning.select(*texprs.values()).distinct(),
-                        self.REWRITE_PARTITION_CEILING,
-                    )
-                    if texprs
-                    else [()]
-                )
-                for j, t in enumerate(
-                    sorted(tuples, key=lambda r: tuple(str(v) for v in r))
-                ):
-                    part = spanning
-                    for e, v in zip(texprs.values(), t):
-                        part = part.filter(e.eqNullSafe(F.lit(v)))
-                    path = os.path.join(stage, f"span-{j}.avro")
-                    rows = write_single_avro(part, path)
-                    if rows:
-                        slices.append(StagedSlice(path, rows, tuple(t)))
+                slices += staged_avro(spanning, parts, stage)
             yield slices
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -2042,14 +2025,6 @@ class IcebergTableWriter:
             self._write_metadata(now_ms)
             return target
 
-    # Ceiling for the driver-side distinct-partition-tuple probes of the
-    # sorted/ZORDER rewrite_data and of Avro row-level rewrites: partition
-    # tuples are metadata-scale (Iceberg's own rewrite planner enumerates
-    # them to build per-partition file groups); a table with more live
-    # partitions than this needs a scoped rewrite, not a bigger driver
-    # list.
-    REWRITE_PARTITION_CEILING = 10_000
-
     def _current_with_lineage(self) -> DataFrame:
         """Current VISIBLE rows with a normalized ``_file`` lineage
         column — the copy-on-write probe surface, format-uniform:
@@ -2292,18 +2267,21 @@ class IcebergTableWriter:
             return self._commit_snapshot(snapshot_id, "overwrite")
 
     def _append_added_data_manifest(
-        self, new_rows: DataFrame, snapshot_id: int
+        self, new_rows: DataFrame, snapshot_id: int, distribute=per_tuple
     ) -> None:
         """Write ``new_rows`` as ADDED data file(s) in the TABLE'S write
         format under the CURRENT spec — ONE staging job writing one file
         per partition tuple, NULL tuples included (a real partitioned
-        writer's output is per-tuple files) — and append their content=0
+        writer's output is per-tuple files; a clustered ``distribute``
+        splits a tuple into key ranges) — and append their content=0
         manifest. Rows-free input adds no file and no manifest. Shared
         by the CoW rewrite commit, the MoR UPDATE/MERGE commits and
         compaction; the caller owns version/sequence bumps and the
         snapshot commit."""
         fmt = self._file_format
-        with self._staged_data([], fmt, spanning=new_rows) as slices:
+        with self._staged_data(
+            [], fmt, spanning=new_rows, distribute=distribute
+        ) as slices:
             files = [
                 self._adopt(st, fmt, f"00000-{self._version}-{self._uuid}-0-{i:05d}")
                 for i, st in enumerate(slices, 1)
@@ -2941,22 +2919,25 @@ class IcebergTableWriter:
         debt → one scan-efficient file per partition), then expire
         (orphaned bytes → reclaimed).
 
-        Scale: without a sort order or ``zorder_by`` the live rows are the
-        spanning frame of ONE staging job (``_append_added_data_manifest``):
-        one pass over live rows writes one file per partition tuple, NULL
-        tuples included, as parallel tasks whatever the partition count.
-        A sorted or z-ordered rewrite clusters each partition on its own:
-        a bounded metadata-scale distinct enumerates the tuples (stock
-        Iceberg's rewrite planner forms its file groups the same way), and
-        each tuple's rows are one partition-pruned scan+write.
+        Scale: the live rows are the spanning frame of ONE staging job
+        (``_append_added_data_manifest``): one pass over live rows writes
+        one file per partition tuple, NULL tuples included, as parallel
+        tasks whatever the partition count, in the table's write format
+        (parquet, ORC or Avro). A sorted rewrite (the table's sort order)
+        or a z-ordered one feeds the same job through
+        ``zorder.clustered``, with the transformed partition columns as
+        the tuple: one bounded grouped aggregate, then a range exchange on
+        (tuple, key) sorted within each task, so each file holds one tuple
+        and one narrow key range — ``target_files`` ranges per tuple, at
+        most ``target_files * k + k - 1`` files over ``k`` tuples, exactly
+        one per tuple when ``target_files`` is 1 or unset.
 
-        ``zorder_by`` (round 15 — stock's ``rewrite_data_files(strategy
-        => 'sort', sort_order => zorder(...))``, the Iceberg dual of
-        Delta's OPTIMIZE ZORDER): each partition's rows Morton-cluster
-        into <= target_files key ranges through the SHARED z-order
-        engine (zorder.py), so manifest min/max stay narrow on EVERY
-        z dimension and stats_filter skips files on any of them —
-        multi-dimensional skipping linear sort orders can't give."""
+        ``zorder_by`` (stock's ``rewrite_data_files(strategy => 'sort',
+        sort_order => zorder(...))``, the Iceberg dual of Delta's OPTIMIZE
+        ZORDER): the key is a Morton interleave over each tuple's own
+        min/max, so manifest min/max stay narrow on EVERY z dimension and
+        stats_filter skips files on any of them — multi-dimensional
+        skipping linear sort orders can't give."""
         if self._schema_json is None:
             raise ValueError("nothing to rewrite: table has no snapshots")
         if zorder_by:
@@ -2974,169 +2955,20 @@ class IcebergTableWriter:
                     "(constant within every file already)"
                 )
         current = scan_iceberg_table(self.spark, self.table_dir)
+        order = list(zorder_by or self._sort_order)
+
+        def distribute(df: DataFrame, parts: list[str]) -> DataFrame:
+            return clustered(
+                df, parts, order, target_files or 1, zorder=bool(zorder_by)
+            )[0]
+
         with self._new_snapshot() as snapshot_id:
             # the replace snapshot's manifest list carries only the new
             # manifest (none when no row is live)
             self._manifests = []
-            if not zorder_by and not self._sort_order:
-                # the live rows are the spanning frame of ONE staging job
-                self._append_added_data_manifest(current, snapshot_id)
-                return self._commit_snapshot(snapshot_id, "replace")
-            groups: list[dict] = [{}]
-            if self._partition_fields:
-                from ..operators.util import bounded_rows
-
-                names = [pf["name"] for pf in self._partition_fields]
-                tuples = bounded_rows(
-                    current.select(
-                        *[self._transform_col(pf).alias(pf["name"])
-                          for pf in self._partition_fields]
-                    ).distinct(),
-                    self.REWRITE_PARTITION_CEILING,
-                )
-                groups = sorted(
-                    (dict(zip(names, tuple(r))) for r in tuples),
-                    key=lambda d: tuple(str(v) for v in d.values()),
-                )
-            # compaction outputs honor the TABLE'S write format, like the
-            # CoW rewrites (stock rewrite_data_files writes
-            # write.format.default)
-            fmt = self._file_format
-            from .parquet_io import (
-                write_single_avro,
-                write_single_orc,
-                write_single_parquet,
+            self._append_added_data_manifest(
+                current, snapshot_id, distribute if order else per_tuple
             )
-
-            writer = {
-                "parquet": write_single_parquet,
-                "orc": write_single_orc,
-                "avro": write_single_avro,
-            }[fmt]
-            files = []
-            for i, pvals in enumerate(groups):
-                part_df = current
-                for pf in self._partition_fields:
-                    part_df = part_df.filter(
-                        self._transform_col(pf).eqNullSafe(
-                            F.lit(pvals[pf["name"]])
-                        )
-                    )
-                if zorder_by:
-                    # Morton-clustered rewrite (shared engine — see
-                    # docstring): on parquet tables ALL range files come
-                    # from ONE clustered shuffle+write job
-                    # (morton_cluster_files); ORC/AVRO tables take the
-                    # per-range-frame path. The partition frame is
-                    # persisted (cleanup list) across the engine's passes
-                    # and released once this tuple's files are written.
-                    zcleanup: list = []
-                    try:
-                        if fmt == "parquet":
-                            import pyarrow.parquet as _pq
-
-                            from .zorder import morton_cluster_files
-
-                            zstage = tempfile.mkdtemp(prefix="ice-zorder-")
-                            try:
-                                paths, _n = morton_cluster_files(
-                                    part_df, zorder_by, target_files or 1,
-                                    zstage, cleanup=zcleanup,
-                                )
-                                for j, sp in enumerate(paths):
-                                    data_path = os.path.join(
-                                        self.data_dir,
-                                        f"00000-{self._version}-{self._uuid}-"
-                                        f"z{i + 1}-{j + 1:05d}.{fmt}",
-                                    )
-                                    n_rows = int(
-                                        _pq.read_metadata(sp).num_rows
-                                    )
-                                    shutil.move(sp, data_path)
-                                    files.append(
-                                        (data_path, fmt, n_rows, pvals, None)
-                                    )
-                            finally:
-                                shutil.rmtree(zstage, ignore_errors=True)
-                        else:
-                            from .zorder import morton_cluster_frames
-
-                            frames, _n = morton_cluster_frames(
-                                part_df, zorder_by, target_files or 1,
-                                cleanup=zcleanup,
-                            )
-                            for j, fr in enumerate(frames):
-                                data_path = os.path.join(
-                                    self.data_dir,
-                                    f"00000-{self._version}-{self._uuid}-"
-                                    f"z{i + 1}-{j + 1:05d}.{fmt}",
-                                )
-                                n_rows = writer(fr, data_path)
-                                files.append(
-                                    (data_path, fmt, n_rows, pvals, None)
-                                )
-                    finally:
-                        for h in zcleanup:
-                            h.unpersist()
-                    continue
-                if (target_files or 1) > 1:
-                    # RANGE-CLUSTERED rewrite: the persisted sort order splits
-                    # each partition into target_files range files (Spark's
-                    # sampled range partitioner), so every file covers a
-                    # narrow value interval and the manifest bounds make
-                    # stats_filter skip all but the straddling files — the
-                    # sort-order + data-skipping composition stock Iceberg's
-                    # rewrite (sort strategy) exists for. Executor-side
-                    # sort-and-write; no driver materialization.
-                    import pyarrow.parquet as _pq
-
-                    stage = tempfile.mkdtemp(prefix="ice-rewrite-")
-                    try:
-                        (
-                            part_df.repartitionByRange(target_files, *self._sort_order)
-                            .sortWithinPartitions(*self._sort_order)
-                            .write.mode("overwrite")
-                            .parquet(stage)
-                        )
-                        parts = sorted(
-                            f for f in os.listdir(stage) if f.endswith(".parquet")
-                        )
-                        for j, part in enumerate(parts):
-                            data_path = os.path.join(
-                                self.data_dir,
-                                f"00000-{self._version}-{self._uuid}-"
-                                f"{i + 1}-{j + 1:05d}.{fmt}",
-                            )
-                            staged = os.path.join(stage, part)
-                            if _pq.read_metadata(staged).num_rows == 0:
-                                continue  # empty range bucket
-                            if fmt == "parquet":
-                                os.replace(staged, data_path)
-                                n_rows = _pq.read_metadata(data_path).num_rows
-                            else:
-                                # transcode the staged range file into the
-                                # table's format (single-file task each; a
-                                # one-task read of one file preserves the
-                                # within-range sort order)
-                                n_rows = writer(
-                                    self.spark.read.parquet(staged), data_path
-                                )
-                            files.append((data_path, fmt, n_rows, pvals, None))
-                    finally:
-                        shutil.rmtree(stage, ignore_errors=True)
-                    continue
-                # single-file rewrite still honors the persisted order
-                data_path = os.path.join(
-                    self.data_dir,
-                    f"00000-{self._version}-{self._uuid}-0-{i + 1:05d}.{fmt}",
-                )
-                n_rows = writer(
-                    part_df.coalesce(1).sortWithinPartitions(*self._sort_order),
-                    data_path,
-                )
-                files.append((data_path, fmt, n_rows, pvals, None))
-            if files:
-                self._manifests.append(self._added_manifest(snapshot_id, files))
             return self._commit_snapshot(snapshot_id, "replace")
 
     def rewrite_manifests(self) -> int:

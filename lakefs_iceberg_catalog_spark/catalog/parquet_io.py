@@ -26,9 +26,11 @@ Known limit: a partition value whose escaped directory name exceeds the
 filesystem's 255-byte name limit fails the staging write; the stage is
 discarded and no table state changes.
 
-Avro data files are written through ``foreachPartition`` (no SQL write, so
-no directory layout): they keep the explicit ``distinct_singleton_row``
-probe.
+Avro data files have no SQL writer, so no directory layout. An Avro
+append slice is one ``foreachPartition`` file behind the explicit
+``distinct_singleton_row`` probe; an Avro spanning frame is ONE
+``staged_avro`` job whose tasks write one file per run of equal partition
+tuples, under whatever distribution the caller picked.
 """
 
 from __future__ import annotations
@@ -173,6 +175,20 @@ def per_tuple(df: DataFrame, parts: list[str]) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *parts)
 
 
+def _runs(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` sorted on ``cols`` within each task, ties in the task's row
+    order: one run per value, each keeping the order the caller gave it.
+    The row position makes the projection non-deterministic, so Spark
+    cannot drop the caller's own sort beneath this one."""
+    from pyspark.sql import functions as F
+
+    return (
+        df.withColumn("_pos", F.monotonically_increasing_id())
+        .sortWithinPartitions(*cols, "_pos")
+        .drop("_pos")
+    )
+
+
 class StagedSlice(NamedTuple):
     path: str  # the slice's one data file, inside the stage directory
     rows: int  # footer row count
@@ -204,9 +220,9 @@ def staged_slices(
     write). It is written as it comes: each of its tasks writes one file
     per tuple it holds, so the caller picks the distribution — ``per_tuple``
     for one file per tuple, a range or coalesced layout for one file per
-    non-empty task. Its slices follow the frames' in ``slices``, one per
-    written file, none when it has no rows. For ``checks`` its slice index
-    is ``len(frames)``.
+    non-empty task — and each file keeps its task's row order. Its slices
+    follow the frames' in ``slices``, one per written file, none when it
+    has no rows. For ``checks`` its slice index is ``len(frames)``.
 
     ``checks`` name boolean columns (true = the row violates a table
     invariant), dropped before the write; ``first_bad[k]`` is the first
@@ -240,6 +256,10 @@ def staged_slices(
                     },
                 }
             )
+            if parts and i == len(frames):
+                # the write sorts by its encoded directory columns; sorting
+                # on them here keeps the caller's row order in each file
+                s = _runs(s, ["_slice", *parts])
             u = s if u is None else u.unionByName(s)
         obs = None
         if checks:
@@ -342,18 +362,12 @@ def avro_schema_of(schema) -> dict:
     }
 
 
-def write_single_avro(df: DataFrame, dest_path: str) -> int:
-    """Avro twin of write_single_parquet (the spec's THIRD data format):
-    one executor-side task streams rows through the from-scratch Avro
-    container encoder (catalog/avro_io.write_container — block-buffered,
-    deflate) straight to ``dest_path``; the row count comes from the
-    container's block headers, a metadata-only pass. Single-JVM layout
-    note: the task writes to the shared local filesystem, the same
-    contract the parquet/ORC twins rely on; a cluster deployment points
-    dest at shared storage."""
+def _avro_encoding(schema):
+    """The Avro record schema of flat Spark ``schema`` and the function
+    mapping one of its Rows to an Avro record: dates as epoch days,
+    timestamps as exact epoch micros."""
     import datetime as _dt
 
-    schema = df.schema
     avro_schema = avro_schema_of(schema)
     cols = schema.fieldNames()
     epoch_day = _dt.date(1970, 1, 1)
@@ -374,23 +388,75 @@ def write_single_avro(df: DataFrame, dest_path: str) -> int:
             return (v - epoch_ts) // _dt.timedelta(microseconds=1)
         return v
 
+    def record(r):
+        return {c: conv(k, r[c]) for c, k in zip(cols, kinds)}
+
+    return avro_schema, record
+
+
+def write_single_avro(df: DataFrame, dest_path: str) -> int:
+    """Avro twin of write_single_parquet (the spec's THIRD data format):
+    one executor-side task streams rows through the from-scratch Avro
+    container encoder (catalog/avro_io.write_container — block-buffered,
+    deflate) straight to ``dest_path``; the row count comes from the
+    container's block headers, a metadata-only pass. Single-JVM layout
+    note: the task writes to the shared local filesystem, the same
+    contract the parquet/ORC twins rely on; a cluster deployment points
+    dest at shared storage."""
+    avro_schema, record = _avro_encoding(df.schema)
+
     def _write(rows):
         from .avro_io import write_container
 
         write_container(
-            dest_path,
-            avro_schema,
-            (
-                {c: conv(k, r[c]) for c, k in zip(cols, kinds)}
-                for r in rows
-            ),
-            codec="deflate",
+            dest_path, avro_schema, (record(r) for r in rows), codec="deflate"
         )
 
     df.coalesce(1).foreachPartition(_write)
     from .avro_io import count_container_rows
 
     return count_container_rows(dest_path)
+
+
+def staged_avro(df: DataFrame, parts: list[str], stage: str) -> list[StagedSlice]:
+    """Write ``df`` as Avro data files under ``stage`` in ONE job and
+    return their slices: each task writes one file per partition tuple
+    it holds (``parts`` name the tuple and never enter the file), keeping
+    the task's row order within each file — one file per non-empty task
+    without parts. The slices come back through the job's own fold,
+    refused past the driver's materialization ceiling."""
+    import itertools
+    import uuid
+
+    from ..operators.util import MATERIALIZE_ROW_CEILING, MaterializeCeilingError
+
+    avro_schema, record = _avro_encoding(df.drop(*parts).schema)
+    if parts:
+        df = _runs(df, parts)
+
+    def _write(rows):
+        from .avro_io import write_container
+
+        for values, run in itertools.groupby(
+            rows, key=lambda r: tuple(r[p] for p in parts)
+        ):
+            path = os.path.join(stage, f"{uuid.uuid4().hex}.avro")
+            n = write_container(
+                path, avro_schema, (record(r) for r in run), codec="deflate"
+            )
+            yield [(path, n, values)]
+
+    def _capped(a: list, b: list) -> list:
+        a.extend(b)
+        if len(a) > MATERIALIZE_ROW_CEILING:
+            raise MaterializeCeilingError(
+                f"more than {MATERIALIZE_ROW_CEILING} staged Avro files"
+            )
+        return a
+
+    return [
+        StagedSlice(*f) for f in df.rdd.mapPartitions(_write).fold([], _capped)
+    ]
 
 
 def parquet_column_bounds(path: str) -> dict[str, tuple]:

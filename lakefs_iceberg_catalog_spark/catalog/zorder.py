@@ -1,218 +1,136 @@
-"""Morton (z-order) clustering, shared by Delta OPTIMIZE ZORDER BY and
-Iceberg rewrite_data(zorder_by=...) — one implementation so the two
-layouts' multi-dimensional clustering semantics cannot drift.
+"""Clustered rewrites: the one row distribution behind Delta OPTIMIZE
+ZORDER BY, Iceberg sorted and z-ordered ``rewrite_data``, and the
+VersionedCatalog's ``cluster_by``/``zorder_by`` writes — one
+implementation, so the layouts' clustering semantics cannot drift.
 
-The clustering quantizes each dimension into 8-bit bins over the frame's
-global min/max, interleaves the bits into a Morton key (pure integer
-codegen — the key never reaches the data pages), and splits the frame
-into <= target_files equal-count key ranges via approxQuantile edges.
-Rows where ANY dimension is NULL route into a dedicated lowest bucket
-(stock Delta clusters NULLs together the same way): a NULL dimension
-nulls the whole Morton key and the (lo, hi] range filters would silently
-drop those rows from a row-preserving rewrite.
+``clustered`` returns the rows range-distributed on (partition tuple,
+key) and sorted within each task. Every caller stages the result as ONE
+spanning frame of ``parquet_io.staged_slices``: each task writes one file
+per tuple it holds, so each file covers one tuple and one narrow key
+range, and manifest/footer min/max stay tight on every key column.
 
-Scale: one combined min/max/count pre-pass + one quantile pass + one
-bucket-occupancy pass + one clustered write per call — the occupancy
-pass replaced per-range limit(1) probe JOBS (target_files of them, each
-re-running the input scan) with a single partial-aggregating groupBy.
-Callers pass ``cleanup`` so the input is persisted across those passes
-and the range writes (every consumer then reads the hot cache instead
-of re-scanning the table per job) and unpersist once the rewrite
-commit is durable. Callers invoke it once per partition tuple (stock's
-OPTIMIZE unit is the partition), so total data cost stays one pass over
-live rows.
+The key is the sort columns themselves, or for a z-order a Morton key:
+each dimension quantized into 8-bit bins over the TUPLE'S OWN min/max,
+the bits interleaved (pure integer codegen — the key never reaches the
+data pages). A dimension that is all NULL within a tuple is an inert
+axis; a row with a NULL dimension gets key -1, so NULL-keyed rows
+cluster together at the low end of their tuple instead of dropping out.
+
+Cost: at most one grouped aggregate — a row count per tuple plus each
+z dimension's min/max, a bounded metadata-scale result joined back as a
+broadcast (literals when there are no tuple columns); it is skipped for
+a sort without tuple columns, which needs neither. The range exchange
+samples its bounds, and the caller's staging job is the one write.
+
+File counts: ``files`` per tuple is a target. Without tuple columns the
+range has ``files`` tasks, so at most ``files`` files. With ``k``
+non-empty tuples it has ``files * k`` tasks; a task boundary inside a
+tuple splits it, so a partitioned rewrite writes at most
+``files * k + k - 1`` files. ``files == 1`` ranges on the tuple alone:
+exactly one file per tuple.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-__all__ = ["morton_cluster_frames", "morton_cluster_files"]
+__all__ = ["clustered"]
+
+ZORDER_BITS = 8
+TUPLE_CEILING = 10_000  # non-empty partition tuples one rewrite may span
 
 
-def morton_cluster_files(
+def clustered(
     df: DataFrame,
-    zorder_by: list[str],
-    target_files: int,
-    stage_dir: str,
-    cleanup: list[DataFrame] | None = None,
-) -> tuple[list[str], int]:
-    """ONE-JOB Morton-clustered write: same binning/edges as
-    ``morton_cluster_frames``, but instead of returning per-range frames
-    for the caller to write one job each, every row gets its range index
-    and the whole frame is written in a single shuffle+write job —
-    ``repartition(n, _bucket)`` co-locates each range in one task,
-    ``sortWithinPartitions(_bucket, _zkey)`` orders it, and
-    ``partitionBy(_bucket)`` splits the task's output into exactly one
-    sorted parquet file per non-empty range (the same staging trick as
-    the range-sort rewrite and append_many). Returns (paths in range
-    order, total row count); per-file row counts come from the parquet
-    footers. Jobs: stats+count, quantile, one clustered write — versus
-    2 + 2·target_files for the per-frame path (measured 2.4 s of range
-    writes on a 150k-row rewrite collapsing to ~0.4 s).
+    by: list[str],
+    order: list[str],
+    files: int,
+    zorder: bool = False,
+) -> tuple[DataFrame, int | None]:
+    """``df`` distributed for a clustered write, and its row count.
 
-    Parquet-only by construction (the staging write is parquet); callers
-    with ORC/AVRO table formats use ``morton_cluster_frames``."""
-    import os
+    ``by`` names the partition-tuple columns (none for an unpartitioned
+    table), ``order`` the sort columns, or the z-order dimensions when
+    ``zorder``; ``files`` is the target file count per tuple. The row
+    count comes from the aggregate; it is None for a sort without tuple
+    columns, which runs none. An empty input comes back as it is, with
+    count 0."""
+    from ..operators.util import bounded_rows, local_df
 
-    import pyarrow.parquet as pq
-
-    from ..operators.util import bounded_rows
-
-    if cleanup is not None:
-        df = df.persist()
-        cleanup.append(df)
-    stats = bounded_rows(
-        df.agg(
-            *[F.min(c).alias(f"mn_{c}") for c in zorder_by],
-            *[F.max(c).alias(f"mx_{c}") for c in zorder_by],
-            F.count(F.lit(1)).alias("_cnt"),
+    by, order = list(by), list(order)
+    k, n_rows, helpers = 1, None, []
+    key = [F.col(c) for c in order]
+    if by or zorder:
+        dims = order if zorder else []
+        stats = bounded_rows(
+            df.groupBy(*by).agg(
+                F.count(F.lit(1)).alias("_rows"),
+                *[F.min(F.col(c).cast("double")).alias(f"_mn{i}")
+                  for i, c in enumerate(dims)],
+                *[F.max(F.col(c).cast("double")).alias(f"_mx{i}")
+                  for i, c in enumerate(dims)],
+            ),
+            TUPLE_CEILING,
         )
-    )[0]
-    n_rows = int(stats["_cnt"])
-    if n_rows == 0:
-        return [], 0
-    zdf = df.withColumn("_zkey", _zkey_expr(stats, zorder_by))
-    edges = sorted(
-        set(
-            zdf.approxQuantile(
+        n_rows = sum(int(r["_rows"]) for r in stats)
+        if not n_rows:
+            return df, 0
+        k = len(stats)
+        if zorder:
+            mns = [f"_mn{i}" for i in range(len(dims))]
+            mxs = [f"_mx{i}" for i in range(len(dims))]
+            if by:
+                tags = [f"_by{j}" for j in range(len(by))]
+                bounds = local_df(
+                    df.sparkSession,
+                    [tuple(r)[: len(by)] + tuple(r)[len(by) + 1:] for r in stats],
+                    T.StructType(
+                        [T.StructField(t, df.schema[c].dataType)
+                         for t, c in zip(tags, by)]
+                        + [T.StructField(m, T.DoubleType()) for m in mns + mxs]
+                    ),
+                )
+                df = df.join(
+                    F.broadcast(bounds),
+                    [F.col(c).eqNullSafe(F.col(t)) for c, t in zip(by, tags)],
+                )
+                helpers = tags + mns + mxs
+                mns, mxs = [F.col(m) for m in mns], [F.col(m) for m in mxs]
+            else:
+                mns, mxs = (
+                    [F.lit(stats[0][m]).cast("double") for m in ms]
+                    for ms in (mns, mxs)
+                )
+            df = df.withColumn(
                 "_zkey",
-                [i / target_files for i in range(1, target_files)],
-                0.001,
+                _morton(
+                    [_bin(F.col(c), mn, mx) for c, mn, mx in zip(dims, mns, mxs)]
+                ),
             )
-        )
-    )
-    b_idx = F.lit(0)
-    for e in edges:
-        b_idx = b_idx + (F.col("_zkey") > F.lit(e)).cast("int")
-    import tempfile
-
-    # unique per call: per-partition-tuple callers reuse one stage_dir,
-    # and an overwrite into a shared subdir would delete the PREVIOUS
-    # tuple's staged files before they are adopted
-    out_dir = tempfile.mkdtemp(prefix="zorder-clustered-", dir=stage_dir)
-    (
-        # repartitionByRange, not repartition: hash-partitioning by the
-        # range index can COLLIDE distinct buckets into one task (several
-        # ranges then serialize in one task while others sit empty); range
-        # partitioning gives each bucket its own task, and equal keys
-        # always land in one partition so the one-file-per-range assert
-        # below still holds (ADVICE r15 #3). The sampling pass reads the
-        # persisted input.
-        zdf.withColumn("_bucket", b_idx)
-        .repartitionByRange(len(edges) + 1, F.col("_bucket"))
-        .sortWithinPartitions("_bucket", "_zkey")
-        .drop("_zkey")
-        .write.partitionBy("_bucket")
-        .mode("overwrite")
-        .parquet(out_dir)
-    )
-    paths: list[str] = []
-    for b in range(len(edges) + 1):
-        bdir = os.path.join(out_dir, f"_bucket={b}")
-        if not os.path.isdir(bdir):
-            continue  # empty key range writes nothing
-        parts = [f for f in sorted(os.listdir(bdir)) if f.endswith(".parquet")]
-        assert len(parts) == 1, f"range {b} produced {len(parts)} files"
-        paths.append(os.path.join(bdir, parts[0]))
-    assert sum(int(pq.read_metadata(p).num_rows) for p in paths) == n_rows
-    return paths, n_rows
+            key, helpers = [F.col("_zkey")], helpers + ["_zkey"]
+    ranged = by if files == 1 and by else [*by, *key]
+    out = df.repartitionByRange(files * k, *ranged).sortWithinPartitions(*by, *key)
+    return out.drop(*helpers), n_rows
 
 
-def _zkey_expr(stats, zorder_by: list[str]):
-    """The Morton key column expression for one frame's min/max stats —
-    shared by the per-frame and one-job writers so the two layouts'
-    clustering semantics cannot drift."""
-    nbits = 8
-    bins = []
-    for c in zorder_by:
-        if stats[f"mn_{c}"] is None:  # all-NULL dimension: inert axis
-            bins.append(F.lit(0).cast("long"))
-            continue
-        mn = float(stats[f"mn_{c}"])
-        span = float(stats[f"mx_{c}"]) - mn
-        scaled = (F.col(c).cast("double") - F.lit(mn)) * F.lit(
-            (2**nbits - 1) / span if span > 0 else 0.0
-        )
-        bins.append(F.floor(scaled).cast("long"))
+def _bin(x: Column, mn: Column, mx: Column) -> Column:
+    """``x``'s 8-bit bin over [mn, mx]; 0 on an all-NULL axis (NULL mn),
+    NULL for a NULL ``x``."""
+    span = mx - mn
+    scaled = (x.cast("double") - mn) * F.when(
+        span > 0, (2**ZORDER_BITS - 1) / span
+    ).otherwise(F.lit(0.0))
+    return F.when(mn.isNull(), F.lit(0)).otherwise(F.floor(scaled)).cast("long")
+
+
+def _morton(bins: list[Column]) -> Column:
+    """The bit-interleaved key of ``bins``; -1 when any bin is NULL."""
     zkey = F.lit(0).cast("long")
-    for bit in range(nbits):
+    for bit in range(ZORDER_BITS):
         for ci, bn in enumerate(bins):
-            pos = bit * len(bins) + ci
             zkey = zkey + F.shiftleft(
-                F.shiftright(bn, bit).bitwiseAND(F.lit(1)), pos
+                F.shiftright(bn, bit).bitwiseAND(F.lit(1)), bit * len(bins) + ci
             )
     return F.coalesce(zkey, F.lit(-1).cast("long"))
-
-
-def morton_cluster_frames(
-    df: DataFrame,
-    zorder_by: list[str],
-    target_files: int,
-    cleanup: list[DataFrame] | None = None,
-) -> tuple[list[DataFrame], int]:
-    """Morton-cluster one frame into <= ``target_files`` range frames
-    (each already coalesced to one task and sorted by the key, ready for
-    a single-file write); returns ``(frames, row count)``. Bins quantize
-    per-FRAME min/max — call once for an unpartitioned table, once per
-    partition tuple for a partitioned one.
-
-    When ``cleanup`` is passed, ``df`` is persisted for the lifetime of
-    the returned frames (the engine's own stats/quantile/occupancy
-    passes and the caller's range writes all read the one cached copy)
-    and the handle is appended to ``cleanup`` — the caller unpersists
-    after its rewrite commit. Without it every consumer job recomputes
-    ``df`` from its lineage."""
-    from ..operators.util import bounded_rows
-
-    if cleanup is not None:
-        df = df.persist()
-        cleanup.append(df)
-    stats = bounded_rows(
-        df.agg(
-            *[F.min(c).alias(f"mn_{c}") for c in zorder_by],
-            *[F.max(c).alias(f"mx_{c}") for c in zorder_by],
-            F.count(F.lit(1)).alias("_cnt"),
-        )
-    )[0]
-    n_rows = int(stats["_cnt"])
-    if n_rows == 0:
-        return [], 0
-    zdf = df.withColumn("_zkey", _zkey_expr(stats, zorder_by))
-    edges = sorted(
-        set(
-            zdf.approxQuantile(
-                "_zkey",
-                [i / target_files for i in range(1, target_files)],
-                0.001,
-            )
-        )
-    )
-    # ONE occupancy pass decides which key ranges are non-empty (the old
-    # shape probed each range with its own limit(1) job): a row's range
-    # index is the number of edges strictly below its key.
-    b_idx = F.lit(0)
-    for e in edges:
-        b_idx = b_idx + (F.col("_zkey") > F.lit(e)).cast("int")
-    occupied = {
-        int(r["b"])
-        for r in bounded_rows(
-            zdf.select(b_idx.alias("b")).groupBy("b").agg(F.count(F.lit(1))),
-            10_000,
-        )
-    }
-    out = []
-    lo = None
-    for i, e in enumerate(edges + [None]):
-        part = zdf
-        if lo is not None:
-            part = part.filter(F.col("_zkey") > F.lit(lo))
-        if e is not None:
-            part = part.filter(F.col("_zkey") <= F.lit(e))
-        if i in occupied:
-            out.append(
-                part.coalesce(1).sortWithinPartitions("_zkey").drop("_zkey")
-            )
-        lo = e
-    return out, n_rows

@@ -2797,14 +2797,15 @@ def maint_delta_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE ... ZORDER BY on the real Delta layout: four interleaved
     commits leave every file spanning the full value space (stats
     skipping provably inert on both dimensions — asserted), then a
-    Morton-interleave optimize (8-bit bins over global min/max,
-    equal-count key ranges, dataChange=false commit) re-clusters so the
-    SAME stats_filter opens strictly fewer files on EITHER dimension
+    Morton-interleave optimize (8-bit bins over the table's min/max, a
+    range exchange on the key, dataChange=false commit) re-clusters so
+    the SAME stats_filter opens strictly fewer files on EITHER dimension
     (asserted) — multi-dimensional skipping linear clustering can't give.
 
-    Scale: one distributed scan+write plus a single min/max pre-pass;
-    the Morton key is integer codegen and never reaches the data pages;
-    all skipping afterwards is log-fold metadata work."""
+    Scale: one bounded min/max/count aggregate, the range exchange's
+    sampling and ONE staging write (zorder.clustered); the Morton key is
+    integer codegen and never reaches the data pages; all skipping
+    afterwards is log-fold metadata work."""
     from ..catalog.delta_format import DeltaTableWriter, scan_delta_table
 
     o = table(spark, sf_dir, "orders").select(
@@ -2844,8 +2845,9 @@ def maint_iceberg_sort_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     order lands in metadata's sort-orders.
 
     Scale: clustering is WHY bounds skipping works at 100 TB — the
-    rewrite is one distributed range-partitioned sort-and-write per
-    partition, and every later selective scan pays only boundary files."""
+    rewrite is one distributed range-partitioned sort feeding ONE staging
+    write for every partition at once (zorder.clustered), and every later
+    selective scan pays only boundary files."""
     from ..catalog.iceberg_format import IcebergTableWriter, scan_iceberg_table
 
     n = table(spark, sf_dir, "nation")
@@ -2878,16 +2880,16 @@ def maint_iceberg_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort): four interleaved appends leave every file spanning the full
     value space on BOTH probe dimensions (stats skipping provably inert
     — asserted on each), then ``rewrite_data(zorder_by=[o_custkey,
-    o_totalprice])`` Morton-clusters through the SHARED z-order engine
-    (zorder.py) under a replace snapshot, after which the SAME
+    o_totalprice])`` Morton-clusters through the SHARED clustering
+    helper (zorder.clustered) under a replace snapshot, after which the SAME
     stats_filter opens strictly fewer files on EITHER dimension
     (asserted on each) and the visible rows are unchanged — the
     standard answer to two-column probe workloads.
 
-    Scale: one min/max pre-pass + one quantile pass + one clustered
-    distributed write; the Morton key is integer codegen and never
-    reaches the data pages; all skipping afterwards is manifest-bounds
-    metadata work."""
+    Scale: one bounded min/max/count aggregate + the range exchange's
+    sampling + ONE staging write; the Morton key is integer codegen and
+    never reaches the data pages; all skipping afterwards is
+    manifest-bounds metadata work."""
     from ..catalog.iceberg_format import IcebergTableWriter, scan_iceberg_table
 
     o = table(spark, sf_dir, "orders").select(

@@ -140,8 +140,10 @@ def test_collect_sites_are_ratcheted():
         # round 12: CDC-apply's driver-side key collection became a
         # distributed equality-delete file write (VERDICT r11 #7);
         # round 16: the position-delete covered-files collect now rides
-        # the delete-file WRITE as an observed collect_set (3 → 2)
-        "catalog/catalog.py": 2,
+        # the delete-file WRITE as an observed collect_set (3 → 2); the
+        # z-order bounds collect became zorder.clustered's bounded
+        # aggregate (2 → 1)
+        "catalog/catalog.py": 1,
         "catalog/parquet_io.py": 1,  # distinct_singleton_row limit(2) probe
         "operators/advanced.py": 1,
         "operators/pipeline.py": 5,

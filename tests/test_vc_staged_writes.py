@@ -233,3 +233,26 @@ def test_iceberg_merge_upsert_mor_empty_source_commits_nothing(
     w.merge_upsert_mor(rows.filter("n_nationkey = 1"), ["n_nationkey"])
     assert len(read_table_metadata(d)["snapshots"]) == n_snaps + 1
     assert sorted(r["n_nationkey"] for r in scan_iceberg_table(spark, d).collect()) == [1, 2]
+
+
+@pytest.mark.parametrize(
+    "op,value,n",
+    [("=", float("nan"), 1), (">", 5.0, 1), (">=", 5.0, 1), ("<", float("nan"), 2)],
+)
+@pytest.mark.parametrize("partition_by", [None, ["x"]])
+def test_nan_pruning_matches_spark_order(cat, spark, partition_by, op, value, n):
+    """File pruning compares under Spark's order of doubles, where NaN is
+    larger than every other value and equal to itself: ``scan_pruned``
+    keeps the rows ``scan().filter`` returns, on footer bounds and on
+    NaN partition values alike."""
+    t = "repo.main.db.nan"
+    df = spark.createDataFrame(
+        [(0, 1.0), (1, 3.0), (2, float("nan"))], "id int, x double"
+    )
+    cat.create_table_as(t, df, partition_by=partition_by)
+    x, v = F.col("x"), F.lit(value)
+    cond = {"=": x == v, ">": x > v, ">=": x >= v, "<": x < v}[op]
+    want = sorted(r["id"] for r in cat.scan(t).filter(cond).collect())
+    got = sorted(r["id"] for r in cat.scan_pruned(t, "x", op, value).collect())
+    assert len(want) == n
+    assert got == want

@@ -29,9 +29,10 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    for name in names:
+    for i, name in enumerate(names):
         release_scoped()
-        gf, ga = f"jc-fixture-{name}", f"jc-action-{name}"
+        # one group per run: a key listed twice reports each run, not the sum
+        gf, ga = f"jc-fixture-{name}-{i}", f"jc-action-{name}-{i}"
         t0 = time.perf_counter()
         sc.setJobGroup(gf, "fixture")
         try:
